@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, DomElement, DomText, Tokenizer}
+import graft.html.{TagRules, Tokenizer}
 import scala.collection.mutable.ArrayBuffer
 
 /** A contiguous text block with the shallow features the classifier needs.
@@ -19,7 +19,7 @@ final case class Block(
 }
 
 /** Block segmentation + normalization (ops E2b/E3 in SURVEY.md §2.3):
-  * flatten the DOM into a block array at block-level boundaries, with
+  * cut the token events into a block array at block-level boundaries, with
   * whitespace canonicalization (ASCII ws runs → single space, trimmed) and
   * entity decoding. Normalization policy is FROZEN — golden files depend
   * on it byte-for-byte (SURVEY.md §4.3).
@@ -27,19 +27,23 @@ final case class Block(
 object Blocks {
 
   /** Subtrees that never contribute text (head & friends). */
-  private val Skip = Set(
+  private[extract] val Skip = Set(
     "head", "script", "style", "noscript", "template", "iframe",
     "svg", "math", "object", "select", "option", "button", "datalist")
 
   /** Elements that open/close a block boundary. */
-  private val BlockTags = Set(
+  private[extract] val BlockTags = Set(
     "p", "div", "section", "article", "aside", "header", "footer", "nav",
     "main", "ul", "ol", "li", "h1", "h2", "h3", "h4", "h5", "h6",
     "table", "thead", "tbody", "tfoot", "tr", "td", "th", "caption",
     "blockquote", "pre", "form", "figure", "figcaption", "dl", "dd", "dt",
     "hr", "address", "fieldset", "legend", "details", "summary", "body", "html")
 
-  private final class Builder {
+  /** Text normalization + block accumulation, shared with the test-scope
+    * tree reference so both builders agree on text by construction and
+    * differ only in how they find block boundaries.
+    */
+  private[extract] final class Builder {
     val out = ArrayBuffer.empty[Block]
     private val sb = new java.lang.StringBuilder(256)
     private var lastWasSpace = true
@@ -90,12 +94,13 @@ object Blocks {
   }
 
   /** Single-pass block segmentation as a streaming token handler — the
-    * hot path. Replicates Dom.build + [[fromDom]] exactly (same stack
-    * discipline, same flush points, br-run semantics preserved across end
-    * tags); BlocksFusionSpec differential-tests the two on golden cases
-    * and arbitrary fuzz input.
+    * hot path. Replicates a tree build followed by a tree walk exactly
+    * (same stack discipline, same flush points, br-run semantics preserved
+    * across end tags); BlocksFusionSpec differential-tests it against the
+    * test-scope tree reference (`BlocksReference`) on golden cases and
+    * arbitrary fuzz input.
     */
-  private final class BlockHandler extends graft.html.Tokenizer.TokenHandler {
+  private final class BlockHandler extends Tokenizer.TokenHandler {
     private val b = new Builder
     // stack of open tag names; parallel per-frame flags packed as bits:
     // bit0 = isAnchor, bit1 = isSkip, bit2 = isBlock
@@ -131,11 +136,11 @@ object Blocks {
         }
       } else {
         brRun = 0
-        // implicit-close tolerance — same rule set as Dom.build
-        while (tags.nonEmpty && Dom.impliesCloseTag(tags(tags.length - 1), name)) pop()
+        // implicit-close tolerance — same rule set as the tree reference
+        while (tags.nonEmpty && TagRules.impliesClose(tags(tags.length - 1), name)) pop()
         val f = flagsOf(name)
         if ((f & 4) != 0 && skipDepth == 0) b.flush()
-        if (!selfClosing && !Dom.isVoid(name)) {
+        if (!selfClosing && !TagRules.isVoid(name)) {
           tags += name
           flags += f
           if ((f & 1) != 0) anchorDepth += 1
@@ -148,7 +153,7 @@ object Blocks {
     }
 
     override def onEndTag(name: String): Unit = {
-      // NO brRun reset: the DOM walk never sees end events, so a br run
+      // NO brRun reset: the tree walk never sees end events, so a br run
       // straddling an end tag still counts (differential-tested)
       var idx = tags.length - 1
       while (idx >= 0 && tags(idx) != name) idx -= 1
@@ -169,55 +174,7 @@ object Blocks {
     */
   def fromHtml(s: String): Vector[Block] = {
     val h = new BlockHandler
-    graft.html.Tokenizer.scan(s, h)
+    Tokenizer.scan(s, h)
     h.finish()
-  }
-
-  /** Token-stream form of the same state machine (used by differential
-    * tests to compare against [[fromDom]] on identical token input).
-    */
-  def fromTokens(tokens: Seq[graft.html.Token]): Vector[Block] = {
-    import graft.html.{StartTag, EndTag, TextRun}
-    val h = new BlockHandler
-    tokens.foreach {
-      case TextRun(s)               => h.onText(s)
-      case StartTag(name, atts, sc) => h.onStartTag(name, atts, sc)
-      case EndTag(name)             => h.onEndTag(name)
-    }
-    h.finish()
-  }
-
-  /** Flatten a DOM into classified-ready blocks, document order. */
-  def fromDom(root: DomElement): Vector[Block] = {
-    val b = new Builder
-    var brRun = 0
-
-    def walk(el: DomElement, inAnchor: Boolean): Unit = {
-      el.children.foreach {
-        case DomText(s) =>
-          brRun = 0
-          b.append(s, inAnchor, el.depth)
-        case child: DomElement =>
-          val tag = child.tag
-          if (tag == "br") {
-            brRun += 1
-            if (brRun >= 2) b.flush() else b.softBreak()
-          } else if (Skip.contains(tag)) {
-            brRun = 0
-          } else if (BlockTags.contains(tag)) {
-            brRun = 0
-            b.flush()
-            walk(child, inAnchor)
-            b.flush()
-          } else {
-            brRun = 0
-            walk(child, inAnchor || tag == "a")
-          }
-      }
-    }
-
-    walk(root, inAnchor = false)
-    b.flush()
-    b.out.toVector
   }
 }

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Tokenizer}
+import graft.html.Tokenizer
 import graft.model.{BadRow, ExtractedDoc}
 import scala.util.control.NonFatal
 
@@ -30,8 +30,9 @@ object Extractor {
           Right(ExtractedDoc(url, "", Nil))
         case Some(s) =>
           val spans = Spans.extract(html) // may throw PayloadException → "payload"
-          // fully-fused pass: string → blocks (≡ tokenize ∘ Dom.build ∘
-          // Blocks.fromDom, differential-tested in BlocksFusionSpec)
+          // fully-fused pass: string → blocks (≡ DOM build + tree walk of
+          // the test-scope BlocksReference, differential-tested in
+          // BlocksFusionSpec)
           val blocks = Blocks.fromHtml(s)
           val text = Classifier.extractText(blocks, lang) // "" for zero kept blocks (E5)
           Right(ExtractedDoc(url, text, spans))

@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
   * pipeline: the per-page anchor inventory that feeds host graphs,
   * PageRank-style quality signals, and crawl-frontier scoring.
   *
-  * Single streaming pass over the tokenizer events (no DOM, no Token
+  * Single streaming pass over the Tokenizer.scan events (no DOM, no token
   * allocation), same tolerance contract as the extraction path (E1,
   * /root/reference/src/ocr_engine.py:54-56): undecodable bytes yield an
   * empty link list, never an exception.
@@ -15,7 +15,7 @@ import scala.collection.mutable.ArrayBuffer
 object Links {
 
   /** `href` values of `<a>` tags in document order (entity-decoded, as
-    * the tokenizer hands them out); Nil for null/undecodable bytes.
+    * the Tokenizer hands them out); Nil for null/undecodable bytes.
     */
   def outlinks(html: Array[Byte]): Seq[String] =
     Tokenizer.decode(html) match {

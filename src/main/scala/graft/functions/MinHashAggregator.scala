@@ -19,7 +19,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * aggregation's distribution and the exchange is ELIDED — the typed
   * groupByKey form appended a serialized key column Catalyst cannot
   * equate with doc_id and therefore always paid a corpus-wide shuffle of
-  * the partial buffers.
+  * the partial buffers. Every Dedup call site today aggregates a cached
+  * shingle table, whose InMemoryRelation boundary hides that
+  * partitioning, so there the exchange remains.
   */
 object MinHashAggregator extends Aggregator[String, Array[Long], Seq[Long]] {
 

@@ -2,15 +2,10 @@ package graft.html
 
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 import java.nio.ByteBuffer
-import scala.collection.immutable.ArraySeq
 
-/** HTML token stream. */
-sealed trait Token
-final case class StartTag(name: String, attrs: List[(String, String)], selfClosing: Boolean) extends Token
-final case class EndTag(name: String) extends Token
-final case class TextRun(s: String) extends Token
-
-/** Byte-level, HTML5-tolerant streaming tokenizer.
+/** Byte-level, HTML5-tolerant streaming scanner: charset sniff + decode,
+  * then one pass that hands token events to a [[Tokenizer.TokenHandler]]
+  * (no token objects are built).
   *
   * Totality contract mirrors the reference's tolerant decode
   * (/root/reference/src/ocr_engine.py:51-56): NEVER throws on arbitrary
@@ -188,7 +183,7 @@ object Tokenizer {
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f'
 
   /** Streaming consumer of the token events — the allocation-free hot
-    * path (no Token objects, and attr lists are skipped unless asked for).
+    * path (no token objects, and attr lists are skipped unless asked for).
     */
   trait TokenHandler {
     def onText(s: String): Unit
@@ -196,19 +191,6 @@ object Tokenizer {
     def onEndTag(name: String): Unit
     /** build attr lists? false ⇒ onStartTag receives Nil (cheaper) */
     def wantAttrs: Boolean = false
-  }
-
-  /** Tokenize a decoded document. Single pass; never throws. */
-  def tokenize(s: String): ArraySeq[Token] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Token]
-    scan(s, new TokenHandler {
-      override def onText(t: String): Unit = out += TextRun(t)
-      override def onStartTag(name: String, attrs: List[(String, String)], sc: Boolean): Unit =
-        out += StartTag(name, attrs, sc)
-      override def onEndTag(name: String): Unit = out += EndTag(name)
-      override def wantAttrs: Boolean = true
-    })
-    ArraySeq.unsafeWrapArray(out.toArray)
   }
 
   /** Single-pass event-driven tokenization; never throws. */
@@ -270,7 +252,7 @@ object Tokenizer {
     if (gt < 0) ("", n) else (sb.toString, gt + 1)
   }
 
-  /** Parse a start tag with attributes; emit StartTag (plus swallow raw
+  /** Parse a start tag with attributes; emit onStartTag (plus swallow raw
     * content for script/style/title/textarea). Returns index after the tag
     * (and after raw content for raw elements). Attr lists are built only
     * when the handler asks (hot path skips the allocation + entity decode).

@@ -125,65 +125,67 @@ object ExtractJob {
   private def runLocked(spark: SparkSession, pages: DataFrame, cfg: JobConfig): RunReport = {
     val listener = new GraftMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
+    // every exit — early return, normal end, or a throw from the write,
+    // lineage agg or commit — unregisters the listener
+    try {
+      val t0 = System.nanoTime()
 
-    val committed = Lineage.committedPids(cfg.outputDir)
-    val runPids: Seq[Int] = (0 until cfg.numPids)
-      .filterNot(committed)
-      .filter(p => cfg.limitPids.forall(_.contains(p)))
+      val committed = Lineage.committedPids(cfg.outputDir)
+      val runPids: Seq[Int] = (0 until cfg.numPids)
+        .filterNot(committed)
+        .filter(p => cfg.limitPids.forall(_.contains(p)))
 
-    if (runPids.isEmpty) {
-      spark.sparkContext.removeSparkListener(listener)
-      return RunReport(Lineage.readManifest(cfg.outputDir)._1, 0, 0, 0, 0, 0, 0,
-        (System.nanoTime() - t0) / 1e9)
-    }
-
-    val withPid = pages
-      .withColumn("pid", pidCol(cfg.numPids))
-      .where(col("pid").isin(runPids: _*))
-
-    val extracted = extractColumns(withPid)
-      .repartition(cfg.numPids, col("pid"))
-
-    extracted.write.mode(SaveMode.Overwrite).partitionBy("pid")
-      // scoped to THIS write (not session config): only the pids present
-      // in the batch are overwritten — per-pid idempotent rerun — without
-      // silently changing Overwrite semantics for other writes on the
-      // caller's shared session
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"${cfg.outputDir}/docs")
-
-    // lineage + metrics from the WRITTEN output (column-pruned read of the
-    // small result table — never a second pass over the raw html)
-    val written = docs(spark, cfg.outputDir).where(col("pid").isin(runPids: _*))
-    val agg = lineageAgg(written)
-
-    val byPid = agg.map(r => r.getInt(0) -> r).toMap
-    import spark.implicits._
-    val lineageRows = runPids.map { p =>
-      byPid.get(p) match {
-        case Some(r) => (p, r.getLong(1), r.getLong(2), r.getLong(3).toString)
-        case None    => (p, 0L, 0L, "0")
+      if (runPids.isEmpty) {
+        return RunReport(Lineage.readManifest(cfg.outputDir)._1, 0, 0, 0, 0, 0, 0,
+          (System.nanoTime() - t0) / 1e9)
       }
-    }.toDF("partition_id", "rows", "bytes", "digest")
-    Lineage.commit(spark, cfg.outputDir, lineageRows)
-    val snap = Lineage.readManifest(cfg.outputDir)._1
 
-    val report = RunReport(
-      snapshot = snap,
-      pidsProcessed = runPids.size,
-      docsOk = agg.map(_.getLong(4)).sum,
-      failedValidation = agg.map(_.getLong(5)).sum,
-      failedPayload = agg.map(_.getLong(6)).sum,
-      failedUnexpected = agg.map(_.getLong(7)).sum,
-      bytesIn = agg.map(_.getLong(2)).sum,
-      wallSec = (System.nanoTime() - t0) / 1e9)
+      val withPid = pages
+        .withColumn("pid", pidCol(cfg.numPids))
+        .where(col("pid").isin(runPids: _*))
 
-    val mdir = Paths.get(cfg.outputDir, "_metrics")
-    Files.createDirectories(mdir)
-    Files.write(mdir.resolve(s"run-$snap.json"),
-      report.toJson(listener.snapshot).getBytes("UTF-8"))
-    spark.sparkContext.removeSparkListener(listener)
-    report
+      val extracted = extractColumns(withPid)
+        .repartition(cfg.numPids, col("pid"))
+
+      extracted.write.mode(SaveMode.Overwrite).partitionBy("pid")
+        // scoped to THIS write (not session config): only the pids present
+        // in the batch are overwritten — per-pid idempotent rerun — without
+        // silently changing Overwrite semantics for other writes on the
+        // caller's shared session
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(s"${cfg.outputDir}/docs")
+
+      // lineage + metrics from the WRITTEN output (column-pruned read of the
+      // small result table — never a second pass over the raw html)
+      val written = docs(spark, cfg.outputDir).where(col("pid").isin(runPids: _*))
+      val agg = lineageAgg(written)
+
+      val byPid = agg.map(r => r.getInt(0) -> r).toMap
+      import spark.implicits._
+      val lineageRows = runPids.map { p =>
+        byPid.get(p) match {
+          case Some(r) => (p, r.getLong(1), r.getLong(2), r.getLong(3).toString)
+          case None    => (p, 0L, 0L, "0")
+        }
+      }.toDF("partition_id", "rows", "bytes", "digest")
+      Lineage.commit(spark, cfg.outputDir, lineageRows)
+      val snap = Lineage.readManifest(cfg.outputDir)._1
+
+      val report = RunReport(
+        snapshot = snap,
+        pidsProcessed = runPids.size,
+        docsOk = agg.map(_.getLong(4)).sum,
+        failedValidation = agg.map(_.getLong(5)).sum,
+        failedPayload = agg.map(_.getLong(6)).sum,
+        failedUnexpected = agg.map(_.getLong(7)).sum,
+        bytesIn = agg.map(_.getLong(2)).sum,
+        wallSec = (System.nanoTime() - t0) / 1e9)
+
+      val mdir = Paths.get(cfg.outputDir, "_metrics")
+      Files.createDirectories(mdir)
+      Files.write(mdir.resolve(s"run-$snap.json"),
+        report.toJson(listener.snapshot).getBytes("UTF-8"))
+      report
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -81,24 +81,24 @@ object Dedup {
 
   /** Relational forms of the typed hash aggregators: `groupBy(doc_id)`
     * instead of `groupByKey(_._1)` so Catalyst can see the grouping key
-    * IS the column the Scans.spread layout already hash-partitions on —
-    * the aggregation's exchange is elided outright (guide §2.4 "two
-    * operations keyed the same way share one exchange"). The typed path
-    * grouped on an appended serialized key Catalyst cannot equate with
-    * doc_id, so every signature pass re-shuffled one partial buffer per
-    * doc (512 B × corpus for MinHash — ~650 MB at the 1.28M-doc ladder
-    * point). Same aggregator objects, same per-row arithmetic →
-    * bit-identical signatures.
+    * IS the column the Scans.spread layout already hash-partitions on.
+    * The exchange elision this enables fires only on the uncached
+    * SimHash path: every MinHash call site reads a cached shingle table,
+    * and the InMemoryRelation boundary drops the child's reported
+    * partitioning, so the MinHash aggregation still shuffles one partial
+    * buffer per doc (OPTIMIZATION_r06.md). Same aggregator objects, same
+    * per-row arithmetic → bit-identical signatures.
     */
   private lazy val minhashUdaf = udaf(graft.functions.MinHashAggregator)
   private lazy val simhashUdaf = udaf(graft.functions.SimHashAggregator)
 
   /** (doc_id, band, band_hash) MinHash band table — the LSH index rows.
     * One string hash per shingle (MinHashAggregator), 16 bands × 4
-    * rows; map-side combining, zero exchanges when the shingle table is
-    * already doc_id-partitioned (the spread layout).
+    * rows; map-side combining, then one exchange of the per-doc partial
+    * buffers: every caller passes a cached shingle table, whose
+    * InMemoryRelation boundary hides its doc_id partitioning.
     */
-  private def minhashBands(s: SparkSession, sh: DataFrame): DataFrame = {
+  private def minhashBands(sh: DataFrame): DataFrame = {
     val mh = sh.groupBy(col("doc_id"))
       .agg(minhashUdaf(col("shingle")).as("mh"))
     mh.select(col("doc_id"), posexplode(array((0 until Bands).map { b =>
@@ -227,14 +227,14 @@ object Dedup {
     * join — the 10^12-scale candidate generator shared by d_minhash_lsh
     * and d_components: shuffles only (band, hash) keys, never shingles.
     */
-  private def lshCandidates(s: SparkSession, sh: DataFrame): DataFrame = {
+  private def lshCandidates(sh: DataFrame): DataFrame = {
     // cached: BOTH sides of the band-bucket self-join read the band
     // table, so the MinHash aggregation (the heavy pass) previously ran
     // twice per action; the band table is Bands rows/doc of 20 bytes —
     // strictly smaller than the shingle table already cached alongside
     // it (released at the harness query boundary like every CacheScope
     // entry)
-    val bands = graft.util.CacheScope.cached(minhashBands(s, sh))
+    val bands = graft.util.CacheScope.cached(minhashBands(sh))
     val a = bands.select(col("band"), col("bh"), col("doc_id").as("a_id"))
     val b = bands.select(col("band"), col("bh"), col("doc_id").as("b_id"))
     a.join(b, Seq("band", "bh"))
@@ -248,7 +248,7 @@ object Dedup {
     */
   private[graft] def componentEdges(s: SparkSession, dir: String): DataFrame = {
     val sh = graft.util.CacheScope.cached(shingles(docs(s, dir)))
-    verifiedPairs(sh, Some(lshCandidates(s, sh)))
+    verifiedPairs(sh, Some(lshCandidates(sh)))
       .select(col("a_id"), col("b_id"))
   }
 
@@ -265,14 +265,14 @@ object Dedup {
     */
   def buildBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit = {
     val sh = shingles(documents).cache()
-    minhashBands(s, sh).write.mode("overwrite").parquet(s"$indexDir/bands")
+    minhashBands(sh).write.mode("overwrite").parquet(s"$indexDir/bands")
     sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
     sh.unpersist()
   }
 
   def appendBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit = {
     val sh = shingles(documents).cache()
-    minhashBands(s, sh).write.mode("append").parquet(s"$indexDir/bands")
+    minhashBands(sh).write.mode("append").parquet(s"$indexDir/bands")
     sh.write.mode("append").parquet(s"$indexDir/shingles")
     sh.unpersist()
   }
@@ -292,7 +292,7 @@ object Dedup {
     // cached: bNew feeds the probe side AND the union side of the
     // candidate join — without the cache the batch MinHash aggregation
     // runs twice per action
-    val bNew = graft.util.CacheScope.cached(minhashBands(s, shNew))
+    val bNew = graft.util.CacheScope.cached(minhashBands(shNew))
     val stored = s.read.parquet(s"$indexDir/bands")
     val cands = bNew.select(col("band"), col("bh"), col("doc_id").as("x_id"))
       .join(stored.union(bNew).select(col("band"), col("bh"), col("doc_id").as("y_id")),
@@ -336,7 +336,7 @@ object Dedup {
     // d_jaccard_pairs (same oracle): proves recall.
     "d_minhash_lsh" -> ((s, dir) => {
       val sh = graft.util.CacheScope.cached(shingles(docs(s, dir)))
-      verifiedPairs(sh, Some(lshCandidates(s, sh)))
+      verifiedPairs(sh, Some(lshCandidates(sh)))
     }),
 
     // INCREMENTAL dedup — the continuous-crawl shape, run through the

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** The extraction engine exposed as oracle-checked queries: the page
   * corpus is derived deterministically from `documents` (frozen doc_id
-  * routing — fixtures.Corpus), the engine extracts it for real (tokenizer
-  * → DOM → classifier → spans), and DuckDB predicts every output row from
+  * routing — fixtures.Corpus), the engine extracts it for real (decode
+  * → fused blocks → classifier → spans), and DuckDB predicts every output row from
   * the generation rule. This is the strongest external check available:
   * the oracle never sees our extraction code, only the round-trip
   * contract.
@@ -241,7 +241,7 @@ object Extraction {
     }),
 
     // outlink extraction — per-page anchors in document order, the edge
-    // list of the web graph. Typed flatMap over the tokenizer events
+    // list of the web graph. Typed flatMap over the Tokenizer events
     // (narrow, zero-shuffle at any corpus size); pos is the anchor's
     // document-order index. The oracle predicts every href from the page
     // template: boilerplate anchors are a frozen function of the variant.
@@ -495,7 +495,7 @@ object Extraction {
   /** Per-variant anchor href lists, probed from the REAL page builder by
     * an independent trivial parser (template anchors are always
     * double-quoted with href first, so the regex is exact on the fixture
-    * grammar — it shares no code with the tokenizer under test). Probing
+    * grammar — it shares no code with the Tokenizer under test). Probing
     * keeps the oracle honest under template edits, like [[spanConsts]].
     */
   private lazy val variantHrefs: IndexedSeq[Seq[String]] = (0 to 3).map { v =>

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.GraftFunctions
 import graft.pipeline.ExtractJob
+import graft.util.Staging.deleteRec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,15 +17,6 @@ import org.apache.spark.sql.types._
   * semantics used by the tests.
   */
 object StreamingExtract {
-
-  /** best-effort recursive delete of a staged temp directory */
-  private def deleteRec(d: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(d)) {
-      val s = java.nio.file.Files.walk(d)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
-    }
 
   /** The file streaming source requires a DIRECTORY; testdata tables are
     * single parquet files — stage such a file into a temp dir for the

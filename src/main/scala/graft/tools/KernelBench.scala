@@ -4,7 +4,7 @@ import graft.extract.Extractor
 import graft.fixtures.PageHtml
 
 /** Dev micro-benchmark: single-threaded extraction kernel throughput,
-  * no Spark — isolates the per-document cost of tokenizer → DOM →
+  * no Spark — isolates the per-document cost of decode → fused blocks →
   * classifier → spans from scheduling/GC/scan effects.
   */
 object KernelBench {
@@ -17,7 +17,7 @@ object KernelBench {
     val docs: Array[(String, Array[Byte])] = (0 until nDocs).map { i =>
       // giant mode: ~10 MB pages (the reference pins a 1 MiB blob case,
       // test/test_s3_client.py:85-103 — crawls contain larger) — measures
-      // the tokenizer/classifier at multi-MB single-document size
+      // the scan/classifier at multi-MB single-document size
       val n = if (giant) 1600000 else 40 + i % 120
       val text = Array.tabulate(n)(j => words((i + j * 7) % words.length)).mkString(" ")
       (s"https://h${i % 7}.example.org/doc/$i",

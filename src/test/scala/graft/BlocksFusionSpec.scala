@@ -1,28 +1,20 @@
 package graft
 
-import graft.extract.Blocks
+import graft.extract.{Blocks, BlocksReference}
 import graft.fixtures.{GoldenCases, PageHtml}
-import graft.html.{Dom, Tokenizer}
+import graft.html.Tokenizer
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Differential gate for the fused hot path: Blocks.fromTokens must be
-  * observationally identical to Dom.build ∘ Blocks.fromDom — on the
-  * golden corpus, the fixture templates, and arbitrary fuzzed markup.
+/** Differential gate for the fused hot path: Blocks.fromHtml must be
+  * observationally identical to the test-scope tree reference
+  * (BlocksReference: DOM build, then tree walk) — on the golden corpus,
+  * the fixture templates, and arbitrary fuzzed markup.
   */
 class BlocksFusionSpec extends AnyFunSuite {
 
-  private def both(s: String) = {
-    val toks = Tokenizer.tokenize(s)
-    val tree = Blocks.fromDom(Dom.build(toks))
-    (Blocks.fromTokens(toks), Blocks.fromHtml(s), tree)
-  }
-
-  private def assertSame(s: String): Unit = {
-    val (fromToks, fused, tree) = both(s)
-    assert(fromToks == tree, s"fromTokens != tree for input: ${s.take(200)}")
-    assert(fused == tree, s"fromHtml != tree for input: ${s.take(200)}")
-  }
+  private def assertSame(s: String): Unit =
+    assert(Blocks.fromHtml(s) == BlocksReference.blocks(s), s"fromHtml != tree for input: ${s.take(200)}")
 
   test("identical on all golden cases and fixture variants") {
     GoldenCases.cases.foreach { case (_, html, _) =>
@@ -60,10 +52,7 @@ class BlocksFusionSpec extends AnyFunSuite {
       Gen.const("<br>"),
       Gen.const("&amp;"))
     val docGen = Gen.listOf(piece).map(_.mkString)
-    val prop = Prop.forAll(docGen) { s =>
-      val (fromToks, fused, tree) = both(s)
-      fromToks == tree && fused == tree
-    }
+    val prop = Prop.forAll(docGen)(s => Blocks.fromHtml(s) == BlocksReference.blocks(s))
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
   }

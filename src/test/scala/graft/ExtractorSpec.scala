@@ -2,7 +2,7 @@ package graft
 
 import graft.extract.{Blocks, Classifier, Extractor, Spans, PayloadException}
 import graft.fixtures.PageHtml
-import graft.html.{Dom, Tokenizer}
+import graft.html.Tokenizer
 import graft.model.Span
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}

@@ -1,7 +1,7 @@
 package graft
 
 import graft.fixtures.Corpus
-import graft.pipeline.{ExtractJob, Lineage}
+import graft.pipeline.{ExtractJob, GraftMetricsListener, Lineage}
 import graft.sources.Warc
 import graft.pipeline.ExtractJob.JobConfig
 import org.apache.spark.sql.functions._
@@ -191,6 +191,31 @@ class PipelineSpec extends AnyFunSuite {
     val r = ExtractJob.run(spark, pages, JobConfig(out, numPids = 8, takeover = true))
     assert(r.pidsProcessed == 8)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_lineage", "writer.lock")))
+  }
+
+  test("failed run unregisters its metrics listener and releases the writer lock") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // listenerBus is private[spark]: public in bytecode, reached by reflection
+    def graftListeners(): Int = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus)
+        .asInstanceOf[java.util.List[AnyRef]].asScala.count(_.isInstanceOf[GraftMetricsListener])
+    }
+    val out = freshDir("fail")
+    val before = graftListeners()
+    // html as a string fails extract_content's type check — after the
+    // job has registered its listener
+    val bad = Seq(("https://x.example/a", "<p>not bytes</p>", "en")).toDF("url", "html", "lang")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ExtractJob.run(spark, bad, JobConfig(out, numPids = 4))
+    }
+    assert(graftListeners() == before)
+    // same output dir, no takeover: the lock was released by the failure
+    val r = ExtractJob.run(spark, Corpus.pages(spark, sfDir), JobConfig(out, numPids = 4))
+    assert(r.pidsProcessed == 4 && r.docsTotal > 0)
+    assert(graftListeners() == before)
   }
 
   test("crash between lineage write and manifest rename: orphan snapshot invisible, retry clean") {

@@ -29,8 +29,7 @@ ALLOW_UNREFERENCED = {
     # tools/ mains are operational harnesses run from the CLI; their
     # results are recorded in BENCH/ artifacts
     "KernelBench.scala", "ScalingBench.scala", "QueryTime.scala",
-    "StageProf.scala", "DedupScale.scala", "GoldenGen.scala",
-    "SpillProbe.scala",
+    "DedupScale.scala", "GoldenGen.scala", "SpillProbe.scala",
     # round-6 optimization instruments; their artifacts live under
     # plans/r06/ and OPTIMIZATION_r06.md
     "PlanDump.scala", "StreamProbe.scala", "ComponentsProbe.scala",

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB oracle gate (optimization round):
 run graft.Verify into OUTDIR, then compare every query's parquet dump
-against its oracle SQL executed by DuckDB over the raw sf tables.
+against its oracle SQL executed by DuckDB over the raw sf tables. An
+oracle entry with no result dir is MISSING and fails the check.
 Usage: oracle_check.py SFDIR OUTDIR [only,names]"""
 import duckdb, glob, json, os, sys
 
@@ -42,6 +43,10 @@ for d in sorted(os.listdir(out)):
         fails += (not good)
     except Exception as e:
         print(f"{d:24s} ERR {e}")
+        fails += 1
+for d in sorted(oracle):
+    if (only is None or d in only) and not os.path.isdir(os.path.join(out, d)):
+        print(f"{d:24s} MISSING no spark result dir")
         fails += 1
 print(f"== ok={ok} fail={fails} no_oracle={skipped}")
 sys.exit(1 if fails else 0)
