@@ -209,14 +209,15 @@ object Lineage {
     val extras = lineage.columns.filterNot(BaseCols.contains).toSeq
     val cols = BaseCols ++ extras
     val stamped = lineage.select(cols.head, cols.tail: _*)
-    stamped.write.mode(SaveMode.Overwrite)
-      .parquet(s"$outputDir/_lineage/data/offset=$newSnap")
-    // collect the committed pids from the WRITTEN snapshot, not by
-    // re-executing the caller's plan: one execution, and the manifest can
-    // never diverge from the rows actually on disk (a non-deterministic
+    // one execution of the caller's (small) plan: the collected rows are
+    // both what is written and where the committed pids come from, so the
+    // manifest can never diverge from the rows on disk (a non-deterministic
     // input plan re-run could commit pids that were never written)
-    val pids = spark.read.parquet(s"$outputDir/_lineage/data/offset=$newSnap")
-      .select("partition_id").collect().map(_.getInt(0)).toSet
+    val rows = stamped.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), stamped.schema)
+      .write.mode(SaveMode.Overwrite)
+      .parquet(s"$outputDir/_lineage/data/offset=$newSnap")
+    val pids = rows.map(_.getInt(0)).toSet
     writeManifest(outputDir, Manifest(
       snapshot = newSnap,
       pids = m.pids ++ pids,

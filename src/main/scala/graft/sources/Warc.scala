@@ -155,7 +155,7 @@ object Warc {
       .select(col("url"), col("warc_ts").cast("timestamp"), col("html"),
         coalesce(col("lang"), lit("")).as("lang"))
       .where(col("html").isNotNull)
-      .repartition(numFiles, pmod(xxhash64(col("url")), lit(numFiles.toLong)))
+      .repartition(numFiles, col("url"))
       .sortWithinPartitions(col("url"))
       .as[(String, java.sql.Timestamp, Array[Byte], String)]
       .foreachPartition { (it: Iterator[(String, java.sql.Timestamp, Array[Byte], String)]) =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.extract.Extractor
 import graft.fixtures.GoldenCases
-import org.apache.spark.sql.SparkSession
 
 /** One-time golden freeze (FIXTURES.md §2): runs the engine over the
   * adversarial corpus and writes inputs + outputs as the checked-in
@@ -12,11 +11,7 @@ import org.apache.spark.sql.SparkSession
 object GoldenGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("src/test/resources/golden/golden.parquet")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session(2)
     import spark.implicits._
 
     val rows = GoldenCases.cases.map { case (url, html, lang) =>

@@ -20,18 +20,6 @@ object ScalingBench {
     val levels: Seq[Int] =
       if (args.length > 3) args(3).split(",").map(_.toInt).toSeq else Seq(4, 8, 16, 32)
 
-    def sessionFor(cpus: Int): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      graft.functions.GraftFunctions.register(s)
-      s
-    }
-
     // self-stage when pointed at a dir that doesn't exist yet: amplified
     // page corpus at 256 partitions (fine-grained enough that every
     // parallelism level schedules >= 16 waves — tail imbalance stays
@@ -39,7 +27,7 @@ object ScalingBench {
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(staged, "_SUCCESS"))) {
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "2048").toInt
-      val s = sessionFor(32)
+      val s = Probe.session(32)
       graft.fixtures.Corpus.pagesAmplified(s, sfDir, amplify)
         .repartition(256)
         .write.mode("overwrite").parquet(staged)
@@ -61,11 +49,11 @@ object ScalingBench {
     }
 
     // JVM/codegen warmup on the smallest config
-    { val s = sessionFor(4); bestOf(s, 1); s.stop() }
+    { val s = Probe.session(4); bestOf(s, 1); s.stop() }
 
     val results = (1 to rounds).map { r =>
       val times = levels.map { n =>
-        val s = sessionFor(n)
+        val s = Probe.session(n)
         val t = bestOf(s, reps)
         s.stop()
         n -> t

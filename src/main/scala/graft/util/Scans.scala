@@ -15,9 +15,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     files / row groups) is returned UNCHANGED, so no extra exchange
   *     is ever paid where the scan parallelizes naturally;
   *   - tiny relations (broadcast-bound dims) are returned unchanged —
-  *     the threshold is parameterized (SPARK_GRAFT_SPREAD_MIN_BYTES,
-  *     default 512 KB) with the local default chosen so the sf0.001
-  *     correctness fixtures keep their zero-exchange plans;
+  *     under `MinBytes` (512 KB, chosen so the sf0.001 correctness
+  *     fixtures keep their zero-exchange plans);
   *   - the partition count is the session's `defaultParallelism`, never
   *     a constant.
   *
@@ -27,13 +26,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Scans {
 
-  private lazy val minBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SPREAD_MIN_BYTES", (512 * 1024).toString).toLong
+  private val MinBytes: Long = 512 * 1024
 
   def spread(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.isStreaming) df // micro-batch sources partition per source
-    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) df
+    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes < MinBytes) df
     else if (df.rdd.getNumPartitions * 2 > target) df // already parallel
     else df.repartition(target, key)
   }

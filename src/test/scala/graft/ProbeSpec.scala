@@ -1,0 +1,51 @@
+package graft
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.tools.Probe
+import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+/** `tools.Probe` prints one JSON object per measured rep, with the common
+  * keys and the per-stage objects of `GraftMetricsListener`.
+  */
+class ProbeSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkSessionTestBase.spark
+  private val mapper = new ObjectMapper()
+  private val Common = Seq("target", "name", "rep", "wall_ms", "rows", "stages")
+
+  private def probe(args: String*): Seq[JsonNode] = {
+    val out = ArrayBuffer.empty[String]
+    Probe.run(args, spark, out += _)
+    out.map(mapper.readTree).toSeq
+  }
+
+  private def keys(n: JsonNode): Set[String] = n.fieldNames().asScala.toSet
+
+  test("query: one JSON line per rep with stage metrics") {
+    val lines = probe("query", "d_exact_canonical", "/root/testdata/sf0.001", "1")
+    assert(lines.size == 1)
+    val l = lines.head
+    assert(Common.toSet.subsetOf(keys(l)), keys(l))
+    assert(l.get("target").asText == "query" && l.get("name").asText == "d_exact_canonical")
+    assert(l.get("rows").asLong > 0)
+    val stages = l.get("stages")
+    assert(stages.isArray && stages.size > 0, "no stages recorded")
+    stages.elements().asScala.foreach { s =>
+      assert(Set("stage", "tasks", "executor_run_ms", "shuffle_read_bytes", "shuffle_write_bytes",
+        "memory_spilled_bytes", "disk_spilled_bytes", "peak_execution_memory_bytes")
+        .subsetOf(keys(s)), keys(s))
+    }
+  }
+
+  test("kernel: five measured reps, no Spark stages") {
+    val lines = probe("kernel", "200")
+    assert(lines.size == 5)
+    lines.foreach { l =>
+      assert((Common.toSet + "docs_per_s").subsetOf(keys(l)), keys(l))
+      assert(l.get("rows").asLong == 200 && l.get("docs_per_s").asDouble > 0)
+      assert(l.get("stages").isArray && l.get("stages").size == 0)
+    }
+  }
+}

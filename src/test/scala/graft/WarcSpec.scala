@@ -161,6 +161,19 @@ class WarcSpec extends AnyFunSuite {
     Seq(d1, d2).foreach(d => graft.util.Staging.deleteRec(java.nio.file.Paths.get(d)))
   }
 
+  test("numFiles = 8: every chunk file holds at least one record") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warc-n8")
+    val pages = Corpus.pages(spark, sfDir)
+    Warc.write(spark, pages, dir.toString, numFiles = 8)
+    val counts = (0 until 8).map { i =>
+      val gz = java.nio.file.Files.readAllBytes(dir.resolve(f"part-$i%05d.warc.gz"))
+      graft.sources.WarcTestAccess.parseGz(gz).size
+    }
+    assert(counts.forall(_ > 0), s"records per chunk: $counts")
+    assert(counts.sum == pages.where(col("html").isNotNull).count())
+    graft.util.Staging.deleteRec(dir)
+  }
+
   test("content-length framing: a body containing 'WARC/1.0' does not split the record") {
     val body = "<p>literal WARC/1.0\r\n\r\nheader-looking bytes</p>".getBytes("UTF-8")
     val rec = graft.sources.WarcTestAccess.record("https://x.example/a", 1767225600000L, "en", body)
