@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{ExtractKernel, GraftFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -75,12 +75,13 @@ object ExtractJob {
   def errors(spark: SparkSession, outputDir: String): DataFrame =
     docs(spark, outputDir).where(col("error").isNotNull).select(col("url"), col("error").as("reason"), col("pid"))
 
-  /** The extraction projection shared by the batch job and the streaming
-    * lineage sink: (url, in_bytes, extracted_text, spans, error, pid)
-    * from a page frame that already carries `pid`. Narrow and
-    * codegen-resident — runs upstream of the single pid shuffle.
+  /** The one extraction projection over page frames, shared by the batch
+    * job, the streaming lineage sink and the page file stream:
+    * (url, in_bytes, extracted_text, spans, error, pid) from a frame with
+    * `url`, `html`, `lang` and `pid`. Narrow and codegen-resident — runs
+    * upstream of the single pid shuffle.
     */
-  private[pipeline] def extractColumns(withPid: DataFrame): DataFrame =
+  private[graft] def extractColumns(withPid: DataFrame): DataFrame =
     withPid
       .select(
         col("url"),
@@ -99,7 +100,7 @@ object ExtractJob {
     * written parquet alone and verify lineage integrity without running
     * this engine (same construction as x_lineage / DigestAggregator).
     */
-  private[pipeline] def lineageAgg(written: DataFrame): Array[org.apache.spark.sql.Row] = {
+  private[pipeline] def lineageAgg(written: DataFrame): Array[Row] = {
     val rec = digestRecord(col("url"), col("extracted_text"), col("error"))
     written.groupBy(col("pid")).agg(
       count(lit(1)).as("rows"),
@@ -110,6 +111,27 @@ object ExtractJob {
       sum(when(col("error") === "payload", 1L).otherwise(0L)).as("f_pay"),
       sum(when(col("error") === "unexpected", 1L).otherwise(0L)).as("f_unx"))
       .collect()
+  }
+
+  /** The run record of `agg` ([[lineageAgg]] rows), with the stages
+    * `listener` has seen, written to `<outputDir>/_metrics/<name>.json`:
+    * `run-<snapshot>` for a batch run, `epoch-<id>` for a stream epoch.
+    */
+  private[pipeline] def writeReport(outputDir: String, name: String, snapshot: Long,
+      pids: Int, agg: Array[Row], t0: Long, listener: GraftMetricsListener): RunReport = {
+    val report = RunReport(
+      snapshot = snapshot,
+      pidsProcessed = pids,
+      docsOk = agg.map(_.getLong(4)).sum,
+      failedValidation = agg.map(_.getLong(5)).sum,
+      failedPayload = agg.map(_.getLong(6)).sum,
+      failedUnexpected = agg.map(_.getLong(7)).sum,
+      bytesIn = agg.map(_.getLong(2)).sum,
+      wallSec = (System.nanoTime() - t0) / 1e9)
+    val mdir = Paths.get(outputDir, "_metrics")
+    Files.createDirectories(mdir)
+    Files.write(mdir.resolve(s"$name.json"), report.toJson(listener.snapshot).getBytes("UTF-8"))
+    report
   }
 
   /** Run (or resume) the extraction over a page table. Returns the run
@@ -171,21 +193,7 @@ object ExtractJob {
       Lineage.commit(spark, cfg.outputDir, lineageRows)
       val snap = Lineage.readManifest(cfg.outputDir)._1
 
-      val report = RunReport(
-        snapshot = snap,
-        pidsProcessed = runPids.size,
-        docsOk = agg.map(_.getLong(4)).sum,
-        failedValidation = agg.map(_.getLong(5)).sum,
-        failedPayload = agg.map(_.getLong(6)).sum,
-        failedUnexpected = agg.map(_.getLong(7)).sum,
-        bytesIn = agg.map(_.getLong(2)).sum,
-        wallSec = (System.nanoTime() - t0) / 1e9)
-
-      val mdir = Paths.get(cfg.outputDir, "_metrics")
-      Files.createDirectories(mdir)
-      Files.write(mdir.resolve(s"run-$snap.json"),
-        report.toJson(listener.snapshot).getBytes("UTF-8"))
-      report
+      writeReport(cfg.outputDir, s"run-$snap", snap, runPids.size, agg, t0, listener)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -12,7 +12,9 @@ final case class StageRec(stageId: Int, name: String, tasks: Int,
     outputBytes: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
     memorySpilledBytes: Long, diskSpilledBytes: Long, peakExecutionMemory: Long) {
 
-  /** the stage object of `_metrics/run-N.json` and of every Probe line */
+  /** the stage object of `_metrics/run-N.json`, `_metrics/epoch-N.json`
+    * and every Probe line
+    */
   def toJson: String =
     s"""{"stage":$stageId,"name":"${StageRec.jstr(name)}","tasks":$tasks,""" +
       s""""executor_run_ms":$executorRunTimeMs,"input_bytes":$inputBytes,""" +
@@ -45,7 +47,8 @@ object StageRec {
   * (/root/reference/src/kafka_consumer.py:52,71; s3_client.py:49), scaled
   * to Spark: a SparkListener captures per-stage task metrics, and the job
   * publishes docs/s, MB/s and the extraction-failure rate (north_star).
-  * `ExtractJob` and `tools.Probe` both record through it.
+  * `ExtractJob` (per run), `StreamingLineage` (per epoch) and
+  * `tools.Probe` record through it.
   */
 final class GraftMetricsListener extends SparkListener {
 

@@ -20,7 +20,12 @@ import org.apache.spark.sql.types._
   *      epochs are never touched;
   *   3. per-pid lineage rows (rows, bytes, md5-60bit digest, epoch)
   *      committed via [[Lineage.commitEpoch]] — snapshot-keyed data +
-  *      atomic manifest rename, with the EPOCH recorded in the manifest.
+  *      atomic manifest rename, with the EPOCH recorded in the manifest;
+  *   4. once the commit returns, `_metrics/epoch-<id>.json`: the batch
+  *      job's run record (error classes, bytes, wall time, stages) for
+  *      this epoch. Trigger `durationMs` is known only after
+  *      `foreachBatch` returns, so it is not in the record
+  *      (`tools.Probe stream` reports it).
   *
   * Exactly-once across crashes: Spark's checkpoint replays the last
   * un-acknowledged batch after a restart; step 2 is an overwrite (no doc
@@ -76,27 +81,38 @@ object StreamingLineage {
     } finally Lineage.releaseWriterLock(lock)
   }
 
-  /** One micro-batch through the table protocol; false = replay no-op. */
+  /** One micro-batch through the table protocol; false = replay no-op.
+    * A committed epoch writes `_metrics/epoch-<id>.json`, the batch job's
+    * run record; a replay writes none.
+    */
   private def commitBatch(spark: SparkSession, batch: DataFrame,
                           outputDir: String, numPids: Int,
                           epochId: Long): Boolean = {
     if (Lineage.epochCommitted(outputDir, epochId)) return false
-    val extracted = ExtractJob.extractColumns(
-        batch.withColumn("pid", ExtractJob.pidCol(numPids)))
-      .withColumn("epoch", lit(epochId))
-      .repartition(numPids, col("pid"))
-    extracted.write.mode(SaveMode.Overwrite).partitionBy("epoch", "pid")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$outputDir/docs")
-    // lineage from the WRITTEN epoch (column-pruned result read, never a
-    // second pass over html); rows carry the epoch as an extra column —
-    // the manifest records the widened writer schema per snapshot
-    val written = docs(spark, outputDir).where(col("epoch") === epochId)
-    val agg = ExtractJob.lineageAgg(written)
-    import spark.implicits._
-    val lineageRows = agg.map(r =>
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3).toString, epochId))
-      .toSeq.toDF("partition_id", "rows", "bytes", "digest", "epoch")
-    Lineage.commitEpoch(spark, outputDir, lineageRows, epochId)
+    val t0 = System.nanoTime()
+    val listener = new GraftMetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val extracted = ExtractJob.extractColumns(
+          batch.withColumn("pid", ExtractJob.pidCol(numPids)))
+        .withColumn("epoch", lit(epochId))
+        .repartition(numPids, col("pid"))
+      extracted.write.mode(SaveMode.Overwrite).partitionBy("epoch", "pid")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(s"$outputDir/docs")
+      // lineage from the WRITTEN epoch (column-pruned result read, never a
+      // second pass over html); rows carry the epoch as an extra column —
+      // the manifest records the widened writer schema per snapshot
+      val written = docs(spark, outputDir).where(col("epoch") === epochId)
+      val agg = ExtractJob.lineageAgg(written)
+      import spark.implicits._
+      val lineageRows = agg.map(r =>
+          (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3).toString, epochId))
+        .toSeq.toDF("partition_id", "rows", "bytes", "digest", "epoch")
+      val committed = Lineage.commitEpoch(spark, outputDir, lineageRows, epochId)
+      if (committed) ExtractJob.writeReport(outputDir, s"epoch-$epochId",
+        Lineage.readManifest(outputDir)._1, agg.length, agg, t0, listener)
+      committed
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+  import Dedup.docs
 
   /** 60-bit md5 fingerprint of a salted key — portable to DuckDB. */
   private def fp60(c: Column): Column =

@@ -18,8 +18,12 @@ object Dedup {
     */
   @volatile private[graft] var lastComponentsIters: Int = 0
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+  /** The documents read of the dedup and curation queries. The schema is
+    * given, not inferred: inference costs a Spark job per query build.
+    * These are the only columns either file reads.
+    */
+  private[queries] def docs(s: SparkSession, dir: String): DataFrame =
+    s.read.schema("doc_id LONG, text STRING, lang STRING").parquet(s"$dir/documents.parquet")
 
   /** 60-bit md5 fingerprint of a key — bit-identical in DuckDB */
   private def fp60(c: Column): Column =

@@ -23,6 +23,21 @@ object Extraction {
       java.nio.file.Files.exists(p.resolve("_SUCCESS")))(
       out => graft.sources.Warc.write(s, Corpus.pages(s, dir), out))
 
+  /** The ok rows of a WARC page frame (batch or stream), keyed back to
+    * doc_id by the url tail (urls are .../doc/<id>): the x_warc / st_warc
+    * row contract.
+    */
+  private[graft] def warcOkRows(pages: DataFrame): DataFrame =
+    pages
+      .withColumn("r",
+        call_function("extract_content", col("url"), col("html"), col("lang")))
+      .where(col("r.error").isNull)
+      .select(
+        element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"),
+        unix_timestamp(col("warc_ts")).as("warc_epoch_s"),
+        col("lang"),
+        col("r.extracted_text").as("extracted_text"))
+
   /** plain documents read: the queries below do only cheap per-row
     * expression work (concat / CASE / from_json / cached robots eval)
     * before their first exchange, where the scan spread measured as a
@@ -228,16 +243,7 @@ object Extraction {
     "x_warc" -> ((s, dir) => {
       val staged = warcStaged(s, dir)
       GraftFunctions.register(s)
-      graft.sources.Warc.read(s, staged)
-        .withColumn("r",
-          call_function("extract_content", col("url"), col("html"), col("lang")))
-        .where(col("r.error").isNull)
-        .select(
-          element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"),
-          unix_timestamp(col("warc_ts")).as("warc_epoch_s"),
-          col("lang"),
-          col("r.extracted_text").as("extracted_text"))
-        .orderBy(col("doc_id"))
+      warcOkRows(graft.sources.Warc.read(s, staged)).orderBy(col("doc_id"))
     }),
 
     // outlink extraction — per-page anchors in document order, the edge

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming surface (op S1's streaming form, SURVEY.md §2.1):
   * the reference's Kafka drain loop
@@ -14,148 +16,112 @@ import org.apache.spark.sql.types._
   * `readStream → extract → writeStream`; no Kafka connector jar ships in
   * this sandbox, so the built-in file source stands in (the seam is the
   * `format(...)` string). `Trigger.AvailableNow` gives the batch-parity
-  * semantics used by the tests.
+  * semantics used by the tests. Extraction is [[ExtractJob.extractColumns]]
+  * (or, for the WARC ok rows, `queries.Extraction.warcOkRows`) — the same
+  * projection as the batch paths; the production crawl path with
+  * lineage commits and per-epoch metrics is `pipeline.StreamingLineage`.
   */
 object StreamingExtract {
 
   /** The file streaming source requires a DIRECTORY; testdata tables are
-    * single parquet files — stage such a file into a temp dir for the
-    * duration of `f`, then delete it (repeated invocations previously
-    * leaked one staged copy of the table per call). Safe for the memory
-    * sinks used here: after awaitTermination the sink rows live in
-    * memory, not in the staged files.
+    * single parquet files. Stage every data file of the (file- or
+    * directory-shaped) source `copies` times under distinct names into a
+    * temp dir for the duration of `f`, then delete it on every exit. Safe
+    * for the memory sinks used here: after awaitTermination the sink rows
+    * live in memory, not in the staged files.
     */
-  private def withStagedDir[A](path: String)(f: String => A): A = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isDirectory(p)) f(path)
-    else {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream")
-      java.nio.file.Files.copy(p, d.resolve(p.getFileName.toString))
-      try f(d.toString) finally deleteRec(d)
-    }
+  private def withStagedDir[A](path: String, copies: Int)(f: String => A): A = {
+    val src = Paths.get(path)
+    val staged = Files.createTempDirectory("graft-stream")
+    try {
+      val parts: Seq[Path] =
+        if (Files.isDirectory(src)) {
+          val ls = Files.list(src)
+          try ls.iterator().asScala.filter(p =>
+            Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet")).toList
+          finally ls.close()
+        } else Seq(src)
+      for (p <- parts; c <- 0 until copies)
+        Files.copy(p, staged.resolve(s"copy${c}_${p.getFileName}"))
+      f(staged.toString)
+    } finally deleteRec(staged)
   }
 
-  val pageSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("url", StringType),
-    StructField("warc_ts", TimestampType),
-    StructField("html", BinaryType),
-    StructField("text", StringType),
-    StructField("lang", StringType)))
+  /** the columns of the events table, read by every events stream */
+  private val eventsSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
 
-  /** The extraction transform applied to ANY streaming page source — file,
-    * memory, rate, or (with the connector jar) Kafka: the source seam is
-    * exactly the `format(...)`/source call, nothing else changes. Proven
-    * executable over a second source type in StreamingSpec's
-    * MemoryStream case.
+  private def events(spark: SparkSession, staged: String): DataFrame =
+    spark.readStream.schema(eventsSchema).parquet(staged)
+
+  /** Drain `out` into the in-memory table `sinkName` (AvailableNow) and
+    * return that table.
     */
-  def extractTransform(pages: DataFrame): DataFrame =
-    pages
-      .withColumn("r", call_function("extract_content", col("url"), col("html"), col("lang")))
-      .select(col("url"),
-        col("r.extracted_text").as("extracted_text"),
-        col("r.spans").as("spans"),
-        col("r.error").as("error"),
-        ExtractJob.pidCol(16).as("pid"))
+  private def drain(out: DataFrame, sinkName: String, outputMode: String): DataFrame = {
+    out.writeStream
+      .format("memory")
+      .queryName(sinkName)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    out.sparkSession.table(sinkName)
+  }
 
-  /** Stream a directory of page parquet into extracted parquet. Returns
-    * after all available input is processed (AvailableNow).
+  /** Stream a directory of page parquet into extracted parquet
+    * (`ExtractJob.docsSchema` columns). Returns after all available input
+    * is processed (AvailableNow); a re-run with the same checkpoint
+    * processes only files that arrived since.
     */
   def runFileStream(spark: SparkSession, inDir: String, outDir: String, checkpoint: String): Unit = {
-    runFileStreamWithMetrics(spark, inDir, outDir, checkpoint, None); ()
-  }
-
-  /** runFileStream + per-micro-batch observability — op C6's analog for
-    * the streaming path (the batch job publishes listener/accumulator
-    * metrics via `pipeline.Metrics`): one JSON line per non-empty
-    * micro-batch (batchId, input rows, trigger wall ms). Events are
-    * collected by a `StreamingQueryListener` APPENDED AS THEY ARRIVE —
-    * `recentProgress` alone retains only the last
-    * `spark.sql.streaming.numRecentProgressUpdates` (default 100)
-    * entries, so a long run would silently drop its earliest batches.
-    * The listener bus is async, so after termination the tail is merged
-    * from `recentProgress` by batchId (each source covers the other's
-    * gap: the listener has the full history, recentProgress is
-    * synchronously complete for the most recent batches).
-    */
-  def runFileStreamWithMetrics(spark: SparkSession, inDir: String, outDir: String,
-      checkpoint: String, metricsPath: Option[String],
-      maxFilesPerTrigger: Option[Int] = None): Seq[String] = {
     GraftFunctions.register(spark)
-    // keyed by (query id, batchId): no dependence on when start() returns
-    // the id, and concurrent queries in the same session never mix
-    val progress =
-      new java.util.concurrent.ConcurrentHashMap[
-        (java.util.UUID, Long), org.apache.spark.sql.streaming.StreamingQueryProgress]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        progress.put((e.progress.id, e.progress.batchId), e.progress)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    val lines =
-      try {
-        val reader = spark.readStream.schema(pageSchema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        val pages = reader.parquet(inDir)
-        val out = extractTransform(pages)
-        val q = out.writeStream
-          .format("parquet")
-          .queryName("st_extract_sink") // named: the bench's listener feed
-          // merges rows/s by name instead of per-run UUIDs
-          .option("path", outDir)
-          .option("checkpointLocation", checkpoint)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress.foreach(p => progress.put((p.id, p.batchId), p))
-        import scala.jdk.CollectionConverters._
-        progress.asScala.collect { case ((id, _), p) if id == q.id => p }.toSeq
-          .filter(_.numInputRows > 0).sortBy(_.batchId).map { p =>
-            val ms = p.durationMs
-              .getOrDefault("triggerExecution", java.lang.Long.valueOf(-1L))
-            s"""{"batchId":${p.batchId},"numInputRows":${p.numInputRows},""" +
-              s""""triggerExecutionMs":$ms}"""
-          }
-      } finally spark.streams.removeListener(listener)
-    metricsPath.foreach { mp =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(mp),
-        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    }
-    lines
+    // the page columns extractColumns reads
+    val pages = spark.readStream.schema("url STRING, html BINARY, lang STRING").parquet(inDir)
+    ExtractJob.extractColumns(pages.withColumn("pid", ExtractJob.pidCol(16)))
+      .writeStream
+      .format("parquet")
+      .queryName("st_extract_sink") // named: the bench's listener feed
+      // merges rows/s by name instead of per-run UUIDs
+      .option("path", outDir)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
   }
 
   /** The north-star extraction path end-to-end under Structured
     * Streaming with a durable (parquet) sink + checkpoint — the
     * continuous-crawl ingestion shape: pages arrive as files, each
-    * micro-batch runs the same `extract_content` expression, output
-    * lands in the sink exactly once per record (file-source + checkpoint
-    * offsets). The query surface returns the ok-rows keyed back to
-    * doc_id so the BATCH x_extract oracle pins streaming output
-    * byte-for-byte — parity between the two execution modes is the
-    * claim, per record, not just row counts.
+    * micro-batch runs the same extraction projection, output lands in the
+    * sink exactly once per record (file-source + checkpoint offsets). The
+    * query surface returns the ok-rows keyed back to doc_id so the BATCH
+    * x_extract oracle pins streaming output byte-for-byte — parity
+    * between the two execution modes is the claim, per record, not just
+    * row counts.
     */
   def extractStream(spark: SparkSession, dir: String): DataFrame = {
     // content-keyed INPUT staging (the same pattern st_warc / st_lineage
-    // already use for their staged sources): the page corpus was
-    // previously re-written to a fresh temp dir on EVERY invocation —
-    // a full corpus parquet write per timed run that is input setup, not
-    // extraction. The stream itself still runs end-to-end per call
+    // use for their staged sources): the page corpus is written once, not
+    // per timed run. The stream itself still runs end-to-end per call
     // (fresh checkpoint + sink below).
     val in = graft.util.Staging.keyedArtifact("stpages", dir,
       graft.fixtures.PageHtml.CorpusVersion)(p =>
-      java.nio.file.Files.exists(p.resolve("_SUCCESS")))(out =>
+      Files.exists(p.resolve("_SUCCESS")))(out =>
       graft.fixtures.Corpus.pages(spark, dir).write.mode("overwrite").parquet(out))
-    val work = java.nio.file.Files.createTempDirectory("graft-st-extract")
-    val out = work.resolve("out").toString
-    val cp = work.resolve("cp").toString
-    runFileStream(spark, in, out, cp)
-    // localCheckpoint materializes the sink rows before the staged
-    // dirs are deleted (same no-leak contract as withStagedDir)
-    val sunk = spark.read.parquet(out).localCheckpoint(true)
-    deleteRec(work)
+    val work = Files.createTempDirectory("graft-st-extract")
+    // localCheckpoint materializes the sink rows before the work dir is
+    // deleted — on every exit, a failed stream included
+    val sunk =
+      try {
+        val out = work.resolve("out").toString
+        runFileStream(spark, in, out, work.resolve("cp").toString)
+        spark.read.parquet(out).localCheckpoint(true)
+      } finally deleteRec(work)
     // doc_id parsed from the url tail (the x_warc / st_warc contract —
     // urls are .../doc/<id>) instead of a shuffle join back against a
     // rebuilt page corpus: same rows, one exchange fewer, no second
@@ -170,31 +136,16 @@ object StreamingExtract {
   /** The full WARC→extract pipeline through the REAL DSv2 streaming
     * connector (`format("warc-stream")`, `sources.WarcStreamSource`):
     * chunk files stream in with serialized offsets + AvailableNow
-    * semantics — the executable form of the Kafka seam — each record
-    * runs the same `extract_content` expression, and the output is keyed
-    * back to doc_id so the BATCH x_warc oracle pins it byte-for-byte.
+    * semantics — the executable form of the Kafka seam — and each record
+    * runs the x_warc ok-row projection, so the BATCH x_warc oracle pins
+    * it byte-for-byte.
     */
   def warcStream(spark: SparkSession, dir: String, sinkName: String): DataFrame = {
     GraftFunctions.register(spark)
     val staged = graft.queries.Extraction.warcStaged(spark, dir)
     val pages = spark.readStream.format("warc-stream").load(staged)
-    val out = pages
-      .withColumn("r",
-        call_function("extract_content", col("url"), col("html"), col("lang")))
-      .where(col("r.error").isNull)
-      .select(
-        element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"),
-        unix_timestamp(col("warc_ts")).as("warc_epoch_s"),
-        col("lang"),
-        col("r.extracted_text").as("extracted_text"))
-    val q = out.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy(col("doc_id"))
+    drain(graft.queries.Extraction.warcOkRows(pages), sinkName, "append")
+      .orderBy(col("doc_id"))
   }
 
   /** Streaming tumbling-window aggregation over the events table into an
@@ -202,30 +153,15 @@ object StreamingExtract {
     * (q_events_windowed oracle).
     */
   def eventsWindowed(spark: SparkSession, dir: String, sinkName: String): DataFrame =
-    withStagedDir(s"$dir/events.parquet") { staged =>
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val events = spark.readStream.schema(schema).parquet(staged)
-    val agg = events
-      .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
-      .orderBy(col("wstart"), col("event_type"))
-      .limit(500)
-  }
+    withStagedDir(s"$dir/events.parquet", 1) { staged =>
+      val agg = events(spark, staged)
+        .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
+      drain(agg, sinkName, "complete")
+        .orderBy(col("wstart"), col("event_type"))
+        .limit(500)
+    }
 
   /** Watermarked append-mode windowed aggregation: only windows closed by
     * the event-time watermark (max event time − 10 min) are emitted — the
@@ -236,34 +172,19 @@ object StreamingExtract {
     * this).
     */
   def eventsWindowedWatermarked(spark: SparkSession, dir: String, sinkName: String): DataFrame =
-    withStagedDir(s"$dir/events.parquet") { staged =>
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val events = spark.readStream.schema(schema).parquet(staged)
-    val agg = events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // DESC order: the watermark cut is at the latest windows, so it must
-    // land inside the compared prefix (a LIMIT on ascending order would
-    // never look at the boundary)
-    spark.table(sinkName)
-      .orderBy(col("wstart").desc, col("event_type"))
-      .limit(500)
-  }
+    withStagedDir(s"$dir/events.parquet", 1) { staged =>
+      val agg = events(spark, staged)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
+      // DESC order: the watermark cut is at the latest windows, so it must
+      // land inside the compared prefix (a LIMIT on ascending order would
+      // never look at the boundary)
+      drain(agg, sinkName, "append")
+        .orderBy(col("wstart").desc, col("event_type"))
+        .limit(500)
+    }
 
   /** Streaming deduplication with state: the input is staged TWICE (two
     * files — duplicates may arrive within a batch or across batches), and
@@ -271,48 +192,14 @@ object StreamingExtract {
     * exactly once. The oracle is simply the original events table: dedup
     * of the doubled stream must reproduce it.
     */
-  def dedupStream(spark: SparkSession, dir: String, sinkName: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    // stage every data file of the (file- or directory-shaped) source
-    // TWICE under distinct names — same tolerance as stageDir, which a
-    // raw Files.copy of a directory would silently break (empty copies)
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val staged = java.nio.file.Files.createTempDirectory("graft-stream-dup")
-    val parts: Seq[java.nio.file.Path] =
-      if (java.nio.file.Files.isDirectory(src)) {
-        val s0 = java.nio.file.Files.list(src)
-        try {
-          import scala.jdk.CollectionConverters._
-          s0.iterator().asScala.filter(p =>
-            java.nio.file.Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet")).toList
-        } finally s0.close()
-      } else Seq(src)
-    parts.foreach { p =>
-      java.nio.file.Files.copy(p, staged.resolve(s"copy_a_${p.getFileName}"))
-      java.nio.file.Files.copy(p, staged.resolve(s"copy_b_${p.getFileName}"))
-    }
-    try {
-      val events = spark.readStream.schema(schema).parquet(staged.toString)
-      val out = events
+  def dedupStream(spark: SparkSession, dir: String, sinkName: String): DataFrame =
+    withStagedDir(s"$dir/events.parquet", 2) { staged =>
+      val out = events(spark, staged)
         .withWatermark("ts", "10 minutes")
         .dropDuplicates("event_id")
         .select(col("event_id"), col("user_id"), col("event_type"))
-      val q = out.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(sinkName).orderBy(col("event_id"))
-    } finally deleteRec(staged) // 2x the events table per call otherwise
-  }
+      drain(out, sinkName, "append").orderBy(col("event_id"))
+    }
 
   /** Stream-static enrichment join: the unbounded event stream joins a
     * static dimension (broadcast — the dim ships to every task once; the
@@ -321,28 +208,13 @@ object StreamingExtract {
     * Spark's contract, so a dim refresh is picked up between batches.
     */
   def enrichStream(spark: SparkSession, dir: String, sinkName: String): DataFrame =
-    withStagedDir(s"$dir/events.parquet") { staged =>
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val events = spark.readStream.schema(schema).parquet(staged)
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    val out = events.join(broadcast(dim), Seq("user_id"))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("c_mktsegment"))
-    val q = out.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy(col("event_id"))
-  }
+    withStagedDir(s"$dir/events.parquet", 1) { staged =>
+      val dim = spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
+      val out = events(spark, staged).join(broadcast(dim), Seq("user_id"))
+        .select(col("event_id"), col("user_id"), col("event_type"), col("c_mktsegment"))
+      drain(out, sinkName, "append").orderBy(col("event_id"))
+    }
 
   /** Event-time sessionization under a watermark — the UNBOUNDED
     * out-of-order production shape (bounded state, late events beyond the
@@ -352,36 +224,21 @@ object StreamingExtract {
     * min), which the DuckDB oracle reproduces with gaps-and-islands SQL.
     */
   def sessionWindows(spark: SparkSession, dir: String, sinkName: String): DataFrame =
-    withStagedDir(s"$dir/events.parquet") { staged =>
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val events = spark.readStream.schema(schema).parquet(staged)
-    val agg = events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("user_id"),
-        unix_millis(col("sw.start").cast("timestamp")).as("s_start_ms"),
-        unix_millis(col("sw.end").cast("timestamp")).as("s_end_ms"),
-        col("n_events"), col("sum_value"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // DESC: the watermark cut is at the latest sessions — keep it inside
-    // the compared prefix
-    spark.table(sinkName)
-      .orderBy(col("s_start_ms").desc, col("user_id"))
-      .limit(500)
-  }
+    withStagedDir(s"$dir/events.parquet", 1) { staged =>
+      val agg = events(spark, staged)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
+        .select(col("user_id"),
+          unix_millis(col("sw.start").cast("timestamp")).as("s_start_ms"),
+          unix_millis(col("sw.end").cast("timestamp")).as("s_end_ms"),
+          col("n_events"), col("sum_value"))
+      // DESC: the watermark cut is at the latest sessions — keep it inside
+      // the compared prefix
+      drain(agg, sinkName, "append")
+        .orderBy(col("s_start_ms").desc, col("user_id"))
+        .limit(500)
+    }
 
   /** Stateful streaming: per-user session counts via
     * flatMapGroupsWithState — the custom-state surface (SURVEY.md §2.6).
@@ -396,57 +253,43 @@ object StreamingExtract {
     * beyond the watermark dropped) — not an unordered stateful fold.
     */
   def sessionCounts(spark: SparkSession, dir: String, gapMs: Long = 1800000L): DataFrame =
-    withStagedDir(s"$dir/events.parquet") { staged =>
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    // enforce the single-batch assumption the in-batch sort relies on
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
-    val nFiles = try listing.filter(p => p.toString.endsWith(".parquet")).count()
-                 finally listing.close()
-    require(nFiles == 1,
-      s"sessionCounts needs a single input file (one AvailableNow batch), found $nFiles in $staged")
-    val events = spark.readStream.schema(schema).parquet(staged)
-      .select(col("user_id"),
-        unix_millis(col("ts").cast("timestamp")).as("ms"), // ts is NTZ; session TZ UTC
-        col("event_id"))
-      .as[(Long, Long, Long)]
+    withStagedDir(s"$dir/events.parquet", 1) { staged =>
+      import spark.implicits._
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      // enforce the single-batch assumption the in-batch sort relies on
+      val listing = Files.list(Paths.get(staged))
+      val nFiles = try listing.filter(p => p.toString.endsWith(".parquet")).count()
+                   finally listing.close()
+      require(nFiles == 1,
+        s"sessionCounts needs a single input file (one AvailableNow batch), found $nFiles in $staged")
+      val in = events(spark, staged)
+        .select(col("user_id"),
+          unix_millis(col("ts").cast("timestamp")).as("ms"), // ts is NTZ; session TZ UTC
+          col("event_id"))
+        .as[(Long, Long, Long)]
 
-    def fn(user: Long, rows: Iterator[(Long, Long, Long)],
-           state: GroupState[(Long, Long, Long)]): Iterator[(Long, Long, Long)] = {
-      // events within one micro-batch arrive unordered → sort by (ms, id)
-      val sorted = rows.toVector.sortBy(r => (r._2, r._3))
-      var (sessions, events_, lastMs) = state.getOption.getOrElse((0L, 0L, Long.MinValue))
-      sorted.foreach { case (_, ms, _) =>
-        if (lastMs == Long.MinValue || ms - lastMs > gapMs) sessions += 1
-        events_ += 1
-        lastMs = ms
+      def fn(user: Long, rows: Iterator[(Long, Long, Long)],
+             state: GroupState[(Long, Long, Long)]): Iterator[(Long, Long, Long)] = {
+        // events within one micro-batch arrive unordered → sort by (ms, id)
+        val sorted = rows.toVector.sortBy(r => (r._2, r._3))
+        var (sessions, events_, lastMs) = state.getOption.getOrElse((0L, 0L, Long.MinValue))
+        sorted.foreach { case (_, ms, _) =>
+          if (lastMs == Long.MinValue || ms - lastMs > gapMs) sessions += 1
+          events_ += 1
+          lastMs = ms
+        }
+        state.update((sessions, events_, lastMs))
+        Iterator.single((user, sessions, events_))
       }
-      state.update((sessions, events_, lastMs))
-      Iterator.single((user, sessions, events_))
-    }
 
-    val out = events.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(fn)
-      .toDF("user_id", "n_sessions", "n_events")
-    val q = out.writeStream
-      .format("memory")
-      .queryName("st_sessions_sink")
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // keep the last emitted state per user (update mode may emit per batch)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    spark.table("st_sessions_sink")
-      .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-      .orderBy(col("user_id"))
-  }
+      val out = in.groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(fn)
+        .toDF("user_id", "n_sessions", "n_events")
+      // keep the last emitted state per user (update mode may emit per batch)
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
+      drain(out, "st_sessions_sink", "update")
+        .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
+        .orderBy(col("user_id"))
+    }
 }

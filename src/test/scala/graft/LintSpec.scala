@@ -63,6 +63,21 @@ class LintSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
+  test("one metrics listener: GraftMetricsListener is the only SparkListener, no private stream listener") {
+    def mainText(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    val sparkListeners = main.flatMap(p =>
+      """(extends|new)\s+([\w.]+\.)?SparkListener\b""".r.findAllIn(mainText(p)).map(_ => p.getFileName.toString))
+    assert(sparkListeners == Seq("Metrics.scala"),
+      s"GraftMetricsListener must be the only SparkListener in src/main: $sparkListeners")
+    // the frozen bench and the dev probe read stream progress; nothing else may
+    val streamListenerAllowed = Set(java.nio.file.Paths.get("src/main/scala/graft/Bench.scala"),
+      java.nio.file.Paths.get("src/main/scala/graft/tools/Probe.scala"))
+    val streamListeners = main.filterNot(streamListenerAllowed)
+      .filter(p => mainText(p).contains("StreamingQueryListener"))
+    assert(streamListeners.isEmpty, s"StreamingQueryListener outside Bench/Probe: $streamListeners")
+  }
+
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
     val bad = scalaSources.filterNot { p =>
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

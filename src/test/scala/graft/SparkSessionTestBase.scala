@@ -20,4 +20,17 @@ object SparkSessionTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `GraftMetricsListener`s registered on the shared context right now
+    * (listenerBus is private[spark]: public in bytecode, reached by
+    * reflection) — the leak check of every listener-registering path
+    */
+  def graftListeners(): Int = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("listeners").invoke(bus)
+      .asInstanceOf[java.util.List[AnyRef]].asScala
+      .count(_.isInstanceOf[graft.pipeline.GraftMetricsListener])
+  }
 }

@@ -7,23 +7,33 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Streaming lineage: warc-stream micro-batches commit through the SAME
   * manifest/lineage protocol as the batch job — kill the stream
   * mid-run, restart from the checkpoint, and the table must end
   * byte-identical to the batch extraction with no duplicate lineage
-  * rows (the north-star "continuous crawl, resumable, audited").
+  * rows (the north-star "continuous crawl, resumable, audited"). Every
+  * committed epoch leaves one `_metrics/epoch-<id>.json` record.
   */
 class StreamingLineageSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSessionTestBase.spark
   private val sfDir = "/root/testdata/sf0.001"
 
+  private def epochRecord(out: String, epoch: Long) = Paths.get(out, "_metrics", s"epoch-$epoch.json")
+
+  private def metricsFiles(out: String): Set[String] = {
+    val ls = Files.list(Paths.get(out, "_metrics"))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+  }
+
   test("kill mid-run + restart: byte-identical to batch, no duplicate lineage") {
     val warcDir = Files.createTempDirectory("graft-sl-warc").toString
     val out = Files.createTempDirectory("graft-sl-out").toString
     val cp = Files.createTempDirectory("graft-sl-cp").toString
     Warc.write(spark, Corpus.pages(spark, sfDir), warcDir, numFiles = 4)
+    val listenersBefore = SparkSessionTestBase.graftListeners()
 
     // first run: 1 file per micro-batch; crash AFTER epoch 1's manifest
     // commit but BEFORE Spark acknowledges the batch — the classic
@@ -40,6 +50,8 @@ class StreamingLineageSpec extends AnyFunSuite {
     val afterCrash = Lineage.readManifestFull(out)
     assert(afterCrash.epochs == Set(0L, 1L),
       s"two epochs committed before the crash, got ${afterCrash.epochs}")
+    // each committed epoch wrote its record before the crash
+    val recordsBefore = Seq(0L, 1L).map(e => e -> Files.readAllBytes(epochRecord(out, e))).toMap
 
     // restart from the same checkpoint: epoch 1 replays as a manifest
     // no-op (committed=false), the remaining chunks drain
@@ -52,6 +64,18 @@ class StreamingLineageSpec extends AnyFunSuite {
 
     val m = Lineage.readManifestFull(out)
     assert(m.epochs == Set(0L, 1L, 2L, 3L), s"4 chunks → 4 epochs, got ${m.epochs}")
+
+    // one schema-valid record per committed epoch; the replayed epoch
+    // rewrote none, and no epoch leaked its metrics listener
+    assert(metricsFiles(out) == (0 to 3).map(e => s"epoch-$e.json").toSet)
+    recordsBefore.foreach { case (e, bytes) =>
+      assert(Files.readAllBytes(epochRecord(out, e)).sameElements(bytes),
+        s"the replay must not rewrite epoch $e's record")
+    }
+    val recTotal = (0L to 3L).map(e => MetricsRecord.read(epochRecord(out, e)).get("docs_total").asLong).sum
+    assert(recTotal == StreamingLineage.docs(spark, out).count(),
+      "epoch records must account for every docs row")
+    assert(SparkSessionTestBase.graftListeners() == listenersBefore, "leaked GraftMetricsListener")
 
     // the table equals the batch extraction over the same corpus,
     // byte-for-byte per url
@@ -85,6 +109,27 @@ class StreamingLineageSpec extends AnyFunSuite {
         s"snapshot $s must record the widened writer schema")
     }
 
+    Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
+  }
+
+  test("epoch records survive past the recentProgress retention cap") {
+    // 8 single-chunk epochs with the engine's progress retention forced
+    // down to 2: recentProgress alone would keep only the last 2 batches;
+    // the per-epoch records are written by the epochs themselves, so all
+    // 8 must exist and account for every row of the docs table
+    val warcDir = Files.createTempDirectory("graft-sl3-warc").toString
+    val out = Files.createTempDirectory("graft-sl3-out").toString
+    val cp = Files.createTempDirectory("graft-sl3-cp").toString
+    Warc.write(spark, Corpus.pages(spark, sfDir), warcDir, numFiles = 8)
+    val key = "spark.sql.streaming.numRecentProgressUpdates"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    try StreamingLineage.run(spark, warcDir, out, cp, numPids = 4, maxFilesPerTrigger = Some(1))
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(metricsFiles(out) == (0 to 7).map(e => s"epoch-$e.json").toSet)
+    val total = (0L to 7L).map(e => MetricsRecord.read(epochRecord(out, e)).get("docs_total").asLong).sum
+    assert(total == StreamingLineage.docs(spark, out).count(),
+      s"epoch records must sum to the docs table rows (got $total)")
     Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.fixtures.Corpus
+import graft.pipeline.ExtractJob
 import graft.streaming.StreamingExtract
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +10,8 @@ import java.nio.file.Files
 /** Streaming surface tests: file-stream extraction equals batch
   * extraction, and the checkpoint makes re-triggering incremental (only
   * new files are processed — the streaming analog of lineage resume).
+  * Per-epoch metrics of the production stream path are pinned in
+  * StreamingLineageSpec.
   */
 class StreamingSpec extends AnyFunSuite {
 
@@ -46,64 +49,11 @@ class StreamingSpec extends AnyFunSuite {
     pages.unpersist(); out.unpersist()
   }
 
-  test("streaming progress metrics: micro-batch rows sum to the input (C6 streaming analog)") {
-    val inDir = Files.createTempDirectory("graft-stm-in").toString
-    val outDir = Files.createTempDirectory("graft-stm-out").toString + "/docs"
-    val cp = Files.createTempDirectory("graft-stm-cp").toString
-    val metrics = Files.createTempDirectory("graft-stm-m").resolve("progress.jsonl")
-
-    val pages = Corpus.pages(spark, sfDir)
-    pages.write.mode("append").parquet(inDir)
-    val lines = StreamingExtract.runFileStreamWithMetrics(
-      spark, inDir, outDir, cp, Some(metrics.toString))
-    assert(lines.nonEmpty, "a non-empty run must report at least one micro-batch")
-    val rowsRe = """"numInputRows":(\d+)""".r
-    val total = lines.map(l => rowsRe.findFirstMatchIn(l).get.group(1).toLong).sum
-    assert(total == pages.count(), s"progress rows must sum to the input (got $total)")
-    assert(lines.forall(_.contains("\"triggerExecutionMs\":")), "each line carries wall ms")
-    // persisted copy matches what the caller got
-    val onDisk = new String(Files.readAllBytes(metrics), "UTF-8").linesIterator.toSeq
-    assert(onDisk == lines, "persisted metrics must equal the returned lines")
-  }
-
-  test("metrics survive past the recentProgress retention cap (listener path)") {
-    // 8 single-file micro-batches with the engine's progress retention
-    // forced down to 2: recentProgress alone would report only the last
-    // 2 batches; the listener-backed collector must still return all 8
-    // and their rows must sum to the input — the C6 completeness claim.
-    val inDir = Files.createTempDirectory("graft-st-cap-in").toString
-    val outDir = Files.createTempDirectory("graft-st-cap-out").toString + "/docs"
-    val cp = Files.createTempDirectory("graft-st-cap-cp").toString
-    val pages = Corpus.pages(spark, sfDir).where(col("doc_id") < 160)
-    pages.repartition(8).write.mode("overwrite").parquet(inDir)
-    val nFiles = {
-      val s = Files.list(java.nio.file.Paths.get(inDir))
-      try s.filter(p => p.toString.endsWith(".parquet")).count() finally s.close()
-    }
-    assert(nFiles == 8)
-    val old = spark.conf.getOption("spark.sql.streaming.numRecentProgressUpdates")
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2")
-    try {
-      val lines = StreamingExtract.runFileStreamWithMetrics(
-        spark, inDir, outDir, cp, None, maxFilesPerTrigger = Some(1))
-      assert(lines.size == 8,
-        s"every micro-batch must be reported despite the cap (got ${lines.size})")
-      val rowsRe = """"numInputRows":(\d+)""".r
-      val total = lines.map(l => rowsRe.findFirstMatchIn(l).get.group(1).toLong).sum
-      assert(total == pages.count(), s"rows must sum to the input (got $total)")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", v)
-        case None => spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
-      }
-    }
-  }
-
   test("source seam is just the source call: same transform over a MemoryStream") {
     // proves SURVEY §2.1 S1's claim executably: swapping the file source
     // for an in-memory streaming source changes ONLY the readStream line —
-    // extractTransform and the sink are untouched (a Kafka source with the
-    // connector jar would be the same one-line swap)
+    // the extraction projection and the sink are untouched (a Kafka source
+    // with the connector jar would be the same one-line swap)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
@@ -118,7 +68,7 @@ class StreamingSpec extends AnyFunSuite {
     val ms = MemoryStream[(Long, String, java.sql.Timestamp, Array[Byte], String, String)](spark)
     ms.addData(sample.toSeq)
     val pages = ms.toDF().toDF("doc_id", "url", "warc_ts", "html", "text", "lang")
-    val q = StreamingExtract.extractTransform(pages).writeStream
+    val q = ExtractJob.extractColumns(pages.withColumn("pid", ExtractJob.pidCol(16))).writeStream
       .format("memory").queryName("st_memsrc_sink")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()

@@ -1,6 +1,7 @@
 package graft
 
 import graft.fixtures.Corpus
+import graft.pipeline.ExtractJob
 import graft.sources.Warc
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,7 +12,7 @@ import java.nio.file.{Files, Paths}
 /** The DSv2 `warc-stream` connector: micro-batch reads with serialized
   * offsets over a directory of WARC chunk files — batch parity,
   * incremental drain of newly-arrived chunks through one checkpoint
-  * (exactly-once), and composition with the extraction transform (the
+  * (exactly-once), and composition with the extraction projection (the
   * executable Kafka-seam claim).
   */
 class WarcStreamSpec extends AnyFunSuite {
@@ -186,15 +187,15 @@ class WarcStreamSpec extends AnyFunSuite {
     Seq(dir, cp, out).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
   }
 
-  test("kafka-seam composition: connector + extractTransform equals batch extraction") {
+  test("kafka-seam composition: connector + extractColumns equals batch extraction") {
     val dir = Files.createTempDirectory("graft-wstream-x").toString
     val cp = Files.createTempDirectory("graft-wstream-x-cp").toString
     graft.functions.GraftFunctions.register(spark)
     Warc.write(spark, Corpus.pages(spark, sfDir), dir, numFiles = 2)
-    // the same transform the file/memory/kafka sources feed — only the
+    // the same projection the file/memory/kafka sources feed — only the
     // source line differs (the seam claim, now over a REAL connector)
-    val q = graft.streaming.StreamingExtract.extractTransform(
-        spark.readStream.format("warc-stream").load(dir))
+    val pages = spark.readStream.format("warc-stream").load(dir)
+    val q = ExtractJob.extractColumns(pages.withColumn("pid", ExtractJob.pidCol(16)))
       .writeStream.format("memory").queryName("ws_x_sink")
       .option("checkpointLocation", cp)
       .outputMode("append")
