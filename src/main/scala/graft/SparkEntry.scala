@@ -50,10 +50,15 @@ object SparkEntry {
       "st_lineage" -> ((s, dir) => {
         // versioned by the PAGE contract, not a literal: the table's
         // bytes derive from warcStaged (a function of CorpusVersion), so
-        // a corpus-version bump must re-key this artifact too
+        // a corpus-version bump must re-key this artifact too. Complete =
+        // every committed epoch has its run record: a table staged by a
+        // writer that kept no `_metrics/` is rebuilt, not reused
         val tbl = graft.util.Staging.keyedArtifact("stlineage", dir,
-          graft.fixtures.PageHtml.CorpusVersion)(p =>
-          graft.pipeline.Lineage.readManifestFull(p.toString).epochs.nonEmpty) {
+          graft.fixtures.PageHtml.CorpusVersion) { p =>
+          val epochs = graft.pipeline.Lineage.readManifestFull(p.toString).epochs
+          epochs.nonEmpty &&
+            epochs.forall(e => java.nio.file.Files.exists(p.resolve(s"_metrics/epoch-$e.json")))
+        } {
           out =>
             val warcDir = graft.queries.Extraction.warcStaged(s, dir)
             graft.pipeline.StreamingLineage.run(s, warcDir, out,

@@ -35,6 +35,14 @@ object Corpus {
     else PageHtml.build(id, text, lang, withPayload = id % 10 == 0, variant = v).getBytes("UTF-8")
   }
 
+  /** The `documents` table of a corpus dir (doc_id, text, lang) — the one
+    * reader every query, stager and tool uses. The schema is given, not
+    * inferred: inference costs a Spark job per query build. These are the
+    * only columns any reader uses.
+    */
+  def documents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema("doc_id LONG, text STRING, lang STRING").parquet(s"$dir/documents.parquet")
+
   /** The page table as a DataFrame, one row per document. */
   def pages(spark: SparkSession, sfDir: String): DataFrame =
     pagesAmplified(spark, sfDir, 1)
@@ -59,8 +67,7 @@ object Corpus {
     // more in task overhead than it buys — measured net-negative for the
     // pages-based aggregate queries (see OPTIMIZATION_r06.md); amplified
     // corpora are staged with an explicit repartition by their builders.
-    val base0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select($"doc_id", $"text", $"lang")
+    val base0 = documents(spark, sfDir)
     val base = if (repeatText <= 1) base0
       else base0.select($"doc_id",
         concat_ws(" ", array_repeat($"text", repeatText)).as("text"), $"lang")

@@ -1,20 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
-
-/** Input row of the Common-Crawl-style page table (shape mandated by
-  * BASELINE.json `input_hint`). Analog of the reference's
-  * `OcrInputMessage` (/root/reference/src/kafka_models.py:6-18) with the
-  * blob inlined as the `html` column instead of fetched from S3 per record
-  * (/root/reference/src/s3_client.py:26-59).
-  */
-final case class Page(
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
-
 /** A located embedded payload (PDF/layout) inside the raw html bytes.
   * `start`/`end` are byte offsets of the base64 body in the raw html.
   */
@@ -32,6 +17,3 @@ final case class ExtractedDoc(url: String, extracted_text: String, spans: Seq[Sp
   * "validation" | "payload" | "unexpected".
   */
 final case class BadRow(url: String, reason: String)
-
-/** Per-partition lineage record for resumable processing (north_star). */
-final case class Lineage(partition_id: Int, offset: Long, rows: Long, bytes: Long, digest: String)

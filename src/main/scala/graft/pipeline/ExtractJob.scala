@@ -98,7 +98,8 @@ object ExtractJob {
     * md5-60bit (not xxhash64): any external system — DuckDB, Trino, a
     * Python auditor — can recompute the per-partition digest from the
     * written parquet alone and verify lineage integrity without running
-    * this engine (same construction as x_lineage / DigestAggregator).
+    * this engine (x_lineage's md5-60bit sum over the length-prefixed
+    * digestRecord encoding).
     */
   private[pipeline] def lineageAgg(written: DataFrame): Array[Row] = {
     val rec = digestRecord(col("url"), col("extracted_text"), col("error"))

@@ -32,8 +32,7 @@ object ShardExport {
           writersPerShard: Int = 4, maxRecordsPerFile: Long = 0L,
           format: String = "parquet"): (Long, Long) = {
     val curated = Curation.defs("c_curate")(spark, sfDir) // doc_id, split, shard
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"), col("lang"))
+    val docs = graft.fixtures.Corpus.documents(spark, sfDir)
     val out = docs.join(curated, Seq("doc_id"))
       .withColumn("w_salt",
         pmod(xxhash64(col("doc_id")), lit(writersPerShard.toLong)).cast("int"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.fixtures.Corpus.documents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,8 +18,6 @@ import org.apache.spark.sql.functions._
   * — the same shape as d_exact_canonical.
   */
 object Curation {
-
-  import Dedup.docs
 
   /** 60-bit md5 fingerprint of a salted key — portable to DuckDB. */
   private def fp60(c: Column): Column =
@@ -46,7 +45,7 @@ object Curation {
     // never reassigns an existing doc (the property real pipelines need
     // to keep held-out sets uncontaminated across corpus versions).
     "c_split" -> ((s, dir) =>
-      docs(s, dir).select(
+      documents(s, dir).select(
         col("doc_id"),
         pmod(fp60(concat(lit("split:"), col("doc_id").cast("string"))), lit(100L))
           .as("bucket"),
@@ -58,7 +57,7 @@ object Curation {
     // assignment. One shuffle total (dedup hash); filters run before it
     // so boilerplate never crosses the wire.
     "c_curate" -> ((s, dir) => {
-      val good = docs(s, dir).where(qualityOk)
+      val good = documents(s, dir).where(qualityOk)
         .select(col("doc_id"), md5(col("text")).as("th"))
       val canon = good.groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
       canon.select(
@@ -71,7 +70,7 @@ object Curation {
     // shard manifest: docs + bytes per (split, shard) — the balance
     // check a sharded training run does before reading anything
     "c_shard_stats" -> ((s, dir) => {
-      val good = docs(s, dir).where(qualityOk)
+      val good = documents(s, dir).where(qualityOk)
         .select(col("doc_id"), col("text"), md5(col("text")).as("th"))
       val canon = good.groupBy(col("th"))
         .agg(min(col("doc_id")).as("doc_id"), first(length(col("text"))).as("n_chars"))
@@ -90,7 +89,7 @@ object Curation {
     // construction; the draw itself is a pure map-side filter, so the
     // whole operator is one tiny agg + one narrow pass over the corpus.
     "c_sample" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = documents(s, dir)
       val stats = d.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       val floorN = stats.agg(min(col("n")).as("mn"))
       d.join(broadcast(stats), "lang")
@@ -109,7 +108,7 @@ object Curation {
     // parallel — at 10^12 docs the parallelism is #shards, which a real
     // export sets ≫ #executors (here 8 for the oracle's sake).
     "c_pack" -> ((s, dir) => {
-      val base = docs(s, dir).select(
+      val base = documents(s, dir).select(
         col("doc_id"),
         shardCol(col("doc_id")).as("shard"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -132,7 +131,7 @@ object Curation {
     "c_decontaminate" -> ((s, dir) => {
       // spread (util.Scans): the per-position 8-gram fp60 explode is the
       // heavy map stage — ~n_words hashes per doc
-      val d = graft.util.Scans.spread(docs(s, dir), col("doc_id"))
+      val d = graft.util.Scans.spread(documents(s, dir), col("doc_id"))
       // ws is PROJECTED once per row, not an inlined Column: an inlined
       // split(text) inside the transform lambda re-splits the whole
       // document per gram index — O(len²) per doc, a hang on multi-MB

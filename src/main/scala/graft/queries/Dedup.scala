@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.fixtures.Corpus.documents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,13 +18,6 @@ object Dedup {
     * job-count spec derives its per-iteration budget from this)
     */
   @volatile private[graft] var lastComponentsIters: Int = 0
-
-  /** The documents read of the dedup and curation queries. The schema is
-    * given, not inferred: inference costs a Spark job per query build.
-    * These are the only columns either file reads.
-    */
-  private[queries] def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.schema("doc_id LONG, text STRING, lang STRING").parquet(s"$dir/documents.parquet")
 
   /** 60-bit md5 fingerprint of a key — bit-identical in DuckDB */
   private def fp60(c: Column): Column =
@@ -115,7 +109,7 @@ object Dedup {
     * over the spread layout — see minhashUdaf)
     */
   private def simhash(s: SparkSession, dir: String): DataFrame =
-    graft.util.Scans.spread(docs(s, dir), col("doc_id"))
+    graft.util.Scans.spread(documents(s, dir), col("doc_id"))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("doc_id"))
       .agg(simhashUdaf(col("tok")).as("simhash"))
@@ -251,7 +245,7 @@ object Dedup {
     * may appear anywhere in it).
     */
   private[graft] def componentEdges(s: SparkSession, dir: String): DataFrame = {
-    val sh = graft.util.CacheScope.cached(shingles(docs(s, dir)))
+    val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
     verifiedPairs(sh, Some(lshCandidates(sh)))
       .select(col("a_id"), col("b_id"))
   }
@@ -316,7 +310,7 @@ object Dedup {
     // shuffle/sort key is 32 bytes instead of the full document text
     // (the Window.partitionBy(text) form sorts multi-KB keys at scale).
     "d_exact_canonical" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), md5(col("text")).as("th"))
+      val d = documents(s, dir).select(col("doc_id"), md5(col("text")).as("th"))
       val canon = d.groupBy(col("th")).agg(min(col("doc_id")).as("canonical_id"))
       d.join(canon, Seq("th"))
         .withColumn("is_dup", (col("doc_id") =!= col("canonical_id")).cast("int"))
@@ -330,7 +324,7 @@ object Dedup {
     // (both self-join sides + the size table read them) and released at
     // the harness boundary like every other query-internal cache.
     "d_jaccard_pairs" -> ((s, dir) =>
-      verifiedPairs(graft.util.CacheScope.cached(shingles(docs(s, dir))), None)),
+      verifiedPairs(graft.util.CacheScope.cached(shingles(documents(s, dir))), None)),
 
     // MinHash + LSH banding: 64-perm signatures from ONE string hash per
     // shingle (MinHashAggregator via udaf — map-side combining, no 64-way
@@ -339,7 +333,7 @@ object Dedup {
     // 10^12-scale path), then exact-verified. Output is identical to
     // d_jaccard_pairs (same oracle): proves recall.
     "d_minhash_lsh" -> ((s, dir) => {
-      val sh = graft.util.CacheScope.cached(shingles(docs(s, dir)))
+      val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
       verifiedPairs(sh, Some(lshCandidates(sh)))
     }),
 
@@ -358,8 +352,8 @@ object Dedup {
       val idxDir = graft.util.Staging.keyedArtifact("lshidx", dir, 1)(p =>
         java.nio.file.Files.exists(p.resolve("bands").resolve("_SUCCESS")) &&
           java.nio.file.Files.exists(p.resolve("shingles").resolve("_SUCCESS")))(
-        out => buildBandIndex(s, docs(s, dir).where(col("doc_id") % 2 === 0), out))
-      probeBandIndex(s, docs(s, dir).where(col("doc_id") % 2 === 1), idxDir)
+        out => buildBandIndex(s, documents(s, dir).where(col("doc_id") % 2 === 0), out))
+      probeBandIndex(s, documents(s, dir).where(col("doc_id") % 2 === 1), idxDir)
     }),
 
     // SimHash (60-bit, md5-based token hashes, frequency-weighted) — the
@@ -581,7 +575,7 @@ object Dedup {
         }
         lastComponentsIters = iters
         require(changed == 0, s"label propagation did not converge in $iters rounds")
-        docs(s, dir).select(col("doc_id"))
+        documents(s, dir).select(col("doc_id"))
           .join(labels.withColumnRenamed("comp", "ecomp"), Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("ecomp"), col("doc_id")).as("comp"))
@@ -605,8 +599,8 @@ object Dedup {
       val idx = graft.util.Staging.keyedArtifact("bloomidx", dir, 1)(p =>
         java.nio.file.Files.exists(p.resolve("bloom.bin")) &&
           java.nio.file.Files.exists(p.resolve("hashes").resolve("_SUCCESS")))(
-        out => buildExactIndex(s, docs(s, dir), out))
-      val d = docs(s, dir)
+        out => buildExactIndex(s, documents(s, dir), out))
+      val d = documents(s, dir)
       val batch = d.where(col("doc_id") % 4 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
         .union(d.where(col("doc_id") % 4 === 2)
@@ -626,7 +620,7 @@ object Dedup {
     // Common Crawl), join-back on the hash, reassembly one shuffle on
     // doc_id with per-doc bounded state.
     "d_paragraph" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
+      val d = documents(s, dir).select(col("doc_id"),
         when(col("doc_id") % 6 === 0,
           concat(lit(Boilerplate + " "), col("text"))).otherwise(col("text")).as("t"))
       val paras = d
@@ -664,7 +658,7 @@ object Dedup {
     // crosses the wire until the final per-doc reassembly groupBy, which
     // is keyed on doc_id and carries only kept tokens.
     "d_ngram_spans" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = documents(s, dir)
       // ws PROJECTED once per row — an inlined split(text) inside the
       // transform lambda re-splits the whole document per gram index,
       // O(len²) per doc (a hang on multi-MB documents; caught by

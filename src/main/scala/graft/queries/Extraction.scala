@@ -38,13 +38,10 @@ object Extraction {
         col("lang"),
         col("r.extracted_text").as("extracted_text"))
 
-  /** plain documents read: the queries below do only cheap per-row
-    * expression work (concat / CASE / from_json / cached robots eval)
-    * before their first exchange, where the scan spread measured as a
-    * net loss (see OPTIMIZATION_r06.md); the heavy page-build path gets
-    * its spread inside Corpus.pagesAmplified instead. */
-  private def docsTable(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+  // plain documents reads (no util.Scans.spread): the queries below do
+  // only cheap per-row expression work (concat / CASE / from_json /
+  // cached robots eval) before their first exchange, where the scan
+  // spread measured as a net loss (see OPTIMIZATION_r06.md)
 
   private def extracted(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
@@ -134,7 +131,7 @@ object Extraction {
         StructField("bucket", StringType),
         StructField("fileName", StringType),
         StructField("_corrupt", StringType)))
-      val raw = docsTable(s, dir)
+      val raw = Corpus.documents(s, dir)
         .select(col("doc_id"),
           when(col("doc_id") % 15 === 4,
             // malformed: truncated JSON (no closing brace)
@@ -186,7 +183,7 @@ object Extraction {
     // cardinality ~ corpus size, no hot keys beyond host skew which this
     // groupBy does not key on).
     "d_url_latest" -> ((s, dir) => {
-      val base = docsTable(s, dir).select(col("doc_id"))
+      val base = Corpus.documents(s, dir).select(col("doc_id"))
         .withColumn("u", concat(lit("https://h"), hostIdxCol,
           lit(".example.org/doc/"), col("doc_id")))
       // crawl 1: tracking-param / fragment / uppercase variants
@@ -219,7 +216,7 @@ object Extraction {
     // still broadcasts); the corpus never shuffles.
     "x_url_filter" -> ((s, dir) => {
       import s.implicits._
-      val base = docsTable(s, dir).select(col("doc_id"))
+      val base = Corpus.documents(s, dir).select(col("doc_id"))
         .withColumn("url", concat(
           lit("https://h"), hostIdxCol, lit(".example.org/doc/"), col("doc_id"),
           when(col("doc_id") % 23 === 5, lit("/casino-bonus"))
@@ -294,7 +291,7 @@ object Extraction {
     // independently of the parser under test. Pure map-side.
     "x_robots" -> ((s, dir) => {
       import s.implicits._
-      docsTable(s, dir)
+      Corpus.documents(s, dir)
         .select(col("doc_id")).as[Long]
         .map { id =>
           val h = PageHtml.hostIndex(id)
@@ -326,7 +323,7 @@ object Extraction {
     // corpus size since hosts ≪ docs).
     "x_host_rank" -> ((s, dir) => {
       val R0 = 1000000000000L
-      val d = docsTable(s, dir).select(col("doc_id"))
+      val d = Corpus.documents(s, dir).select(col("doc_id"))
       // deterministic host multigraph: each doc links its host to the
       // host of (doc_id + 17) — same arithmetic the oracle replays
       val edges = d.select(hostIdxCol.as("src"),
@@ -390,7 +387,7 @@ object Extraction {
     "x_schema_evolution" -> ((s, dir) => {
       val tbl = graft.util.Staging.keyedArtifact("linevo", dir, 1)(p =>
         graft.pipeline.Lineage.readManifest(p.toString)._1 == 2L) { out =>
-        val d = s.read.parquet(s"$dir/documents.parquet")
+        val d = Corpus.documents(s, dir)
         val s1 = d.withColumn("partition_id", (col("doc_id") % 8).cast("int"))
           .groupBy(col("partition_id"))
           .agg(count(lit(1)).as("rows"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.fixtures.Corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,7 +103,7 @@ object Multimodal {
   // neutral-to-negative under the scan spread (see OPTIMIZATION_r06.md)
   private def assets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
+    Corpus.documents(s, dir)
       .select(col("doc_id")).as[Long]
       .map(id => (id, encodeImage(id), encodeVideo(id), encodeAudio(id)))
       .toDF("doc_id", "img", "vid", "aud")
@@ -170,7 +171,7 @@ object Multimodal {
     // byte plumbing + contract real; the oracle predicts every string.
     "mm_ocr" -> ((s, dir) => {
       import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
+      Corpus.documents(s, dir)
         .select(col("doc_id")).as[Long]
         .map { id =>
           val text = decodeScan(encodeScan(id)) match {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.fixtures.Corpus.documents
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,15 +13,12 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** docs + scale-adaptive scan spread (util.Scans) — ONLY for the
     * queries whose per-row map fan-out is heavy (per-shingle/per-token
     * md5); measured a net loss on the cheap expression maps, which read
     * plain (see OPTIMIZATION_r06.md). */
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    graft.util.Scans.spread(docs(s, dir), col("doc_id"))
+    graft.util.Scans.spread(documents(s, dir), col("doc_id"))
 
   private val markers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "of", "is", "and"),
@@ -38,7 +36,7 @@ object TextAnalysis {
     // language ID: marker-word counts per language, argmax with a fixed
     // preference order on ties; 'unknown' when no marker hits at all
     "t_langid" -> ((s, dir) => {
-      val withHits = docs(s, dir)
+      val withHits = documents(s, dir)
         .withColumn("ws", split(col("text"), " "))
         .select(col("doc_id") +: markers.map { case (l, w) => hitCol(l, w) }: _*)
       val best = greatest(markers.map(m => col(s"${m._1}_hits")): _*)
@@ -56,7 +54,7 @@ object TextAnalysis {
 
     // quality scoring: all features integer-derived → exact cross-engine
     "t_quality" -> ((s, dir) => {
-      docs(s, dir)
+      documents(s, dir)
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_chars", length(col("text")))
         .withColumn("n_words", size(col("ws")))
@@ -74,7 +72,7 @@ object TextAnalysis {
 
     // token counting: whitespace, regex word-ish tokens, distinct count
     "t_tokens" -> ((s, dir) => {
-      docs(s, dir)
+      documents(s, dir)
         .withColumn("ws", split(col("text"), " "))
         .select(
           col("doc_id"),
@@ -116,7 +114,7 @@ object TextAnalysis {
     // the filter threshold itself is the consumer's choice.
     "t_repetition" -> ((s, dir) => {
       import s.implicits._
-      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+      documents(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
           val ws = text.split(' ')
           val n = ws.length
@@ -147,7 +145,7 @@ object TextAnalysis {
 
     // document fingerprinting: md5 digest + numeric 60-bit fp
     "t_fingerprint" -> ((s, dir) => {
-      docs(s, dir)
+      documents(s, dir)
         .select(
           col("doc_id"),
           md5(col("text")).as("fp_md5"),
@@ -162,7 +160,7 @@ object TextAnalysis {
     // two engines match identically. Pure map-side — zero shuffles at any
     // corpus size (the orderBy is presentation-only).
     "t_pii" -> ((s, dir) => {
-      val withPii = docs(s, dir).withColumn("t2",
+      val withPii = documents(s, dir).withColumn("t2",
         concat(col("text"),
           when(col("doc_id") % 7 === 0,
             concat(lit(" contact agent"), col("doc_id"),
@@ -193,7 +191,7 @@ object TextAnalysis {
     // combining pairs actually collapsed. Pure map-side.
     "t_normalize" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val planted = docs(s, dir).withColumn("t2", concat(col("text"),
+      val planted = documents(s, dir).withColumn("t2", concat(col("text"),
         when(col("doc_id") % 13 === 2, lit(" café résumé"))
           .when(col("doc_id") % 13 === 7, lit(" straße Å"))
           .otherwise(lit(""))))
@@ -218,7 +216,7 @@ object TextAnalysis {
     // map-side (per-row array ops — lines are bounded, each split once);
     // the oracle replays every plant and rule in SQL.
     "t_c4_filters" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = documents(s, dir)
         .withColumn("ws", split(col("text"), " "))
         .withColumn("l0", expr(
           "transform(sequence(0, cast(ceil(size(ws)/5.0) as int)-1)," +

@@ -12,7 +12,8 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * can ingest the crawl's native artifacts directly instead of requiring
   * a pre-converted parquet table.
   *
-  * Read path: Hadoop FileSystem listing → one task per chunk file →
+  * Read path (the `warc-stream` DSv2 table, batch and micro-batch, see
+  * WarcStreamSource): Hadoop FileSystem listing → one task per chunk file →
   * STREAMING member-by-member gzip decode (shared Inflater, 64 KB input
   * buffer) → lazy record parse → Page-shaped rows (url, warc_ts, html,
   * lang, http_status, mime). Peak memory per task is O(largest single
@@ -470,10 +471,9 @@ object Warc {
 
   /** Stream every response record of one chunk file; peak memory is one
     * record (gz) or one file (plain .warc — the test-scale path).
-    * Closeable so both consumers — the batch flatMap (closes via task
-    * completion) and the DSv2 streaming PartitionReader (Spark calls
-    * close()) — release the stream/Inflater deterministically; close is
-    * idempotent and also runs on exhaustion.
+    * Closeable so the DSv2 PartitionReader ([[WarcChunkReader]], its one
+    * consumer; Spark calls close()) releases the stream/Inflater
+    * deterministically; close is idempotent and also runs on exhaustion.
     *
     * Failure contract: CONTENT-level problems (malformed records, corrupt
     * gzip members, truncated tails) are absorbed by the parsers — they
@@ -485,76 +485,42 @@ object Warc {
     * silently drop ~1 GB of crawl forever.
     */
   private[sources] def recordsInFile(pathStr: String, confMap: Map[String, String],
-                                     wantHtml: Boolean = true):
-      scala.collection.AbstractIterator[WarcDoc] with AutoCloseable = {
+                                     wantHtml: Boolean): Iterator[WarcDoc] with AutoCloseable = {
     val p = new org.apache.hadoop.fs.Path(pathStr)
     val fs = p.getFileSystem(confFrom(confMap))
-    if (pathStr.endsWith(".gz")) {
-      val reader = new GzipMemberReader(
-        new java.io.BufferedInputStream(fs.open(p), 256 * 1024))
-      new scala.collection.AbstractIterator[WarcDoc] with AutoCloseable {
-        private val it = reader.flatMap(parseChunk(_, wantHtml))
-        def hasNext: Boolean = it.hasNext
-        def next(): WarcDoc = it.next()
-        def close(): Unit = reader.close()
+    // decoded blocks: one gzip member at a time, or the whole plain file
+    val (blocks, release): (Iterator[Array[Byte]], AutoCloseable) =
+      if (pathStr.endsWith(".gz")) {
+        val reader = new GzipMemberReader(
+          new java.io.BufferedInputStream(fs.open(p), 256 * 1024))
+        (reader, reader)
+      } else {
+        val in = fs.open(p)
+        (Iterator.single(try in.readAllBytes() finally in.close()), () => ())
       }
-    } else {
-      val in = fs.open(p)
-      val all = try in.readAllBytes() finally in.close()
-      new scala.collection.AbstractIterator[WarcDoc] with AutoCloseable {
-        private val it = parseChunk(all, wantHtml)
-        def hasNext: Boolean = it.hasNext
-        def next(): WarcDoc = it.next()
-        def close(): Unit = ()
-      }
+    new scala.collection.AbstractIterator[WarcDoc] with AutoCloseable {
+      private val it = blocks.flatMap(parseChunk(_, wantHtml))
+      def hasNext: Boolean = it.hasNext
+      def next(): WarcDoc = it.next()
+      def close(): Unit = release.close()
     }
   }
 
-  private def recordsIn(pathStr: String, confMap: Map[String, String],
-                        wantHtml: Boolean): Iterator[WarcDoc] = {
-    val rs = recordsInFile(pathStr, confMap, wantHtml)
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => rs.close()))
-    rs
-  }
-
-  /** Read every `*.warc` / `*.warc.gz` chunk under `dir` into the
-    * Page-shaped table (url, warc_ts, html, lang, http_status, mime).
-    * Per-record errors are absorbed by the parser (tolerance); IO errors
-    * fail the task (see recordsInFile).
+  /** Every `*.warc` / `*.warc.gz` chunk under `dir` as the Page-shaped
+    * table (url, warc_ts, html, lang, http_status, mime): the batch scan
+    * of the `warc-stream` DSv2 table, one task per chunk file. Spark's
+    * required-column pushdown reaches the parser: when no consumer needs
+    * `html` (a url count, a status/mime histogram) the parser never
+    * copies a body — the scan still walks every record (the container is
+    * sequential) but per-record allocation drops from O(body) to
+    * O(headers). Per-record errors are absorbed by the parser
+    * (tolerance); IO errors fail the task (see recordsInFile). A missing
+    * `dir` reads as no rows.
     */
   def read(spark: SparkSession, dir: String): DataFrame =
-    read(spark, dir, WarcStreamSource.Schema.fieldNames.toSeq)
+    spark.read.format("warc-stream").load(dir)
 
-  /** Projected read: only `columns` (any subset/order of the schema)
-    * survive. When `html` is not requested the parser never copies a
-    * body — the scan still walks every record (the container is
-    * sequential) but per-record allocation drops from O(body) to
-    * O(headers): a metadata pass (url counts, status/mime stats,
-    * timestamp histograms) over TB of chunks stops paying for bytes it
-    * never reads. This is the batch twin of the streaming connector's
-    * required-column pushdown.
-    */
-  def read(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val known = WarcStreamSource.Schema.fieldNames.toSet
-    val bad = columns.filterNot(known)
-    require(bad.isEmpty, s"unknown WARC columns: ${bad.mkString(", ")}")
-    val wantHtml = columns.contains("html")
-    // same listing/filter as the streaming connector — one shared helper
-    // keeps batch and streaming readers in lockstep (WarcStreamSpec
-    // asserts their parity)
-    val files = WarcStreamSource.listChunks(
-      dir, spark.sparkContext.hadoopConfiguration)
-    val confMap = hadoopConfMap(spark)
-    // parallelize with explicit slices: EXACTLY one chunk file per task
-    // (Dataset.repartition round-robins from a random per-partition
-    // start, which routinely doubles up ~1 GB chunks on one task while
-    // another gets none)
-    spark.createDataset(
-        spark.sparkContext.parallelize(files, math.max(files.size, 1)))
-      .flatMap(recordsIn(_, confMap, wantHtml))
-      .toDF()
-      .select(columns.map(col): _*)
-  }
+  /** Projected read: only `columns` (any subset/order of the schema). */
+  def read(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame =
+    read(spark, dir).select(columns.map(col): _*)
 }

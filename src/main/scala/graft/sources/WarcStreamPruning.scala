@@ -113,7 +113,7 @@ object WarcStreamPruning extends Rule[LogicalPlan] {
   /** Idempotently append this rule to the session's
     * `experimental.extraOptimizations` — the public hook that reaches
     * every optimize() call, including each micro-batch's. Called by the
-    * source itself on scan creation, so users need no configuration.
+    * source itself when a stream starts, so users need no configuration.
     */
   def install(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations

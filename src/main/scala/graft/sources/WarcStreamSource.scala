@@ -14,9 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.util
 
-/** A REAL DataSource V2 streaming connector for WARC chunk directories —
-  * `spark.readStream.format("warc-stream").load(dir)` — implementing the
-  * exact interface surface a Kafka connector implements (TableProvider →
+/** The one reader of WARC chunk directories, as a DataSource V2 table:
+  * `spark.read.format("warc-stream").load(dir)` (batch, what
+  * [[Warc.read]] returns) and `spark.readStream.format("warc-stream")
+  * .load(dir)` (micro-batch). Both modes plan one InputPartition per
+  * chunk file and share one reader factory. The stream implements the
+  * interface surface a Kafka connector implements (TableProvider →
   * MicroBatchStream with serialized offsets, checkpoint replay,
   * AvailableNow support). The Kafka jar itself cannot ship in this
   * offline sandbox; this connector is the executable proof that the
@@ -32,9 +35,9 @@ import java.util
   * count of files at-or-below it; each micro-batch plans one
   * InputPartition per newly-arrived chunk file, and each partition
   * streams records through the member-by-member gzip reader (peak
-  * memory one record, as in the batch path). Exactly-once delivery
-  * follows from the offset log: a restarted query replans only files
-  * lexically above the committed watermark. A file that violates the
+  * memory one record). Exactly-once delivery follows from the offset
+  * log: a restarted query replans only files lexically above the
+  * committed watermark. A file that violates the
   * contract — arriving BELOW the committed watermark — cannot be
   * attributed (processed vs late) from a bounded offset, so the count
   * invariant detects it and FAILS the query loudly instead of
@@ -63,8 +66,7 @@ object WarcStreamSource {
     StructField("mime", StringType)))
 
   /** chunk files under `dir`, sorted by full path (names are the offset
-    * axis); the ONE listing/filter both the batch reader (Warc.read) and
-    * the streaming connector use — they must never diverge
+    * axis); the one listing/filter of batch scans and micro-batches
     */
   private[sources] def listChunks(dir: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
@@ -97,14 +99,8 @@ private final class WarcStreamTable(path: String) extends Table with SupportsRea
   override def name(): String = s"warc-stream:$path"
   override def schema(): StructType = WarcStreamSource.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // streaming scans never see Catalyst's batch pushdown rule (it
-    // matches DataSourceV2Relation only), so the source self-registers
-    // the per-micro-batch pruning rule on the active session — zero user
-    // config, same effect (GraftExtensions also injects it for
-    // spark.sql.extensions deployments)
-    WarcStreamPruning.install(org.apache.spark.sql.SparkSession.active)
     // admission control (the Kafka maxOffsetsPerTrigger analog): at most
     // N chunk files per micro-batch — bounds batch size/latency on a big
     // backlog and gives restart tests real multi-batch offset logs
@@ -117,27 +113,56 @@ private final class WarcStreamTable(path: String) extends Table with SupportsRea
   }
 }
 
-/** Required-column pushdown surface shared by the official hook
-  * (`SupportsPushDownRequiredColumns.pruneColumns`, exercised if Spark
-  * ever prunes streaming scans itself) and the [[WarcStreamPruning]]
-  * optimizer rule (which prunes per micro-batch today): readSchema()
-  * reflects the pruned columns, partitions emit rows in exactly that
-  * shape, and when `html` is pruned the record parser never copies a
-  * body — a url-count over TB of chunks stops materializing page bytes
-  * (the scan cost at crawl scale).
+/** The scan of both read modes, and the required-column pushdown surface.
+  * Batch: Spark's `V2ScanRelationPushDown` calls `pruneColumns`, then
+  * `toBatch` plans one partition per chunk file. Micro-batch: Spark
+  * prunes no streaming scan, so [[WarcStreamPruning]] narrows `required`
+  * during each batch's optimization. Either way readSchema() reflects
+  * the pruned columns, partitions emit rows in exactly that shape, and
+  * when `html` is pruned the record parser never copies a body — a
+  * url-count over TB of chunks stops materializing page bytes (the scan
+  * cost at crawl scale).
   */
 private[sources] final class WarcScan(path: String,
                                       val maxFilesPerTrigger: Option[Int] = None)
-    extends ScanBuilder with Scan with SupportsPushDownRequiredColumns {
+    extends ScanBuilder with Scan with Batch with SupportsPushDownRequiredColumns {
   @volatile private[sources] var required: StructType = WarcStreamSource.Schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan = this
   override def readSchema(): StructType = required
-  override def toBatch: Batch = throw new UnsupportedOperationException(
-    "batch reads go through graft.sources.Warc.read")
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] =
+    WarcStreamSource.listChunks(path, WarcStreamSource.driverConf())
+      .map(f => WarcChunkPartition(f): InputPartition).toArray
+
+  // one conf snapshot per scan, captured at planning time on the driver
+  // and shipped ONCE via the reader factory (embedding it per partition
+  // would serialize the whole Hadoop conf numFiles times)
+  private lazy val confMap: Map[String, String] =
+    Warc.hadoopConfMap(org.apache.spark.sql.SparkSession.active)
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val cm = confMap // driver-side capture, serialized once with the factory
+    // read the CURRENT required schema: a micro-batch's pruning rule runs
+    // during that batch's optimization, i.e. before this call
+    val req = required
+    WarcStreamSource.readSchemaProbe(req)
+    new PartitionReaderFactory {
+      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+        new WarcChunkReader(partition.asInstanceOf[WarcChunkPartition].file, cm, req)
+    }
+  }
+
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    // streaming scans never see Catalyst's batch pushdown rule (it
+    // matches DataSourceV2Relation only), so the stream self-registers
+    // the per-micro-batch pruning rule on the active session — zero user
+    // config (GraftExtensions also injects it for spark.sql.extensions
+    // deployments); a batch read leaves the optimizer list as it is
+    WarcStreamPruning.install(org.apache.spark.sql.SparkSession.active)
     new WarcMicroBatchStream(path, this)
+  }
 }
 
 /** Offset = highest chunk-file path ingested + how many files sit at or
@@ -160,12 +185,6 @@ private object WarcOffset {
 
 private final class WarcMicroBatchStream(dir: String, scan: WarcScan)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  // one conf snapshot per stream, captured at planning time on the
-  // driver and shipped ONCE via the reader factory (embedding it per
-  // partition would serialize the whole Hadoop conf numFiles times)
-  private lazy val confMap: Map[String, String] =
-    Warc.hadoopConfMap(org.apache.spark.sql.SparkSession.active)
 
   // the listing every offset was computed FROM, so planInputPartitions
   // can use the exact same snapshot — a file landing between
@@ -244,25 +263,15 @@ private final class WarcMicroBatchStream(dir: String, scan: WarcScan)
     batch.map(f => WarcChunkPartition(f): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val cm = confMap // driver-side capture, serialized once with the factory
-    // read the scan's CURRENT required schema: the pruning rule runs
-    // during each micro-batch's optimization, i.e. before this call
-    val req = scan.required
-    WarcStreamSource.readSchemaProbe(req)
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new WarcChunkReader(partition.asInstanceOf[WarcChunkPartition].file, cm, req)
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
 }
 
 private final case class WarcChunkPartition(file: String) extends InputPartition
 
 /** Streams one chunk file's records as InternalRows (one gzip member at
-  * a time — the same O(largest record) bound as the batch reader),
-  * shaped to the PRUNED schema: only requested fields are converted, and
-  * a pruned `html` is never even copied out of the inflate buffer.
+  * a time), shaped to the PRUNED schema: only requested fields are
+  * converted, and a pruned `html` is never even copied out of the
+  * inflate buffer.
   */
 private final class WarcChunkReader(file: String, confMap: Map[String, String],
                                     required: StructType)

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.extract.Extractor
-import graft.fixtures.PageHtml
+import graft.fixtures.{Corpus, PageHtml}
 import graft.pipeline.{GraftMetricsListener, StageRec}
 import graft.util.{CacheScope, Staging}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -181,7 +181,7 @@ object Probe {
     val sfDir = args.headOption.getOrElse(DefaultSf)
     args.lift(1).getOrElse("1,4,16").split(",").map(_.toInt).foreach { k =>
       val dir = stageDocs(spark, sfDir, k, giantWords = 0)
-      val docs = spark.read.parquet(s"$dir/documents.parquet").count()
+      val docs = Corpus.documents(spark, dir).count()
       Seq("d_exact_canonical", "d_minhash_lsh", "d_simhash_pairs", "c_curate", "d_paragraph",
         "d_bloom_incremental", "d_ngram_spans", "c_decontaminate").foreach { q =>
         emit(repLine("scale", q, 1, measure(spark, q, dir), "scale" -> k, "docs" -> docs))
@@ -199,7 +199,7 @@ object Probe {
     import spark.implicits._
     val giantWords = args.lift(2).fold(1000000)(_.toInt)
     val dir = stageDocs(spark, args.headOption.getOrElse(DefaultSf), args.lift(1).fold(32)(_.toInt), giantWords)
-    val docs = spark.read.parquet(s"$dir/documents.parquet").count()
+    val docs = Corpus.documents(spark, dir).count()
     // unique words: nothing of the giant document is deduplicated away
     Seq(("d_paragraph", "n_paras_kept", (giantWords + 9) / 10), ("d_ngram_spans", "n_kept", giantWords))
       .foreach { case (q, keptCol, expected) =>
@@ -226,8 +226,7 @@ object Probe {
     Staging.keyedArtifact(s"probe-x$k-g$giantWords", sfDir, version = 1)(
         p => Files.exists(p.resolve("documents.parquet/_SUCCESS"))) { tmp =>
       import spark.implicits._
-      val replicas = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select($"doc_id", $"text", $"lang")
+      val replicas = Corpus.documents(spark, sfDir)
         .crossJoin(spark.range(k).toDF("r"))
         .as[(Long, String, String, Long)]
         .map { case (id, text, lang, r) =>

@@ -78,6 +78,19 @@ class LintSpec extends AnyFunSuite {
     assert(streamListeners.isEmpty, s"StreamingQueryListener outside Bench/Probe: $streamListeners")
   }
 
+  test("one WARC record reader and one documents reader in src/main") {
+    def text(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    // Warc.scala holds the definition; the warc-stream scan is the one caller
+    val recordReads = main.flatMap(p =>
+      """\brecordsInFile\s*\(""".r.findAllIn(text(p)).map(_ => p.getFileName.toString)).sorted
+    assert(recordReads == Seq("Warc.scala", "WarcStreamSource.scala"),
+      s"Warc.recordsInFile must be called only by WarcStreamSource.scala: $recordReads")
+    val documentsReads = main.filterNot(_.getFileName.toString == "Corpus.scala")
+      .filter(p => """\.read\b[^;{}]{0,160}?documents\.parquet""".r.findFirstIn(text(p)).nonEmpty)
+    assert(documentsReads.isEmpty, s"documents.parquet read outside fixtures.Corpus.documents: $documentsReads")
+  }
+
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
     val bad = scalaSources.filterNot { p =>
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

@@ -262,20 +262,6 @@ class PipelineSpec extends AnyFunSuite {
       "added column must read null on pre-evolution snapshots")
   }
 
-  test("typed Aggregator digest matches the relational md5 digest (UDAF surface)") {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("string"), col("text")).as[(String, String)]
-    val typed = docs.select(graft.functions.DigestAggregator.toColumn).head()
-    val rel = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(concat(col("doc_id").cast("string"), lit(":"), col("text")).as("rec"))
-      .agg(count(lit(1)),
-        sum(pmod(conv(substring(md5(col("rec")), 1, 15), 16, 10).cast("long"),
-          lit(1000000007L)))).head()
-    assert(typed._1 == rel.getLong(0))
-    assert(typed._2 == rel.getLong(1))
-  }
-
   test("warc_day layout: partition pruning reaches the file scan") {
     val tbl = freshDir("pruned")
     Corpus.pages(spark, sfDir)

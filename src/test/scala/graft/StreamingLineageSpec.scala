@@ -149,4 +149,21 @@ class StreamingLineageSpec extends AnyFunSuite {
     assert(StreamingLineage.docs(spark, out).count() > 0)
     Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
   }
+
+  test("st_lineage restages a table whose committed epochs lack their records") {
+    val stLineage = SparkEntry.queries("st_lineage")
+    val rows = stLineage(spark, sfDir).count()
+    // the staged table's keyed path (an always-complete check only resolves it)
+    val tbl = graft.util.Staging.keyedArtifact("stlineage", sfDir,
+      graft.fixtures.PageHtml.CorpusVersion)(_ => true)(_ => ())
+    // what a writer without epoch records leaves behind
+    graft.util.Staging.deleteRec(Paths.get(tbl, "_metrics"))
+    assert(stLineage(spark, sfDir).count() == rows)
+    val epochs = Lineage.readManifestFull(tbl).epochs
+    assert(epochs.nonEmpty)
+    assert(metricsFiles(tbl) == epochs.map(e => s"epoch-$e.json"),
+      "the rebuilt table must hold one record per committed epoch")
+    val total = epochs.toSeq.map(e => MetricsRecord.read(epochRecord(tbl, e)).get("docs_total").asLong).sum
+    assert(total == rows, s"epoch records sum to $total docs, the table has $rows")
+  }
 }

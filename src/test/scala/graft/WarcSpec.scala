@@ -78,6 +78,37 @@ class WarcSpec extends AnyFunSuite {
     graft.util.Staging.deleteRec(java.nio.file.Paths.get(dir))
   }
 
+  test("one reader: batch reads are the warc-stream scan (pushdown, one task per chunk, missing dir)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warc-dsv2").toString
+    Warc.write(spark, Corpus.pages(spark, sfDir), dir, numFiles = 4)
+    val optimizers = spark.experimental.extraOptimizations
+    // the reader schemas the factories of one action are created with
+    def readSchemas[A](action: => A): (A, Seq[Seq[String]]) = {
+      val schemas = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[org.apache.spark.sql.types.StructType]())
+      val a = graft.sources.WarcTestAccess.withReadSchemaProbe(schemas.add(_))(action)
+      import scala.jdk.CollectionConverters._
+      (a, schemas.asScala.toList.map(_.fieldNames.toSeq))
+    }
+    val nonNull = Corpus.pages(spark, sfDir).where(col("html").isNotNull).count()
+    val (urls, urlSchemas) = readSchemas(Warc.read(spark, dir).select(col("url")).collect())
+    assert(urls.length == nonNull)
+    assert(urlSchemas.nonEmpty && urlSchemas.forall(_ == Seq("url")),
+      s"Spark's pushdown must reach the batch reader; reader schemas were $urlSchemas")
+    // a count needs no column at all: Spark prunes the scan to zero columns
+    val (n, countSchemas) = readSchemas(Warc.read(spark, dir).select(col("url")).count())
+    assert(n == nonNull)
+    assert(countSchemas.nonEmpty && countSchemas.forall(_.isEmpty),
+      s"a count must read no column; reader schemas were $countSchemas")
+    assert(spark.experimental.extraOptimizations == optimizers,
+      "a batch read must leave the session's optimizer list as it is")
+    assert(Warc.read(spark, dir).rdd.getNumPartitions == 4, "one task per chunk file")
+    val missing = Warc.read(spark, s"$dir/missing")
+    assert(missing.schema == graft.sources.WarcStreamSource.Schema)
+    assert(missing.count() == 0)
+    graft.util.Staging.deleteRec(java.nio.file.Paths.get(dir))
+  }
+
   test("gz reader streams member-by-member: 320 MB chunk, peak allocation = one record") {
     // ~2000 records × ~160 KB inflated ≈ 320 MB — far beyond any sane
     // per-task buffer. The member-size probe records every inflated
