@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
-import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
@@ -49,17 +51,35 @@ object StageRec {
   * publishes docs/s, MB/s and the extraction-failure rate (north_star).
   * `ExtractJob` (per run), `StreamingLineage` (per epoch) and
   * `tools.Probe` record through it.
+  *
+  * A stage is named after the SQL execution its job ran for (the action's
+  * call site, e.g. `localCheckpoint at Dedup.scala:…`): AQE submits query
+  * stages from a pool thread, so their own `StageInfo.name` is the pool's
+  * `CompletableFuture` frame. Stages outside any execution keep it.
   */
 final class GraftMetricsListener extends SparkListener {
 
   private val stages = new ConcurrentLinkedQueue[StageRec]()
   private val lastJobEnded = new AtomicInteger(-1)
+  private val executionNames = new ConcurrentHashMap[String, String]()
+  private val stageExecution = new ConcurrentHashMap[Int, String]()
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => executionNames.put(s.executionId.toString, s.description)
+    case _                                 =>
+  }
+
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .foreach(id => js.stageIds.foreach(stageExecution.put(_, id)))
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val si = sc.stageInfo
     val m = si.taskMetrics
+    val name = Option(stageExecution.get(si.stageId))
+      .flatMap(id => Option(executionNames.get(id))).getOrElse(si.name)
     stages.add(StageRec(
-      si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
+      si.stageId, name.takeWhile(_ != '\n'), si.numTasks,
       m.executorRunTime,
       m.inputMetrics.bytesRead, m.inputMetrics.recordsRead,
       m.outputMetrics.bytesWritten, m.shuffleReadMetrics.totalBytesRead,

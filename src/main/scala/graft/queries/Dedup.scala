@@ -3,6 +3,8 @@ package graft.queries
 import graft.fixtures.Corpus.documents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+import scala.collection.mutable
 
 /** Training-data deduplication operators over the `documents` table:
   * exact (hash group), n-gram Jaccard (the exact oracle), MinHash+LSH
@@ -14,9 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** test probe: rounds the last d_components run took to converge (the
-    * job-count spec derives its per-iteration budget from this)
-    */
+  /** test probe: contraction rounds of the last d_components run */
   @volatile private[graft] var lastComponentsIters: Int = 0
 
   /** 60-bit md5 fingerprint of a key — bit-identical in DuckDB */
@@ -39,7 +39,8 @@ object Dedup {
       )).as("shingle"))
 
   /** exact-verified pairs (a_id, b_id, jacc) with jaccard >= 0.8, from a
-    * given candidate universe (cands = null → all pairs via shingle join).
+    * given candidate universe (cands = None → all pairs via shingle join);
+    * unsorted, since d_components would throw the sort away.
     */
   private def verifiedPairs(sh: DataFrame, cands: Option[DataFrame]): DataFrame = {
     // cached: the (doc_id, n) size table joins BOTH the a_id and b_id
@@ -71,10 +72,8 @@ object Dedup {
       .where(lit(9) * col("c") >= lit(4) * (col("na") + col("nb"))) // jacc >= 0.8, integer-exact
       .select(col("a_id"), col("b_id"),
         round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6).as("jacc"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 
-  private val NumPerms = 64
   private val Bands = 16 // r = 4 rows/band: P(miss | j=0.95) ≈ 1e-12, still ~0 at any corpus size we run
 
   /** Relational forms of the typed hash aggregators: `groupBy(doc_id)`
@@ -250,6 +249,38 @@ object Dedup {
       .select(col("a_id"), col("b_id"))
   }
 
+  /** One union-find contraction round of d_components over a symmetric
+    * edge list (u, v), partitioned by u so a task holds all edges of the
+    * vertices it owns: each local component (root = its minimum id) becomes
+    * the edges (x, root), (root, x). Task state is O(vertices in the task).
+    */
+  private def contract(s: SparkSession, edges: DataFrame,
+      unsettled: LongAccumulator, vertices: LongAccumulator): DataFrame = {
+    import s.implicits._
+    edges.repartition(col("u")).as[(Long, Long)].mapPartitions { rows =>
+      val parent = mutable.LongMap.empty[Long]
+      val lo, hi = mutable.LongMap.empty[Long] // min and max neighbour of each owned u
+      def find(x0: Long): Long = { // path halving
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      rows.foreach { case (u, v) =>
+        val ru = find(parent.getOrElseUpdate(u, u))
+        val rv = find(parent.getOrElseUpdate(v, v))
+        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+        lo(u) = math.min(lo.getOrElse(u, v), v)
+        hi(u) = math.max(hi.getOrElse(u, v), v)
+      }
+      unsettled.add(lo.count { case (u, l) => !(l > u || (l < u && hi(u) == l)) })
+      vertices.add(lo.size)
+      parent.keys.toArray.iterator.flatMap { x =>
+        val r = find(x)
+        if (r == x) Iterator.empty else Iterator((x, r), (r, x))
+      }
+    }.toDF("u", "v")
+  }
+
   /** Persisted LSH band-index lifecycle (the continuous-crawl contract,
     * mirroring Similarity.buildIndex/queryIndex): `buildBandIndex` writes
     * the index as parquet —
@@ -300,7 +331,7 @@ object Dedup {
         greatest(col("x_id"), col("y_id")).as("b_id"))
       .distinct()
     val shAll = s.read.parquet(s"$indexDir/shingles").union(shNew)
-    verifiedPairs(shAll, Some(cands))
+    verifiedPairs(shAll, Some(cands)).orderBy(col("a_id"), col("b_id"))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -324,7 +355,8 @@ object Dedup {
     // (both self-join sides + the size table read them) and released at
     // the harness boundary like every other query-internal cache.
     "d_jaccard_pairs" -> ((s, dir) =>
-      verifiedPairs(graft.util.CacheScope.cached(shingles(documents(s, dir))), None)),
+      verifiedPairs(graft.util.CacheScope.cached(shingles(documents(s, dir))), None)
+        .orderBy(col("a_id"), col("b_id"))),
 
     // MinHash + LSH banding: 64-perm signatures from ONE string hash per
     // shingle (MinHashAggregator via udaf — map-side combining, no 64-way
@@ -334,7 +366,7 @@ object Dedup {
     // d_jaccard_pairs (same oracle): proves recall.
     "d_minhash_lsh" -> ((s, dir) => {
       val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
-      verifiedPairs(sh, Some(lshCandidates(sh)))
+      verifiedPairs(sh, Some(lshCandidates(sh))).orderBy(col("a_id"), col("b_id"))
     }),
 
     // INCREMENTAL dedup — the continuous-crawl shape, run through the
@@ -498,90 +530,52 @@ object Dedup {
       cosineVerified(corpus, cands)
     }),
 
-    // DUP-CLUSTER connected components — the transitive-closure step
-    // between pair generation and canonical selection: near-dup is not
-    // transitive (a~b, b~c ⇏ a~c), so clusters must be closed before one
-    // representative per cluster is kept. Iterative min-label propagation
-    // (the standard large-scale CC shape; converges in O(cluster
-    // diameter) rounds — tiny for dup clusters), each round one shuffle
-    // keyed on ids, lineage cut by localCheckpoint so plans stay bounded.
-    // DuckDB verifies against a true transitive closure (recursive CTE).
-    // Edges come from the LSH band-candidate path (the 10^12-scale
-    // generator — identical pair set to the all-pairs baseline, proven by
-    // the shared d_minhash_lsh/d_jaccard_pairs oracle), so no all-pairs
-    // shingle self-join appears anywhere in this query (plan-asserted).
-    // Output: every doc with its cluster id (min doc_id in the cluster)
-    // and the is_canonical marker that curation keeps.
+    // DUP-CLUSTER connected components: near-dup is not transitive (a~b,
+    // b~c ⇏ a~c), so clusters are closed before one representative per
+    // cluster is kept (DuckDB checks a recursive-CTE closure). Edges come
+    // from the LSH band path: no all-pairs shingle self-join (plan-asserted).
+    // Union-find contraction (`contract`), one shuffle and one eager
+    // localCheckpoint per round, until a round's input was settled: every
+    // vertex a star centre (all neighbours greater) or a leaf (one distinct
+    // neighbour, smaller), i.e. stars around each cluster's minimum. Their
+    // rows with v < u are the labels (distinct: the tasks of a leaf and of
+    // its centre both emit the edge).
+    // Bound: a round neither merges nor splits components. With m(x) = min
+    // of x and its neighbours, y's task puts all of y's neighbours under a
+    // root <= m(y), so m never grows, and the vertices of a component C not
+    // adjacent to its minimum (at most |C| - 2) lose at least one member per
+    // round (one of them borders a vertex that is). Then one round emits the
+    // star and one finds it settled: at most |C| <= n rounds, n = the vertex
+    // count of round 1 (1 without edges). A retried task only over-counts:
+    // at worst one extra no-op round (a settled round adds zero), never an
+    // early exit; a larger n only loosens the bound.
+    // Output: (doc_id, comp = min doc_id of its cluster, is_canonical).
     "d_components" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = componentEdges(s, dir)
-      // both directions via ONE explode instead of union(pairs, swap):
-      // the union form executed the entire candidate-verify subtree once
-      // per branch inside the single cache-materialization job — same
-      // rows, half the edge-build work
-      val edges = pairs
+      // both directions via ONE explode: round 1 reads the edge subtree once
+      var edges = componentEdges(s, dir)
         .select(explode(array(
           struct(col("a_id").as("u"), col("b_id").as("v")),
           struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v")).cache()
-      try {
-        // Propagate ONLY over vertices that appear in an edge: an
-        // isolated doc can never change label (no neighbor rows →
-        // min(old) = own id), so carrying the whole corpus through every
-        // round's union+groupBy+checkpoint was O(|corpus|) per iteration
-        // for rows that provably never move. Edge vertices are the dup
-        // docs only — ≪ corpus at any real dup rate — and the final
-        // left join below restores isolated docs with comp = doc_id,
-        // exactly the label the full loop assigned them.
-        // distinct (one row per vertex — REQUIRED: duplicate label rows
-        // would amplify each round's neighbor join by vertex degree) but
-        // NOT checkpointed: the subtree below is just a projection of the
-        // cached edge table, so materializing it separately was a whole
-        // extra action before the loop began; round 1's own checkpoint
-        // bounds the lineage.
-        var labels = edges.select(col("u").as("doc_id")).distinct()
-          .withColumn("comp", col("doc_id"))
-        var changed = 1L
-        var iters = 0
-        while (changed > 0 && iters < 50) {
-          val acc = s.sparkContext.longAccumulator(s"graft-cc-changed")
-          val nbr = edges.join(labels, edges("v") === labels("doc_id"))
-            .select(col("u").as("doc_id"), col("comp"))
-          // The convergence signal rides INSIDE the propagation job — no
-          // second count job per round: each doc's OLD label travels
-          // through the same aggregation (the labels side contributes
-          // exactly one row per doc; neighbor rows carry a MaxValue
-          // sentinel, so min(old) IS the old label), and the typed map
-          // bumps an accumulator per changed label while the eager
-          // localCheckpoint materializes the round. A retried task can
-          // only over-count — the worst case is one extra (no-op) round,
-          // never a premature exit, since a converged round adds zero.
-          val next = labels
-            .select(col("doc_id"), col("comp"), col("comp").as("old"))
-            .union(nbr.select(col("doc_id"), col("comp"),
-              lit(Long.MaxValue).as("old")))
-            .groupBy(col("doc_id"))
-            .agg(min(col("comp")).as("comp"), min(col("old")).as("old"))
-            .as[(Long, Long, Long)]
-            .map { case (id, comp, old) =>
-              if (comp != old) acc.add(1L)
-              (id, comp)
-            }
-            .toDF("doc_id", "comp")
-            .localCheckpoint()
-          changed = acc.value
-          labels = next
-          iters += 1
-        }
-        lastComponentsIters = iters
-        require(changed == 0, s"label propagation did not converge in $iters rounds")
-        documents(s, dir).select(col("doc_id"))
-          .join(labels.withColumnRenamed("comp", "ecomp"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("ecomp"), col("doc_id")).as("comp"))
-          .withColumn("is_canonical", (col("doc_id") === col("comp")).cast("int"))
-          .orderBy(col("doc_id"))
-      } finally edges.unpersist()
+        .select(col("e.u").as("u"), col("e.v").as("v"))
+      val vertices = s.sparkContext.longAccumulator("graft-cc-vertices")
+      var unsettled, bound = 1L
+      var iters = 0
+      while (unsettled > 0 && iters < bound) {
+        val acc = s.sparkContext.longAccumulator("graft-cc-unsettled")
+        edges = contract(s, edges, acc, vertices).localCheckpoint()
+        unsettled = acc.value
+        if (iters == 0) bound = math.max(vertices.value, 1L)
+        iters += 1
+      }
+      lastComponentsIters = iters
+      require(unsettled == 0, s"union-find contraction did not converge in $iters rounds")
+      val labels = edges.where(col("v") < col("u"))
+        .select(col("u").as("doc_id"), col("v").as("ecomp")).distinct()
+      documents(s, dir).select(col("doc_id"))
+        .join(labels, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("ecomp"), col("doc_id")).as("comp"))
+        .withColumn("is_canonical", (col("doc_id") === col("comp")).cast("int"))
+        .orderBy(col("doc_id"))
     }),
 
     // INCREMENTAL EXACT dedup through the persisted Bloom index — the

@@ -5,6 +5,7 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.scalatest.funsuite.AnyFunSuite
+import SparkSessionTestBase.withConf
 
 /** Proves the custom Expression keeps whole-stage codegen alive: the
   * generated Java must compile (codegen.fallback disabled would throw
@@ -18,9 +19,7 @@ class CodegenSpec extends AnyFunSuite {
 
   test("extract_content participates in whole-stage codegen (no fallback)") {
     GraftFunctions.register(spark)
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false") // fail loudly instead of interpreting
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") { // fail loudly instead of interpreting
       val tmp = java.nio.file.Files.createTempDirectory("graft-cg").toString
       Corpus.pages(spark, sfDir).write.mode("overwrite").parquet(tmp)
       val df = spark.read.parquet(tmp)
@@ -33,19 +32,12 @@ class CodegenSpec extends AnyFunSuite {
       assert(wsc.nonEmpty, s"expected a WholeStageCodegen span:\n${df.queryExecution.executedPlan}")
       val inSpan = wsc.exists(_.toString.contains("extract_content"))
       assert(inSpan, s"extract_content must be inside the codegen span:\n${wsc.mkString("\n")}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None    => spark.conf.unset("spark.sql.codegen.fallback")
-      }
     }
   }
 
   test("nfc_normalize participates in whole-stage codegen and is correct") {
     GraftFunctions.register(spark)
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       import spark.implicits._
       // through a parquet scan (a LocalTableScan constant-folds the
       // expression away before any codegen stage exists); inputs are
@@ -65,11 +57,6 @@ class CodegenSpec extends AnyFunSuite {
       // null passthrough
       assert(Seq[String](null).toDF("s")
         .select(call_function("nfc_normalize", col("s"))).head().isNullAt(0))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None    => spark.conf.unset("spark.sql.codegen.fallback")
-      }
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
+import SparkSessionTestBase.withConf
 
 /** Physical-plan shape assertions — the "is this the plan you'd want at
   * 100 TB" checks: broadcast joins for small dims, bucketed co-located
@@ -21,37 +22,37 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join co-located: zero shuffle exchanges") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    try {
-      spark.sql("DROP TABLE IF EXISTS li_bucketed")
-      spark.sql("DROP TABLE IF EXISTS ord_bucketed")
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").saveAsTable("li_bucketed")
-      spark.read.parquet(s"$sfDir/orders.parquet")
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").saveAsTable("ord_bucketed")
-      val j = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("l_quantity")).as("q"))
-      j.collect() // force execution through AQE
-      // AQE query stages hide subtrees from collect() — assert on the
-      // final plan string instead
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected sort-merge join:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"scans must use buckets:\n$plan")
-      // the ONLY exchange allowed is the groupBy's (on o_orderpriority);
-      // neither join key may be re-shuffled — bucketing co-locates them
-      val badExchange = plan.linesIterator.exists(l =>
-        l.contains("Exchange hashpartitioning") &&
-          (l.contains("l_orderkey") || l.contains("o_orderkey")))
-      assert(!badExchange, s"bucketed join must not shuffle either side:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS li_bucketed")
-      spark.sql("DROP TABLE IF EXISTS ord_bucketed")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
+      try {
+        spark.sql("DROP TABLE IF EXISTS li_bucketed")
+        spark.sql("DROP TABLE IF EXISTS ord_bucketed")
+        spark.read.parquet(s"$sfDir/lineitem.parquet")
+          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .mode("overwrite").saveAsTable("li_bucketed")
+        spark.read.parquet(s"$sfDir/orders.parquet")
+          .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .mode("overwrite").saveAsTable("ord_bucketed")
+        val j = spark.table("li_bucketed")
+          .join(spark.table("ord_bucketed"),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(sum(col("l_quantity")).as("q"))
+        j.collect() // force execution through AQE
+        // AQE query stages hide subtrees from collect() — assert on the
+        // final plan string instead
+        val plan = j.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin"), s"expected sort-merge join:\n$plan")
+        assert(plan.contains("Bucketed: true"), s"scans must use buckets:\n$plan")
+        // the ONLY exchange allowed is the groupBy's (on o_orderpriority);
+        // neither join key may be re-shuffled — bucketing co-locates them
+        val badExchange = plan.linesIterator.exists(l =>
+          l.contains("Exchange hashpartitioning") &&
+            (l.contains("l_orderkey") || l.contains("o_orderkey")))
+        assert(!badExchange, s"bucketed join must not shuffle either side:\n$plan")
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS li_bucketed")
+        spark.sql("DROP TABLE IF EXISTS ord_bucketed")
+      }
     }
   }
 
@@ -96,9 +97,8 @@ class PlanSpec extends AnyFunSuite {
     // carried a broadcast HINT it would broadcast regardless and this
     // plan would contain a BroadcastHashJoin; with plain equi-joins the
     // verify degrades to shuffle joins — the 10^12-candidate-rows shape
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val q = graft.queries.Dedup.defs("d_minhash_lsh")(spark, sfDir)
       val rows = q.collect()
       assert(rows.nonEmpty)
@@ -108,9 +108,6 @@ class PlanSpec extends AnyFunSuite {
       // and the result is unchanged vs the exact baseline (same oracle)
       val exact = graft.queries.Dedup.defs("d_jaccard_pairs")(spark, sfDir).collect()
       assert(rows.map(_.toString).toSet == exact.map(_.toString).toSet)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 
@@ -165,12 +162,11 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("bh#"), s"expected the band-bucket join:\n$plan")
   }
 
-  test("d_components: one action per propagation iteration (no count action)") {
+  test("d_components: one action per contraction round (no count action)") {
     // count ACTIONS (SQL executions), not raw scheduler jobs — parquet
     // footer reads and sort-sampling submit bookkeeping jobs that would
-    // blur the signal. The pre-fix shape ran a separate join+count action
-    // per round; the fix rides the convergence signal on an accumulator
-    // inside each round's localCheckpoint materialization.
+    // blur the signal. The convergence and vertex counts ride on
+    // accumulators inside each round's localCheckpoint materialization.
     val actions = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -191,15 +187,17 @@ class PlanSpec extends AnyFunSuite {
         last = actions.size(); spins += 1; Thread.sleep(100)
       }
       assert(rows.nonEmpty)
-      val iters = graft.queries.Dedup.lastComponentsIters
-      assert(iters >= 2, s"fixture must need real propagation, got $iters rounds")
+      // AQE coalesces the small edge set into one task: round 1 closes
+      // every cluster, round 2 finds the stars settled
+      val rounds = graft.queries.Dedup.lastComponentsIters
+      assert(rounds == 2, s"expected 2 contraction rounds on sf0.001, got $rounds")
       import scala.jdk.CollectionConverters._
       val names = actions.asScala.toList
       assert(!names.contains("count"),
         s"no per-round convergence count action may run, saw: $names")
-      // initial labels checkpoint + one per iteration + the final collect
-      assert(names.size <= iters + 2,
-        s"${names.size} actions for $iters iterations ($names)")
+      // one localCheckpoint per round + the final collect
+      assert(names.size <= rounds + 1,
+        s"${names.size} actions for $rounds rounds ($names)")
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -239,9 +237,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bloom probe prunes map-side before the hash join (no broadcast dependence)") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val idx = java.nio.file.Files.createTempDirectory("graft-bloom-plan").toString
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
       graft.queries.Dedup.buildExactIndex(spark, d, idx)
@@ -254,9 +251,6 @@ class PlanSpec extends AnyFunSuite {
       assert(!plan.contains("BroadcastHashJoin"),
         s"probe must not depend on broadcasting the hash table:\n$plan")
       graft.util.Staging.deleteRec(java.nio.file.Paths.get(idx))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 
@@ -266,18 +260,11 @@ class PlanSpec extends AnyFunSuite {
     // the hot host's shuffle partition and split it at runtime — the
     // 100 TB behavior, observed on the real plan, not just configured
     val s = spark
-    val restore = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> null,
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> null,
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> null,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> null)
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB") {
       // repartition(8) gives the join shuffle 8 mappers: AQE splits a
       // skewed reduce partition at map-output granularity, so a
       // single-mapper input (one parquet file) can never split — the
@@ -296,8 +283,6 @@ class PlanSpec extends AnyFunSuite {
         s"the hot-host join must be marked skew=true after AQE replan:\n$plan")
       assert(plan.contains("skewed"),
         s"expected an AQEShuffleRead skew split:\n$plan")
-    } finally restore.foreach { case (k, v) =>
-      if (v == null) s.conf.unset(k) else s.conf.set(k, v)
     }
   }
 

@@ -165,6 +165,55 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  /** d_components over a temp documents table where doc i is the words
+    * `stride * i until stride * i + len`; returns (comp per doc, rounds)
+    */
+  private def chainComponents(n: Int, stride: Int, len: Int): (Map[Long, Long], Int) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-chain")
+    try {
+      (0 until n).map(i => (i.toLong,
+          (stride * i until stride * i + len).map(w => s"w$w").mkString(" "), "en"))
+        .toDF("doc_id", "text", "lang").coalesce(1)
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      val comps = Dedup.defs("d_components")(spark, dir.toString)
+        .as[(Long, Long, Int)].collect().map(r => r._1 -> r._2).toMap
+      (comps, Dedup.lastComponentsIters)
+    } finally {
+      graft.util.CacheScope.releaseAll()
+      graft.util.Staging.deleteRec(dir)
+    }
+  }
+
+  // every doc touches an edge, so the derived round bound is n
+  private def assertOneComponent(n: Int, comps: Map[Long, Long], rounds: Int): Unit = {
+    assert(comps.size == n)
+    assert(comps.values.toSet == Set(0L), s"expected one component, got ${comps.values.toSet.size}")
+    assert(rounds >= 2 && rounds <= n, s"$rounds rounds, bound $n")
+  }
+
+  Seq(260, 520).foreach { n =>
+    test(s"d_components closes a $n-doc sliding-window chain (doc i = words i..i+37)") {
+      // neighbours up to 4 apart pass jaccard 0.8: diameter about n/4
+      val (comps, rounds) = chainComponents(n, 1, 38)
+      assertOneComponent(n, comps, rounds)
+    }
+  }
+
+  test("d_components closes a 260-doc path over several contraction rounds") {
+    // doc i = words 3i..3i+47: neighbours share 43 of 49 shingles (pass),
+    // docs two apart 40 of 52 (fail), so the diameter is n - 1. 16 fixed
+    // shuffle partitions spread the path over many tasks per round.
+    val n = 260
+    val (comps, rounds) = SparkSessionTestBase.withConf(
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "16") {
+      chainComponents(n, 3, 48)
+    }
+    assertOneComponent(n, comps, rounds)
+    assert(rounds >= 3, s"a 16-task path must need more than one closing round, got $rounds")
+  }
+
   test("Bloom exact-dedup index: build, probe finds exactly the planted copies, no-dup batch empty") {
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("graft-bloom-idx").toString

@@ -21,6 +21,21 @@ object SparkSessionTestBase {
     s
   }
 
+  /** Runs `body` with the given session conf keys set, then puts each key
+    * back as it was before: its previous explicit value, or unset.
+    */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val before = spark.conf.getAll
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally kv.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None    => spark.conf.unset(k)
+      }
+    }
+  }
+
   /** `GraftMetricsListener`s registered on the shared context right now
     * (listenerBus is private[spark]: public in bytecode, reached by
     * reflection) — the leak check of every listener-registering path
