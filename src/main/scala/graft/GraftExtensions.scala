@@ -1,38 +1,22 @@
 package graft
 
-import graft.functions.{ExtractContent, NfcNormalize}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Cluster-deployment registration route: with
   * `--conf spark.sql.extensions=graft.GraftExtensions` every session on
   * the cluster — including pure-SQL users (thriftserver, notebooks) —
   * gets `extract_content` without any per-session `register()` call.
-  * The injected builder is the SAME native Catalyst expression the
-  * programmatic path uses (`GraftFunctions.register` stays for embedded
-  * use on an existing session).
+  * Both routes inject the same builders, from `GraftFunctions.functions`
+  * (`GraftFunctions.register` stays for embedded use on an existing
+  * session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("extract_content"),
-      new ExpressionInfo(classOf[ExtractContent].getName, "extract_content"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 3)
-          throw new IllegalArgumentException(
-            s"extract_content requires exactly 3 arguments (url, html, lang), got ${exprs.length}")
-        ExtractContent(exprs(0), exprs(1), exprs(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"nfc_normalize requires exactly 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs(0))
-      }))
+    GraftFunctions.functions.foreach(f => ext.injectFunction(
+      (FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build)))
     // streaming required-column pushdown for the warc-stream connector:
     // Catalyst's V2ScanRelationPushDown never visits streaming scans, so
     // the rule rides the optimizer directly (no-op for plans without a

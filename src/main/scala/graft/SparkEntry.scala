@@ -55,7 +55,7 @@ object SparkEntry {
         // writer that kept no `_metrics/` is rebuilt, not reused
         val tbl = graft.util.Staging.keyedArtifact("stlineage", dir,
           graft.fixtures.PageHtml.CorpusVersion) { p =>
-          val epochs = graft.pipeline.Lineage.readManifestFull(p.toString).epochs
+          val epochs = graft.pipeline.Lineage.manifest(p.toString).epochs
           epochs.nonEmpty &&
             epochs.forall(e => java.nio.file.Files.exists(p.resolve(s"_metrics/epoch-$e.json")))
         } {

@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.extract.Extractor
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{conv, md5, substring}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -102,18 +103,38 @@ case class ExtractContent(url: Expression, html: Expression, lang: Expression)
     copy(url = newFirst, html = newSecond, lang = newThird)
 }
 
-/** Session-side registration so `extract_content` is callable from SQL and
-  * via `call_function` from the Column API.
+/** The engine's SQL functions and the Column expressions its queries
+  * share.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_content",
-      (exprs: Seq[Expression]) => ExtractContent(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0)),
-      "scala_udf")
+
+  /** One SQL function: its name, argument names and builder. */
+  final case class Fn(name: String, args: Seq[String], cls: Class[_ <: Expression],
+                      make: Seq[Expression] => Expression) {
+    def build(exprs: Seq[Expression]): Expression = {
+      if (exprs.length != args.length)
+        throw new IllegalArgumentException(s"$name requires exactly ${args.length} " +
+          s"argument${if (args.length == 1) "" else "s"} (${args.mkString(", ")}), got ${exprs.length}")
+      make(exprs)
+    }
   }
+
+  /** the one function table behind both registration routes: [[register]]
+    * on an existing session and `graft.GraftExtensions`
+    */
+  val functions: Seq[Fn] = Seq(
+    Fn("extract_content", Seq("url", "html", "lang"), classOf[ExtractContent],
+      e => ExtractContent(e(0), e(1), e(2))),
+    Fn("nfc_normalize", Seq("text"), classOf[NfcNormalize], e => NfcNormalize(e(0))))
+
+  /** Session-side registration so the functions are callable from SQL and
+    * via `call_function` from the Column API.
+    */
+  def register(spark: SparkSession): Unit = functions.foreach(f =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
+
+  /** 60-bit md5 fingerprint: the first 15 hex digits of md5(c) as a long,
+    * bit-identical to DuckDB's `('0x'||substr(md5(c),1,15))::BIGINT`.
+    */
+  def fp60(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 }

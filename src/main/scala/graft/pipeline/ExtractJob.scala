@@ -106,7 +106,7 @@ object ExtractJob {
     written.groupBy(col("pid")).agg(
       count(lit(1)).as("rows"),
       sum("in_bytes").as("bytes"),
-      sum(pmod(conv(substring(md5(rec), 1, 15), 16, 10).cast("long"), lit(1000000007L))).as("dig"),
+      sum(pmod(GraftFunctions.fp60(rec), lit(1000000007L))).as("dig"),
       sum(when(col("error").isNull, 1L).otherwise(0L)).as("ok"),
       sum(when(col("error") === "validation", 1L).otherwise(0L)).as("f_val"),
       sum(when(col("error") === "payload", 1L).otherwise(0L)).as("f_pay"),
@@ -153,14 +153,13 @@ object ExtractJob {
     try {
       val t0 = System.nanoTime()
 
-      val committed = Lineage.committedPids(cfg.outputDir)
+      val committed = Lineage.manifest(cfg.outputDir)
       val runPids: Seq[Int] = (0 until cfg.numPids)
-        .filterNot(committed)
+        .filterNot(committed.pids)
         .filter(p => cfg.limitPids.forall(_.contains(p)))
 
       if (runPids.isEmpty) {
-        return RunReport(Lineage.readManifest(cfg.outputDir)._1, 0, 0, 0, 0, 0, 0,
-          (System.nanoTime() - t0) / 1e9)
+        return RunReport(committed.snapshot, 0, 0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1e9)
       }
 
       val withPid = pages
@@ -191,8 +190,7 @@ object ExtractJob {
           case None    => (p, 0L, 0L, "0")
         }
       }.toDF("partition_id", "rows", "bytes", "digest")
-      Lineage.commit(spark, cfg.outputDir, lineageRows)
-      val snap = Lineage.readManifest(cfg.outputDir)._1
+      val snap = Lineage.commit(spark, cfg.outputDir, lineageRows).get
 
       writeReport(cfg.outputDir, s"run-$snap", snap, runPids.size, agg, t0, listener)
     } finally spark.sparkContext.removeSparkListener(listener)

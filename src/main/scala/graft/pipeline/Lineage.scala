@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.node.MissingNode
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Checkpointed per-partition lineage + snapshot-style atomic commit
@@ -27,6 +30,8 @@ import scala.jdk.CollectionConverters._
   */
 object Lineage {
 
+  private val BaseCols = Seq("partition_id", "rows", "bytes", "digest")
+
   private def manifestPath(outputDir: String): Path = Paths.get(outputDir, "_lineage", "manifest.json")
 
   /** Full manifest state. `epochs` tracks streaming micro-batches already
@@ -39,41 +44,29 @@ object Lineage {
   final case class Manifest(snapshot: Long, pids: Set[Int], epochs: Set[Long],
                             schemas: Map[Long, Seq[String]])
 
-  def readManifestFull(outputDir: String): Manifest = {
+  /** The committed manifest: empty when there is none, or when its bytes
+    * are not JSON (a safe full reprocess). Fields are read by name, so
+    * field order never matters, and legacy manifests (snapshot and pids
+    * only) read with empty epochs/schemas.
+    */
+  def manifest(outputDir: String): Manifest = {
     val p = manifestPath(outputDir)
-    if (!Files.exists(p)) return Manifest(0L, Set.empty, Set.empty, Map.empty)
-    val s = new String(Files.readAllBytes(p), "UTF-8")
-    // minimal parser for our own writer's format:
-    // {"snapshot":N,"committed_pids":[..],"epochs":[..],
-    //  "schemas":{"1":["a","b"],..}} — field-keyed regexes, so unknown
-    // fields and field order never matter, and legacy manifests (pids
-    // only) parse with empty epochs/schemas
-    def longs(field: String): Seq[Long] =
-      (s"""\"$field\"\\s*:\\s*\\[([0-9,\\s]*)\\]""").r.findFirstMatchIn(s)
-        .map(_.group(1)).getOrElse("")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-    val snap = "\"snapshot\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong).getOrElse(0L)
-    // legacy manifests wrote committed_pids as the only bracket list; the
-    // named regex still matches them (the field name was the same)
-    val pids = longs("committed_pids").map(_.toInt).toSet
-    val epochs = longs("epochs").toSet
-    val schemas = "\"(\\d+)\"\\s*:\\s*\\[([^\\]]*)\\]".r.findAllMatchIn(s)
-      .map { m =>
-        m.group(1).toLong ->
-          "\"([^\"]*)\"".r.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq
-      }.toMap
-    Manifest(snap, pids, epochs, schemas)
+    val n = if (!Files.exists(p)) MissingNode.getInstance()
+      else try Json.mapper.readTree(Files.readAllBytes(p))
+      catch { case _: JsonProcessingException => MissingNode.getInstance() }
+    def longs(field: String): Set[Long] = n.path(field).elements().asScala.map(_.asLong).toSet
+    val schemas = n.path("schemas").properties().asScala.map { e =>
+      e.getKey.toLong -> e.getValue.elements().asScala.map(_.asText).toSeq
+    }.toMap
+    Manifest(n.path("snapshot").asLong(0L), longs("committed_pids").map(_.toInt), longs("epochs"), schemas)
   }
 
   private def writeManifest(outputDir: String, m: Manifest): Unit = {
-    val schemasJson = m.schemas.toSeq.sortBy(_._1).map { case (k, cols) =>
-      s""""$k":[${cols.map(c => s""""$c"""").mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    val json = s"""{"snapshot":${m.snapshot},""" +
-      s""""committed_pids":[${m.pids.toSeq.sorted.mkString(",")}],""" +
-      s""""epochs":[${m.epochs.toSeq.sorted.mkString(",")}],""" +
-      s""""schemas":$schemasJson}"""
+    val json = Json.write(ListMap(
+      "snapshot" -> m.snapshot,
+      "committed_pids" -> m.pids.toSeq.sorted,
+      "epochs" -> m.epochs.toSeq.sorted,
+      "schemas" -> ListMap.from(m.schemas.toSeq.sortBy(_._1).map { case (k, cols) => k.toString -> cols })))
     val dir = Paths.get(outputDir, "_lineage")
     Files.createDirectories(dir)
     val tmp = dir.resolve(s"manifest.tmp.${m.snapshot}")
@@ -81,26 +74,6 @@ object Lineage {
     Files.move(tmp, manifestPath(outputDir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
-
-  /** (snapshot counter, committed pids) — (0, empty) when no manifest. */
-  def readManifest(outputDir: String): (Long, Set[Int]) = {
-    val m = readManifestFull(outputDir)
-    (m.snapshot, m.pids)
-  }
-
-  def committedPids(outputDir: String): Set[Int] = readManifest(outputDir)._2
-
-  /** Has streaming micro-batch `epochId` already been committed? (The
-    * foreachBatch replay guard.)
-    */
-  def epochCommitted(outputDir: String, epochId: Long): Boolean =
-    readManifestFull(outputDir).epochs.contains(epochId)
-
-  /** Writer schema recorded for snapshot `snap` (empty for legacy
-    * pre-schema-tracking snapshots).
-    */
-  def schemaAt(outputDir: String, snap: Long): Seq[String] =
-    readManifestFull(outputDir).schemas.getOrElse(snap, Nil)
 
   /** Single-writer enforcement: the commit protocol (dynamic partition
     * overwrite + manifest rename) is crash-safe but NOT multi-writer-safe
@@ -149,11 +122,17 @@ object Lineage {
   }
 
   /** Write the snapshot's lineage rows and atomically publish the new
-    * manifest. Rows go to a SNAPSHOT-KEYED subdirectory (`data/offset=N`,
-    * overwrite): a crash between the data write and the manifest rename
-    * leaves an orphan directory that (a) readers never see — table()/
-    * tableAt() bound reads by the COMMITTED snapshot — and (b) the retry
-    * overwrites in place, so no duplicate rows can ever accumulate.
+    * manifest; returns the new snapshot. Rows go to a SNAPSHOT-KEYED
+    * subdirectory (`data/offset=N`, overwrite): a crash between the data
+    * write and the manifest rename leaves an orphan directory that (a)
+    * readers never see — table()/tableAt() bound reads by the COMMITTED
+    * snapshot — and (b) the retry overwrites in place, so no duplicate
+    * rows can ever accumulate.
+    *
+    * A streaming micro-batch passes its `epoch`, which the manifest
+    * records: a foreachBatch REPLAY of an already-committed batch (crash
+    * between our commit and Spark's offset-log write) writes nothing and
+    * returns None — no duplicate lineage rows, no double-counted docs.
     *
     * SCHEMA EVOLUTION: the written columns are the four base lineage
     * fields plus any EXTRA columns the caller's frame carries; the
@@ -163,29 +142,10 @@ object Lineage {
     * snapshots < K — so a 100-TB table never rewrites history to add a
     * field.
     */
-  def commit(spark: SparkSession, outputDir: String, lineage: DataFrame): Unit = {
-    commitInternal(spark, outputDir, lineage, epoch = None)
-    ()
-  }
-
-  /** Streaming micro-batch commit: same snapshot protocol, plus the
-    * epoch id is recorded so a foreachBatch REPLAY of an already-
-    * committed batch (crash between our commit and Spark's offset-log
-    * write) is detected by [[epochCommitted]] and skipped — no duplicate
-    * lineage rows, no double-counted docs. Returns false when the epoch
-    * was already committed (nothing written).
-    */
-  def commitEpoch(spark: SparkSession, outputDir: String, lineage: DataFrame,
-                  epochId: Long): Boolean = {
-    if (epochCommitted(outputDir, epochId)) return false
-    commitInternal(spark, outputDir, lineage, epoch = Some(epochId))
-    true
-  }
-
-  private val BaseCols = Seq("partition_id", "rows", "bytes", "digest")
-
-  private def commitInternal(spark: SparkSession, outputDir: String,
-                             lineage: DataFrame, epoch: Option[Long]): Unit = {
+  def commit(spark: SparkSession, outputDir: String, lineage: DataFrame,
+             epoch: Option[Long] = None): Option[Long] = {
+    val m = manifest(outputDir)
+    if (epoch.exists(m.epochs)) return None
     // guard against the pre-snapshot layout (flat parquet with an offset
     // COLUMN directly under data/): mixing it with offset=N partition
     // dirs breaks Spark's partition discovery at read time — fail the
@@ -204,7 +164,6 @@ object Lineage {
         }
       } finally legacy.close()
     }
-    val m = readManifestFull(outputDir)
     val newSnap = m.snapshot + 1
     val extras = lineage.columns.filterNot(BaseCols.contains).toSeq
     val cols = BaseCols ++ extras
@@ -223,6 +182,7 @@ object Lineage {
       pids = m.pids ++ pids,
       epochs = m.epochs ++ epoch,
       schemas = m.schemas + (newSnap -> cols)))
+    Some(newSnap)
   }
 
   /** The lineage table as a DataFrame (latest snapshot per pid). */
@@ -240,13 +200,12 @@ object Lineage {
     * different writer schemas; `mergeSchema` unions them BY NAME, so a
     * column added in a later snapshot reads as null on earlier rows —
     * exactly Iceberg's add-column semantics, with the per-snapshot
-    * writer schema auditable via [[schemaAt]].
+    * writer schema auditable via [[manifest]].
     */
   def tableAt(spark: SparkSession, outputDir: String, snap: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val (committedSnap, _) = readManifest(outputDir)
-    val bound = math.min(snap, committedSnap)
+    val bound = math.min(snap, manifest(outputDir).snapshot)
     val raw = spark.read.option("mergeSchema", "true")
       .parquet(s"$outputDir/_lineage/data")
       .where(col("offset") <= bound)

@@ -1,12 +1,27 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+
+/** The one JSON codec of the engine's persisted records: the lineage
+  * manifest, the `_metrics` run and epoch records and the Probe lines.
+  * Records are built as ordered maps (`ListMap`), so keys keep the
+  * order they are listed in.
+  */
+object Json {
+  val mapper: ObjectMapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  def write(value: Any): String = mapper.writeValueAsString(value)
+}
 
 /** One completed stage's task metrics, summed over its tasks. */
 final case class StageRec(stageId: Int, name: String, tasks: Int,
@@ -17,31 +32,12 @@ final case class StageRec(stageId: Int, name: String, tasks: Int,
   /** the stage object of `_metrics/run-N.json`, `_metrics/epoch-N.json`
     * and every Probe line
     */
-  def toJson: String =
-    s"""{"stage":$stageId,"name":"${StageRec.jstr(name)}","tasks":$tasks,""" +
-      s""""executor_run_ms":$executorRunTimeMs,"input_bytes":$inputBytes,""" +
-      s""""input_records":$inputRecords,"output_bytes":$outputBytes,""" +
-      s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
-      s""""memory_spilled_bytes":$memorySpilledBytes,"disk_spilled_bytes":$diskSpilledBytes,""" +
-      s""""peak_execution_memory_bytes":$peakExecutionMemory}"""
-}
-
-object StageRec {
-  /** proper JSON string escape — stage names are arbitrary (first line of
-    * the call site): quotes, backslashes and control chars must all be
-    * escaped or the metrics file is invalid JSON
-    */
-  def jstr(s: String): String = s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case '\n'         => "\\n"
-    case '\r'         => "\\r"
-    case '\t'         => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  }
-
-  def toJson(stages: Seq[StageRec]): String = stages.map(_.toJson).mkString("[", ",", "]")
+  def fields: ListMap[String, Any] = ListMap("stage" -> stageId, "name" -> name, "tasks" -> tasks,
+    "executor_run_ms" -> executorRunTimeMs, "input_bytes" -> inputBytes,
+    "input_records" -> inputRecords, "output_bytes" -> outputBytes,
+    "shuffle_read_bytes" -> shuffleReadBytes, "shuffle_write_bytes" -> shuffleWriteBytes,
+    "memory_spilled_bytes" -> memorySpilledBytes, "disk_spilled_bytes" -> diskSpilledBytes,
+    "peak_execution_memory_bytes" -> peakExecutionMemory)
 }
 
 /** Per-stage observability (op C6, SURVEY.md §2.4) — the analog of the
@@ -125,10 +121,10 @@ final case class RunReport(
   def failureRate: Double =
     if (docsTotal > 0) (failedValidation + failedPayload + failedUnexpected).toDouble / docsTotal else 0.0
 
-  def toJson(stages: Seq[StageRec]): String =
-    s"""{"snapshot":$snapshot,"pids_processed":$pidsProcessed,"docs_ok":$docsOk,""" +
-      s""""failed_validation":$failedValidation,"failed_payload":$failedPayload,""" +
-      s""""failed_unexpected":$failedUnexpected,"docs_total":$docsTotal,""" +
-      s""""bytes_in":$bytesIn,"wall_sec":$wallSec,"docs_per_sec":$docsPerSec,""" +
-      s""""mb_per_sec":$mbPerSec,"failure_rate":$failureRate,"stages":${StageRec.toJson(stages)}}"""
+  def toJson(stages: Seq[StageRec]): String = Json.write(ListMap(
+    "snapshot" -> snapshot, "pids_processed" -> pidsProcessed, "docs_ok" -> docsOk,
+    "failed_validation" -> failedValidation, "failed_payload" -> failedPayload,
+    "failed_unexpected" -> failedUnexpected, "docs_total" -> docsTotal,
+    "bytes_in" -> bytesIn, "wall_sec" -> wallSec, "docs_per_sec" -> docsPerSec,
+    "mb_per_sec" -> mbPerSec, "failure_rate" -> failureRate, "stages" -> stages.map(_.fields)))
 }

@@ -88,7 +88,7 @@ object StreamingLineage {
   private def commitBatch(spark: SparkSession, batch: DataFrame,
                           outputDir: String, numPids: Int,
                           epochId: Long): Boolean = {
-    if (Lineage.epochCommitted(outputDir, epochId)) return false
+    if (Lineage.manifest(outputDir).epochs.contains(epochId)) return false
     val t0 = System.nanoTime()
     val listener = new GraftMetricsListener
     spark.sparkContext.addSparkListener(listener)
@@ -109,10 +109,9 @@ object StreamingLineage {
       val lineageRows = agg.map(r =>
           (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3).toString, epochId))
         .toSeq.toDF("partition_id", "rows", "bytes", "digest", "epoch")
-      val committed = Lineage.commitEpoch(spark, outputDir, lineageRows, epochId)
-      if (committed) ExtractJob.writeReport(outputDir, s"epoch-$epochId",
-        Lineage.readManifest(outputDir)._1, agg.length, agg, t0, listener)
-      committed
+      val snap = Lineage.commit(spark, outputDir, lineageRows, Some(epochId))
+      snap.foreach(ExtractJob.writeReport(outputDir, s"epoch-$epochId", _, agg.length, agg, t0, listener))
+      snap.isDefined
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.fixtures.Corpus.documents
+import graft.functions.GraftFunctions.fp60
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,10 +19,6 @@ import org.apache.spark.sql.functions._
   * — the same shape as d_exact_canonical.
   */
 object Curation {
-
-  /** 60-bit md5 fingerprint of a salted key — portable to DuckDB. */
-  private def fp60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   private def splitCol(idCol: Column): Column = {
     val b = pmod(fp60(concat(lit("split:"), idCol.cast("string"))), lit(100L))

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.fixtures.Corpus.documents
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.GraftFunctions.fp60
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import scala.collection.mutable
@@ -18,10 +19,6 @@ object Dedup {
 
   /** test probe: contraction rounds of the last d_components run */
   @volatile private[graft] var lastComponentsIters: Int = 0
-
-  /** 60-bit md5 fingerprint of a key — bit-identical in DuckDB */
-  private def fp60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** distinct 3-word shingles per doc. The input scan is spread first
     * (util.Scans — scale-adaptive, no-op on well-split sources): the
@@ -239,15 +236,18 @@ object Dedup {
       .select(col("a_id"), col("b_id")).distinct()
   }
 
-  /** Verified near-dup edge list built through the LSH candidate path —
-    * exposed for the d_components plan test (no all-pairs shingle join
-    * may appear anywhere in it).
+  /** The exact-verified near-dup pairs (a_id, b_id, jacc) of the LSH
+    * candidate path: the result of d_minhash_lsh and the edge list of
+    * d_components. Cached per documents dir, so a pass that runs both
+    * reads the pairs the first one built; released at the harness query
+    * boundary like every CacheScope entry. No all-pairs shingle join may
+    * appear anywhere in it (PlanSpec).
     */
-  private[graft] def componentEdges(s: SparkSession, dir: String): DataFrame = {
-    val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
-    verifiedPairs(sh, Some(lshCandidates(sh)))
-      .select(col("a_id"), col("b_id"))
-  }
+  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
+    graft.util.CacheScope.cached(s, s"lsh-pairs:$dir") {
+      val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
+      verifiedPairs(sh, Some(lshCandidates(sh)))
+    }
 
   /** One union-find contraction round of d_components over a symmetric
     * edge list (u, v), partitioned by u so a task holds all edges of the
@@ -364,10 +364,7 @@ object Dedup {
     // band-bucket equality join (shuffles only (band, hash) keys — the
     // 10^12-scale path), then exact-verified. Output is identical to
     // d_jaccard_pairs (same oracle): proves recall.
-    "d_minhash_lsh" -> ((s, dir) => {
-      val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
-      verifiedPairs(sh, Some(lshCandidates(sh))).orderBy(col("a_id"), col("b_id"))
-    }),
+    "d_minhash_lsh" -> ((s, dir) => lshPairs(s, dir).orderBy(col("a_id"), col("b_id"))),
 
     // INCREMENTAL dedup — the continuous-crawl shape, run through the
     // REAL persisted-index lifecycle: the already-crawled corpus A (even
@@ -552,7 +549,7 @@ object Dedup {
     // Output: (doc_id, comp = min doc_id of its cluster, is_canonical).
     "d_components" -> ((s, dir) => {
       // both directions via ONE explode: round 1 reads the edge subtree once
-      var edges = componentEdges(s, dir)
+      var edges = lshPairs(s, dir)
         .select(explode(array(
           struct(col("a_id").as("u"), col("b_id").as("v")),
           struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))

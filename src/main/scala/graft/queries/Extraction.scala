@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.fixtures.{Corpus, PageHtml}
 import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.fp60
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,10 +54,6 @@ object Extraction {
         col("r.error").as("error"),
         col("text"))
   }
-
-  /** 60-bit md5 fingerprint — portable to DuckDB bit-for-bit. */
-  private def fp60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** host index CASE shared with the DuckDB oracle (PageHtml.hostIndex) */
   private val hostSql: String =
@@ -386,7 +383,7 @@ object Extraction {
     // plus the latest-wins merge in SQL against documents alone.
     "x_schema_evolution" -> ((s, dir) => {
       val tbl = graft.util.Staging.keyedArtifact("linevo", dir, 1)(p =>
-        graft.pipeline.Lineage.readManifest(p.toString)._1 == 2L) { out =>
+        graft.pipeline.Lineage.manifest(p.toString).snapshot == 2L) { out =>
         val d = Corpus.documents(s, dir)
         val s1 = d.withColumn("partition_id", (col("doc_id") % 8).cast("int"))
           .groupBy(col("partition_id"))

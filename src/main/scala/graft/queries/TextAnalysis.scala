@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.fixtures.Corpus.documents
+import graft.functions.GraftFunctions.fp60
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -149,7 +150,7 @@ object TextAnalysis {
         .select(
           col("doc_id"),
           md5(col("text")).as("fp_md5"),
-          conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long").as("fp60"))
+          fp60(col("text")).as("fp60"))
         .orderBy(col("doc_id"))
     }),
 
@@ -249,9 +250,7 @@ object TextAnalysis {
         (pmod(col("id") * 2654435761L, lit(17L)) - 8).as("w"))
       docsSpread(s, dir)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .select(col("doc_id"), pmod(
-          conv(substring(md5(concat(lit("w:"), col("tok"))), 1, 15), 16, 10)
-            .cast("long"), lit(64L)).as("j"))
+        .select(col("doc_id"), pmod(fp60(concat(lit("w:"), col("tok"))), lit(64L)).as("j"))
         .join(broadcast(weights), "j")
         .groupBy(col("doc_id"))
         .agg(sum(col("w")).as("score"), count(lit(1)).as("n_tok"))

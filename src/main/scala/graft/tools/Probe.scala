@@ -3,16 +3,17 @@ package graft.tools
 import graft.SparkEntry
 import graft.extract.Extractor
 import graft.fixtures.{Corpus, PageHtml}
-import graft.pipeline.{GraftMetricsListener, StageRec}
+import graft.pipeline.{GraftMetricsListener, Json, StageRec}
 import graft.util.{CacheScope, Staging}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Dev probe: warm-JVM measurements, one JSON line per measured rep with
@@ -69,37 +70,28 @@ object Probe {
       case _ => throw new IllegalArgumentException("usage: Probe query|stream|kernel|scale|spill <args>")
     }
 
-  /** a value already rendered as JSON */
-  private final case class Raw(json: String)
-
-  private def line(fields: (String, Any)*): String = fields.map { case (k, v) =>
-    val js = v match {
-      case s: String => "\"" + StageRec.jstr(s) + "\""
-      case d: Double => "%.3f".formatLocal(java.util.Locale.ROOT, d)
-      case Raw(j) => j
-      case other => other.toString
-    }
-    s""""$k":$js"""
-  }.mkString("{", ",", "}")
+  private def line(fields: (String, Any)*): String = Json.write(ListMap(fields: _*))
 
   private final case class Measured(rows: Long, wallMs: Double, stages: Seq[StageRec])
 
   private def repLine(target: String, name: String, rep: Int, m: Measured, extra: (String, Any)*) =
     line(Seq[(String, Any)]("target" -> target, "name" -> name, "rep" -> rep, "wall_ms" -> m.wallMs,
-      "rows" -> m.rows) ++ extra :+ ("stages" -> Raw(StageRec.toJson(m.stages))): _*)
+      "rows" -> m.rows) ++ extra :+ ("stages" -> m.stages.map(_.fields)): _*)
 
-  /** Build SparkEntry query `q` over `dir` and count its rows with
-    * `rowCount` under a fresh listener, then release the caches it
-    * registered.
+  /** Build SparkEntry query `q` over `dir` and evaluate every output
+    * column of every row under a fresh listener (`count()` would let the
+    * optimizer prune reassembly aggregations down to a distinct count of
+    * doc_id), then release the caches it registered.
     */
-  private def measure(spark: SparkSession, q: String, dir: String,
-                      rowCount: DataFrame => Long = _.count()): Measured = {
+  private def measure(spark: SparkSession, q: String, dir: String): Measured = {
     val sc = spark.sparkContext
     val listener = new GraftMetricsListener
     sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
-      val rows = rowCount(SparkEntry.queries(q)(spark, dir))
+      val qe = SparkEntry.queries(q)(spark, dir).queryExecution
+      // inside a SQL execution, so the listener names its stages after it
+      val rows = SQLExecution.withNewExecutionId(qe, Some("probe"))(qe.toRdd.count())
       Measured(rows, (System.nanoTime() - t0) / 1e6, listener.settled(sc))
     } finally {
       sc.removeSparkListener(listener)
@@ -143,12 +135,11 @@ object Probe {
       val deadline = System.currentTimeMillis() + 10000
       while (ended.get < started.get && System.currentTimeMillis() < deadline) Thread.sleep(5)
       val batches = progress.asScala.toSeq.map { p =>
-        val dm = p.durationMs.asScala.toSeq.sortBy(-_._2.longValue)
-          .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        line("batch" -> p.batchId, "input_rows" -> p.numInputRows, "duration_ms" -> Raw(dm),
-          "state_operators" -> Raw(p.stateOperators.map(_.json).mkString("[", ",", "]")))
+        ListMap("batch" -> p.batchId, "input_rows" -> p.numInputRows,
+          "duration_ms" -> ListMap(p.durationMs.asScala.toSeq.sortBy(-_._2.longValue): _*),
+          "state_operators" -> p.stateOperators.toSeq.map(o => Json.mapper.readTree(o.json)))
       }
-      emit(repLine("stream", q, r, m, "batches" -> Raw(batches.mkString("[", ",", "]"))))
+      emit(repLine("stream", q, r, m, "batches" -> batches))
     } finally spark.streams.removeListener(listener)
   }
 
@@ -203,9 +194,7 @@ object Probe {
     // unique words: nothing of the giant document is deduplicated away
     Seq(("d_paragraph", "n_paras_kept", (giantWords + 9) / 10), ("d_ngram_spans", "n_kept", giantWords))
       .foreach { case (q, keptCol, expected) =>
-        // count() would let the optimizer prune the reassembly aggregation
-        // down to a distinct count of doc_id: evaluate every output column
-        val m = measure(spark, q, dir, _.queryExecution.toRdd.count())
+        val m = measure(spark, q, dir)
         val kept = SparkEntry.queries(q)(spark, dir).where(col("doc_id") === GiantId)
           .select(col(keptCol)).as[Long].head()
         CacheScope.releaseAll()

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Session-lifetime cache registry for query-internal `.cache()` calls
   * whose DataFrame outlives the builder function (the query result is
@@ -12,7 +12,8 @@ import org.apache.spark.sql.Dataset
   * the session. Within one query's lifetime (cold run, then warm rep)
   * reuse still works: Spark's cache manager keys on the logical plan, so
   * the warm rep's identical plan hits the entry registered by the cold
-  * run.
+  * run — except for plans holding a typed Aggregator, which never match
+  * across builds (see the keyed `cached`).
   */
 object CacheScope {
 
@@ -25,11 +26,26 @@ object CacheScope {
     ds
   }
 
+  private val byKey = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Dataset[_]]()
+
+  /** `cached(build)` once per session and `key` until the next
+    * releaseAll(): for a result several queries read whose plan the
+    * cache manager cannot match across builds (a typed Aggregator's
+    * buffer encoder resolves to fresh expressions on every build).
+    */
+  def cached[T](spark: SparkSession, key: String)(build: => Dataset[T]): Dataset[T] =
+    Option(byKey.get((spark, key))).getOrElse {
+      val ds = cached(build)
+      byKey.put((spark, key), ds)
+      ds
+    }.asInstanceOf[Dataset[T]]
+
   /** Unpersist every registered dataset (non-blocking) and clear the
     * registry. Safe to call between queries: already-released or
     * plan-shared entries unpersist idempotently.
     */
   def releaseAll(): Unit = {
+    byKey.clear()
     var d = live.poll()
     while (d != null) {
       try d.unpersist(false) catch { case _: Exception => () }

@@ -40,4 +40,11 @@ class ExtensionsSpec extends AnyFunSuite {
       prevActive.foreach(SparkSession.setActiveSession)
     }
   }
+
+  test("register() route checks arity like the extensions route") {
+    val spark = SparkSessionTestBase.spark
+    graft.functions.GraftFunctions.register(spark)
+    val e = intercept[Exception](spark.sql("SELECT extract_content('u')").collect())
+    assert(e.getMessage.contains("extract_content requires exactly 3 arguments"), e.getMessage)
+  }
 }

@@ -91,6 +91,25 @@ class LintSpec extends AnyFunSuite {
     assert(documentsReads.isEmpty, s"documents.parquet read outside fixtures.Corpus.documents: $documentsReads")
   }
 
+  test("one JSON encoder and one md5-60bit fingerprint in src/main") {
+    def text(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    // the frozen bench and correctness dump keep their own JSON
+    val handJson = main.filterNot(p => Set("Bench.scala", "Verify.scala")(p.getFileName.toString))
+      .filter(p => text(p).contains("def jstr") || text(p).contains("mkString(\"{\""))
+    assert(handJson.isEmpty, s"hand-built JSON outside graft.pipeline.Json: $handJson")
+    // Column-API uses only: comment lines are skipped, and an occurrence
+    // after an odd number of quotes on its line sits inside a SQL string
+    val fingerprints = main.flatMap { p =>
+      text(p).linesIterator.filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
+        .flatMap(l => "conv\\(substring\\(md5\\(".r.findAllMatchIn(l)
+        .filter(m => l.take(m.start).count(_ == '"') % 2 == 0)
+        .map(_ => p.getFileName.toString))
+    }
+    assert(fingerprints == Seq("ExtractContent.scala"),
+      s"the md5-60bit fingerprint must be GraftFunctions.fp60 alone: $fingerprints")
+  }
+
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
     val bad = scalaSources.filterNot { p =>
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

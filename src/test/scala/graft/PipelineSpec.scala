@@ -6,7 +6,7 @@ import graft.sources.Warc
 import graft.pipeline.ExtractJob.JobConfig
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Operator tests on local Spark (SURVEY.md §5.2 item 2): lineage commit,
   * resume-after-kill at partition granularity, partition pruning on the
@@ -40,8 +40,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(report.pidsProcessed == 16)
     assert(report.bytesIn > 0)
 
-    val (snap, committed) = Lineage.readManifest(out)
-    assert(snap == 1L && committed == (0 until 16).toSet)
+    val m = Lineage.manifest(out)
+    assert(m.snapshot == 1L && m.pids == (0 until 16).toSet)
     val lin = Lineage.table(spark, out)
     assert(lin.count() == 16)
     assert(lin.agg(sum("rows")).head.getLong(0) == nTotal)
@@ -85,12 +85,12 @@ class PipelineSpec extends AnyFunSuite {
     val half = (0 until 8).toSet
     val r1 = ExtractJob.run(spark, pages, JobConfig(out, numPids = 16, limitPids = Some(half)))
     assert(r1.pidsProcessed == 8)
-    assert(Lineage.committedPids(out) == half)
+    assert(Lineage.manifest(out).pids == half)
 
     // resume: full run must process ONLY the complement
     val r2 = ExtractJob.run(spark, pages, JobConfig(out, numPids = 16))
     assert(r2.pidsProcessed == 8)
-    assert(Lineage.committedPids(out) == (0 until 16).toSet)
+    assert(Lineage.manifest(out).pids == (0 until 16).toSet)
     assert(r1.docsTotal + r2.docsTotal == spark.read.parquet(s"$sfDir/documents.parquet").count())
 
     // a third run is a no-op
@@ -241,7 +241,7 @@ class PipelineSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(out, "_lineage", "manifest.json"),
       """{"snapshot":3,"committed_pids":[1,2,5]}""".getBytes("UTF-8"))
-    val legacy = Lineage.readManifestFull(out)
+    val legacy = Lineage.manifest(out)
     assert(legacy.snapshot == 3 && legacy.pids == Set(1, 2, 5))
     assert(legacy.epochs.isEmpty && legacy.schemas.isEmpty)
 
@@ -252,14 +252,56 @@ class PipelineSpec extends AnyFunSuite {
     Lineage.commit(spark, out,
       Seq((1, 3L, 20L, "8", 4L))
         .toDF("partition_id", "rows", "bytes", "digest", "files"))
-    assert(Lineage.schemaAt(out, 4) ==
-      Seq("partition_id", "rows", "bytes", "digest"))
-    assert(Lineage.schemaAt(out, 5) ==
-      Seq("partition_id", "rows", "bytes", "digest", "files"))
+    val schemas = Lineage.manifest(out).schemas
+    assert(schemas(4) == Seq("partition_id", "rows", "bytes", "digest"))
+    assert(schemas(5) == Seq("partition_id", "rows", "bytes", "digest", "files"))
     val t = Lineage.table(spark, out).orderBy(col("partition_id"))
       .select(col("partition_id"), col("files")).as[(Int, Option[Long])].collect()
     assert(t.toSeq == Seq((0, None), (1, Some(4L))),
       "added column must read null on pre-evolution snapshots")
+  }
+
+  private def writeManifest(out: String, bytes: String): Unit = {
+    Files.createDirectories(Paths.get(out, "_lineage"))
+    Files.write(Paths.get(out, "_lineage", "manifest.json"), bytes.getBytes("UTF-8"))
+  }
+
+  test("manifest: the full format reads field by field; a commit on top writes the same format") {
+    import spark.implicits._
+    val out = freshDir("manifest-full")
+    val base = """["partition_id","rows","bytes","digest"]"""
+    val withEpoch = """["partition_id","rows","bytes","digest","epoch"]"""
+    writeManifest(out, s"""{"snapshot":7,"committed_pids":[0,3,5],"epochs":[0,1,2],""" +
+      s""""schemas":{"6":$base,"7":$withEpoch}}""")
+    val m = Lineage.manifest(out)
+    assert(m.snapshot == 7L && m.pids == Set(0, 3, 5) && m.epochs == Set(0L, 1L, 2L))
+    assert(m.schemas == Map(6L -> Seq("partition_id", "rows", "bytes", "digest"),
+      7L -> Seq("partition_id", "rows", "bytes", "digest", "epoch")))
+
+    val rows = Seq((9, 1L, 2L, "3", 3L)).toDF("partition_id", "rows", "bytes", "digest", "epoch")
+    assert(Lineage.commit(spark, out, rows, Some(3L)) == Some(8L))
+    assert(Lineage.commit(spark, out, rows, Some(3L)).isEmpty, "a committed epoch must not commit again")
+    val written = new String(Files.readAllBytes(Paths.get(out, "_lineage", "manifest.json")), "UTF-8")
+    assert(written == s"""{"snapshot":8,"committed_pids":[0,3,5,9],"epochs":[0,1,2,3],""" +
+      s""""schemas":{"6":$base,"7":$withEpoch,"8":$withEpoch}}""")
+  }
+
+  test("manifest: bytes that are not JSON read as an empty manifest") {
+    val out = freshDir("manifest-corrupt")
+    writeManifest(out, """{"snapshot":3,"committed_pids":[1,2""")
+    assert(Lineage.manifest(out) == Lineage.Manifest(0L, Set.empty, Set.empty, Map.empty))
+  }
+
+  test("manifest: writer schemas keep column names with quotes and brackets") {
+    import spark.implicits._
+    val out = freshDir("manifest-names")
+    val cols = Seq("partition_id", "rows", "bytes", "digest", "a\"b", "a]b")
+    Lineage.commit(spark, out, Seq((0, 1L, 2L, "3", 4L, 5L)).toDF(cols: _*))
+    assert(Lineage.manifest(out).schemas == Map(1L -> cols))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get(out, "_lineage", "manifest.json").toFile)
+    assert(json.path("schemas").path("1").size == cols.size, json.toString)
+    assert(Lineage.table(spark, out).columns.toSeq.containsSlice(Seq("a\"b", "a]b")))
   }
 
   test("warc_day layout: partition pruning reaches the file scan") {

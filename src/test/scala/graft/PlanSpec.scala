@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 import SparkSessionTestBase.withConf
@@ -151,15 +154,29 @@ class PlanSpec extends AnyFunSuite {
       s"dup-gram count must have a map-side partial phase:\n$plan")
   }
 
+  /** the plan and, recursively, every plan under its cache scans */
+  private def withCachedPlans(p: SparkPlan): String = p.toString + p.collect {
+    case a: AdaptiveSparkPlanExec => withCachedPlans(a.inputPlan)
+    case m: InMemoryTableScanExec => withCachedPlans(m.relation.cachedPlan)
+  }.mkString("\n")
+
   test("d_components edges come from the LSH band path: no all-pairs shingle self-join") {
-    val plan = graft.queries.Dedup.componentEdges(spark, sfDir)
-      .queryExecution.sparkPlan.toString
+    val top = graft.queries.Dedup.lshPairs(spark, sfDir).queryExecution.sparkPlan
+    assert(top.isInstanceOf[InMemoryTableScanExec], s"the shared pair set must be cached:\n$top")
+    val plan = withCachedPlans(top)
     // the all-pairs baseline shuffles both shingle tables keyed ON the
     // shingle string; the LSH path shuffles only (band, bh) and id keys
     val badExchange = plan.linesIterator.exists(l =>
       l.contains("Exchange hashpartitioning") && l.contains("shingle#"))
     assert(!badExchange, s"edge generation must not shingle-self-join:\n$plan")
     assert(plan.contains("bh#"), s"expected the band-bucket join:\n$plan")
+    // d_minhash_lsh reads the same cache entry (d_components reads it
+    // while it builds, in its first contraction round)
+    val lsh = graft.queries.Dedup.defs("d_minhash_lsh")(spark, sfDir).queryExecution.sparkPlan
+    val entry = top.asInstanceOf[InMemoryTableScanExec].relation.cacheBuilder
+    assert(lsh.collect { case m: InMemoryTableScanExec => m.relation.cacheBuilder }.exists(_ eq entry),
+      s"d_minhash_lsh must read the cached pair set:\n$lsh")
+    graft.util.CacheScope.releaseAll()
   }
 
   test("d_components: one action per contraction round (no count action)") {

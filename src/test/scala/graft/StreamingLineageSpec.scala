@@ -47,7 +47,7 @@ class StreamingLineageSpec extends AnyFunSuite {
         })
     }
     assert(crash.getMessage != null)
-    val afterCrash = Lineage.readManifestFull(out)
+    val afterCrash = Lineage.manifest(out)
     assert(afterCrash.epochs == Set(0L, 1L),
       s"two epochs committed before the crash, got ${afterCrash.epochs}")
     // each committed epoch wrote its record before the crash
@@ -62,7 +62,7 @@ class StreamingLineageSpec extends AnyFunSuite {
     assert(seen.exists(e => !e._2), s"the crashed epoch must replay as a no-op: $seen")
     assert(seen.filter(_._2).map(_._1).forall(_ >= 2), s"only new epochs commit: $seen")
 
-    val m = Lineage.readManifestFull(out)
+    val m = Lineage.manifest(out)
     assert(m.epochs == Set(0L, 1L, 2L, 3L), s"4 chunks → 4 epochs, got ${m.epochs}")
 
     // one schema-valid record per committed epoch; the replayed epoch
@@ -105,7 +105,7 @@ class StreamingLineageSpec extends AnyFunSuite {
     // schema evolution bookkeeping: every snapshot records its writer
     // schema, including the epoch column the streaming commits carry
     (1L to m.snapshot).foreach { s =>
-      assert(Lineage.schemaAt(out, s).contains("epoch"),
+      assert(m.schemas.getOrElse(s, Nil).contains("epoch"),
         s"snapshot $s must record the widened writer schema")
     }
 
@@ -159,7 +159,7 @@ class StreamingLineageSpec extends AnyFunSuite {
     // what a writer without epoch records leaves behind
     graft.util.Staging.deleteRec(Paths.get(tbl, "_metrics"))
     assert(stLineage(spark, sfDir).count() == rows)
-    val epochs = Lineage.readManifestFull(tbl).epochs
+    val epochs = Lineage.manifest(tbl).epochs
     assert(epochs.nonEmpty)
     assert(metricsFiles(tbl) == epochs.map(e => s"epoch-$e.json"),
       "the rebuilt table must hold one record per committed epoch")
