@@ -51,26 +51,34 @@ object SparkEntry {
         // versioned by the PAGE contract, not a literal: the table's
         // bytes derive from warcStaged (a function of CorpusVersion), so
         // a corpus-version bump must re-key this artifact too. Complete =
-        // every committed epoch has its run record: a table staged by a
-        // writer that kept no `_metrics/` is rebuilt, not reused
+        // every committed epoch has a run record that parses: a table
+        // staged by a writer that kept no `_metrics/`, or whose record
+        // write was torn, is rebuilt, not reused
         val tbl = graft.util.Staging.keyedArtifact("stlineage", dir,
           graft.fixtures.PageHtml.CorpusVersion) { p =>
           val epochs = graft.pipeline.Lineage.manifest(p.toString).epochs
           epochs.nonEmpty &&
-            epochs.forall(e => java.nio.file.Files.exists(p.resolve(s"_metrics/epoch-$e.json")))
-        } {
-          out =>
-            val warcDir = graft.queries.Extraction.warcStaged(s, dir)
-            graft.pipeline.StreamingLineage.run(s, warcDir, out,
-              s"$out/_checkpoint", numPids = 8, maxFilesPerTrigger = Some(2))
-        }
-        import org.apache.spark.sql.functions._
-        graft.pipeline.StreamingLineage.docs(s, tbl)
-          .select(
-            element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"),
-            col("extracted_text"), col("error"))
-          .orderBy(col("doc_id"))
+            epochs.forall(e => graft.pipeline.RunReport.readable(p.resolve(s"_metrics/epoch-$e.json")))
+        }(out => stLineageDrain(s, dir, out))
+        stLineageRows(s, tbl)
       }))
+
+  /** st_lineage's stream: every WARC chunk of `dir` (2 per epoch) drained
+    * into the lineage-committed table at `out`
+    */
+  def stLineageDrain(s: SparkSession, dir: String, out: String): Unit =
+    graft.pipeline.StreamingLineage.run(s, Extraction.warcStaged(s, dir), out,
+      s"$out/_checkpoint", numPids = 8, maxFilesPerTrigger = Some(2))
+
+  /** st_lineage's result over a drained table */
+  def stLineageRows(s: SparkSession, tbl: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    graft.pipeline.StreamingLineage.docs(s, tbl)
+      .select(
+        element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"),
+        col("extracted_text"), col("error"))
+      .orderBy(col("doc_id"))
+  }
 
   /** DuckDB-equivalent SQL per query (driver's correctness gate). Queries
     * without an entry (s_ann_ivf) get the weaker rows-only check — their

@@ -4,7 +4,7 @@ import graft.functions.{ExtractKernel, GraftFunctions}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** The production extraction pipeline (SURVEY.md §3.1 Spark-side trace):
   *
@@ -20,8 +20,13 @@ import java.nio.file.{Files, Paths}
   *     → single write partitionBy(pid), dynamic partition overwrite
   *       [idempotent per pid → per-key exactly-once, strictly stronger
   *       than the reference's at-most-once delivery
-  *       (/root/reference/src/kafka_consumer.py:111-121,70)]
-  *     → lineage agg over the written output + atomic manifest commit.
+  *       (/root/reference/src/kafka_consumer.py:111-121,70)]; the write
+  *       stage also sums each pid's lineage as it writes the rows
+  *     → driver-side lineage rows + atomic manifest commit (no Spark job).
+  *
+  * The stream epoch of [[StreamingLineage]] runs the same tail
+  * ([[extractAndCommit]]), so a run costs the write's jobs and nothing
+  * after them.
   *
   * Error rows (validation/payload/unexpected) are DATA, not exceptions:
   * they live in the same table with a `reason` in the `error` column, so
@@ -38,7 +43,8 @@ object ExtractJob {
       takeover: Boolean = false)
 
   /** Content-addressed partition id — stable across runs and input
-    * layouts; null-url rows (validation errors) go to pid 0.
+    * layouts. Null-url rows (validation errors) go to pid 42 mod N:
+    * `xxhash64` of NULL is its seed, 42, so the `coalesce` never fires.
     */
   def pidCol(nPids: Int): Column =
     coalesce(pmod(xxhash64(col("url")), lit(nPids.toLong)), lit(0L)).cast("int")
@@ -60,7 +66,7 @@ object ExtractJob {
     * serialize distinctly (a plain `a:b:c` join is ambiguous when values
     * contain the separator, and a `~` null sentinel is a legal value).
     * NULL handled explicitly: null-url rows are a supported input class
-    * (validation errors route to pid 0) — encoded, never dropped, so an
+    * (validation errors route to pid 42 mod N) — encoded, never dropped, so an
     * all-null pid group cannot turn the digest sum NULL. The same
     * formula is plain SQL in any engine (audit recipe in
     * .claude/skills/verify/SKILL.md).
@@ -94,45 +100,83 @@ object ExtractJob {
         col("r.error").as("error"),
         col("pid"))
 
-  /** Per-pid lineage aggregate over WRITTEN docs rows. The digest is
+  /** `extracted` with its per-pid lineage sums added to `sums` as the
+    * write stage writes each row, in place of a second pass over the
+    * written docs: `in_bytes` goes through a non-deterministic UDF that
+    * returns it unchanged and adds the row to `sums` (the optimizer
+    * neither moves it below the pid shuffle nor drops it, and Spark keeps
+    * only a successful task's accumulator update). The digest is
     * md5-60bit (not xxhash64): any external system — DuckDB, Trino, a
     * Python auditor — can recompute the per-partition digest from the
     * written parquet alone and verify lineage integrity without running
     * this engine (x_lineage's md5-60bit sum over the length-prefixed
     * digestRecord encoding).
     */
-  private[pipeline] def lineageAgg(written: DataFrame): Array[Row] = {
-    val rec = digestRecord(col("url"), col("extracted_text"), col("error"))
-    written.groupBy(col("pid")).agg(
-      count(lit(1)).as("rows"),
-      sum("in_bytes").as("bytes"),
-      sum(pmod(GraftFunctions.fp60(rec), lit(1000000007L))).as("dig"),
-      sum(when(col("error").isNull, 1L).otherwise(0L)).as("ok"),
-      sum(when(col("error") === "validation", 1L).otherwise(0L)).as("f_val"),
-      sum(when(col("error") === "payload", 1L).otherwise(0L)).as("f_pay"),
-      sum(when(col("error") === "unexpected", 1L).otherwise(0L)).as("f_unx"))
-      .collect()
+  private[pipeline] def lineageAgg(extracted: DataFrame, sums: LineageSums): DataFrame = {
+    val tap = udf { (pid: Int, bytes: Long, digest: Long, error: String) =>
+      sums.addRow(pid, bytes, digest, error)
+      bytes
+    }.asNondeterministic()
+    val dig = pmod(GraftFunctions.fp60(digestRecord(col("url"), col("extracted_text"), col("error"))),
+      lit(1000000007L))
+    extracted.select(extracted.columns.map {
+      case "in_bytes" => tap(col("pid"), col("in_bytes"), coalesce(dig, lit(0L)), col("error")).as("in_bytes")
+      case c          => col(c)
+    }: _*)
   }
 
-  /** The run record of `agg` ([[lineageAgg]] rows), with the stages
-    * `listener` has seen, written to `<outputDir>/_metrics/<name>.json`:
-    * `run-<snapshot>` for a batch run, `epoch-<id>` for a stream epoch.
+  private def lineageSchema(epoch: Option[Long]): StructType = StructType(Seq(
+    StructField("partition_id", IntegerType, nullable = false),
+    StructField("rows", LongType, nullable = false),
+    StructField("bytes", LongType, nullable = false),
+    StructField("digest", StringType)) ++
+    epoch.map(_ => StructField("epoch", LongType, nullable = false)))
+
+  /** The one extraction tail, shared by the batch job and the stream
+    * epoch: extract `withPid` (pages with `pid`), shuffle by pid, write
+    * the docs with dynamic partition overwrite while summing each pid's
+    * lineage, then commit the lineage rows — the pids seen plus `fill`,
+    * which commit as (p, 0, 0, "0") when empty — and publish the run
+    * record. A batch run writes `docs/pid=*` and `_metrics/run-<snap>`; a
+    * stream epoch (`epoch` set) writes `docs/epoch=E/pid=*`, lineage rows
+    * carrying the epoch, and `_metrics/epoch-<E>`. None = the epoch was
+    * already committed (a replay), nothing recorded.
     */
-  private[pipeline] def writeReport(outputDir: String, name: String, snapshot: Long,
-      pids: Int, agg: Array[Row], t0: Long, listener: GraftMetricsListener): RunReport = {
-    val report = RunReport(
-      snapshot = snapshot,
-      pidsProcessed = pids,
-      docsOk = agg.map(_.getLong(4)).sum,
-      failedValidation = agg.map(_.getLong(5)).sum,
-      failedPayload = agg.map(_.getLong(6)).sum,
-      failedUnexpected = agg.map(_.getLong(7)).sum,
-      bytesIn = agg.map(_.getLong(2)).sum,
-      wallSec = (System.nanoTime() - t0) / 1e9)
-    val mdir = Paths.get(outputDir, "_metrics")
-    Files.createDirectories(mdir)
-    Files.write(mdir.resolve(s"$name.json"), report.toJson(listener.snapshot).getBytes("UTF-8"))
-    report
+  private[pipeline] def extractAndCommit(spark: SparkSession, withPid: DataFrame, outputDir: String,
+      numPids: Int, fill: Seq[Int], epoch: Option[Long]): Option[RunReport] = {
+    val t0 = System.nanoTime()
+    val sc = spark.sparkContext
+    val listener = new GraftMetricsListener
+    sc.addSparkListener(listener)
+    // every exit — normal end, replay, or a throw from the write or the
+    // commit — unregisters the listener
+    try {
+      val sums = new LineageSums(numPids)
+      sc.register(sums)
+      val extracted = epoch.fold(extractColumns(withPid))(e => extractColumns(withPid).withColumn("epoch", lit(e)))
+      listener.track(sc) {
+        lineageAgg(extracted.repartition(numPids, col("pid")), sums)
+          .write.mode(SaveMode.Overwrite).partitionBy(epoch.map(_ => "epoch").toSeq :+ "pid": _*)
+          // scoped to THIS write (not session config): only the pids present
+          // in the batch are overwritten — per-pid idempotent rerun — without
+          // silently changing Overwrite semantics for other writes on the
+          // caller's shared session
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(s"$outputDir/docs")
+      }
+      val seen = sums.value.map(s => s.pid -> s).toMap
+      val pids = (fill ++ seen.keys).distinct.sorted.map(p => seen.getOrElse(p, PidSums(p, 0, 0, 0, 0, 0, 0, 0)))
+      val c0 = System.nanoTime()
+      val rows = pids.map(s => Row.fromSeq(Seq(s.pid, s.rows, s.bytes, s.digest.toString) ++ epoch))
+      Lineage.commitRows(spark, outputDir, lineageSchema(epoch), rows, epoch).map { snap =>
+        val now = System.nanoTime()
+        val report = RunReport(snap, pids, (now - t0) / 1e9, (now - c0) / 1e6)
+        val name = epoch.fold(s"run-$snap")(e => s"epoch-$e")
+        Lineage.publish(Paths.get(outputDir, "_metrics", s"$name.json"),
+          report.toJson(listener.snapshot).getBytes("UTF-8"))
+        report
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Run (or resume) the extraction over a page table. Returns the run
@@ -146,53 +190,17 @@ object ExtractJob {
   }
 
   private def runLocked(spark: SparkSession, pages: DataFrame, cfg: JobConfig): RunReport = {
-    val listener = new GraftMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    // every exit — early return, normal end, or a throw from the write,
-    // lineage agg or commit — unregisters the listener
-    try {
-      val t0 = System.nanoTime()
+    val t0 = System.nanoTime()
+    val committed = Lineage.manifest(cfg.outputDir)
+    val runPids: Seq[Int] = (0 until cfg.numPids)
+      .filterNot(committed.pids)
+      .filter(p => cfg.limitPids.forall(_.contains(p)))
 
-      val committed = Lineage.manifest(cfg.outputDir)
-      val runPids: Seq[Int] = (0 until cfg.numPids)
-        .filterNot(committed.pids)
-        .filter(p => cfg.limitPids.forall(_.contains(p)))
+    if (runPids.isEmpty) return RunReport(committed.snapshot, Nil, (System.nanoTime() - t0) / 1e9, 0.0)
 
-      if (runPids.isEmpty) {
-        return RunReport(committed.snapshot, 0, 0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1e9)
-      }
-
-      val withPid = pages
-        .withColumn("pid", pidCol(cfg.numPids))
-        .where(col("pid").isin(runPids: _*))
-
-      val extracted = extractColumns(withPid)
-        .repartition(cfg.numPids, col("pid"))
-
-      extracted.write.mode(SaveMode.Overwrite).partitionBy("pid")
-        // scoped to THIS write (not session config): only the pids present
-        // in the batch are overwritten — per-pid idempotent rerun — without
-        // silently changing Overwrite semantics for other writes on the
-        // caller's shared session
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"${cfg.outputDir}/docs")
-
-      // lineage + metrics from the WRITTEN output (column-pruned read of the
-      // small result table — never a second pass over the raw html)
-      val written = docs(spark, cfg.outputDir).where(col("pid").isin(runPids: _*))
-      val agg = lineageAgg(written)
-
-      val byPid = agg.map(r => r.getInt(0) -> r).toMap
-      import spark.implicits._
-      val lineageRows = runPids.map { p =>
-        byPid.get(p) match {
-          case Some(r) => (p, r.getLong(1), r.getLong(2), r.getLong(3).toString)
-          case None    => (p, 0L, 0L, "0")
-        }
-      }.toDF("partition_id", "rows", "bytes", "digest")
-      val snap = Lineage.commit(spark, cfg.outputDir, lineageRows).get
-
-      writeReport(cfg.outputDir, s"run-$snap", snap, runPids.size, agg, t0, listener)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val withPid = pages
+      .withColumn("pid", pidCol(cfg.numPids))
+      .where(col("pid").isin(runPids: _*))
+    extractAndCommit(spark, withPid, cfg.outputDir, cfg.numPids, runPids, None).get
   }
 }

@@ -2,7 +2,13 @@ package graft.pipeline
 
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.node.MissingNode
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -15,12 +21,15 @@ import scala.jdk.CollectionConverters._
   * Commit protocol:
   *   1. results are written `partitionBy("pid")` with dynamic partition
   *      overwrite (idempotent per pid — rerunning an uncommitted pid
-  *      replaces, never duplicates);
+  *      replaces, never duplicates); the same write stage sums each pid's
+  *      lineage ([[LineageSums]]);
   *   2. lineage rows (pid, offset=snapshot, rows, bytes, digest) are
-  *      appended under `_lineage/data`;
+  *      written by the driver, no Spark job, as one parquet file under
+  *      `_lineage/data/offset=<snapshot>`;
   *   3. the manifest (committed pid set + snapshot counter) is rewritten
-  *      via temp file + atomic rename — a crash anywhere before (3) leaves
-  *      the previous manifest intact and the interrupted pids uncommitted.
+  *      via temp file + atomic rename ([[publish]]) — a crash anywhere
+  *      before (3) leaves the previous manifest intact and the
+  *      interrupted pids uncommitted.
   *
   * Resume = anti-filter on the committed pid set: any rerun processes
   * exactly the complement, at partition granularity (north_star). This is
@@ -67,12 +76,19 @@ object Lineage {
       "committed_pids" -> m.pids.toSeq.sorted,
       "epochs" -> m.epochs.toSeq.sorted,
       "schemas" -> ListMap.from(m.schemas.toSeq.sortBy(_._1).map { case (k, cols) => k.toString -> cols })))
-    val dir = Paths.get(outputDir, "_lineage")
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"manifest.tmp.${m.snapshot}")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    Files.move(tmp, manifestPath(outputDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    publish(manifestPath(outputDir), json.getBytes("UTF-8"))
+  }
+
+  /** Writes `bytes` to a hidden temp sibling of `target` and renames it
+    * over `target` atomically: readers see the previous file or the whole
+    * new one, never a torn write. The manifest and the `_metrics` records
+    * are published through it.
+    */
+  private[pipeline] def publish(target: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.write(tmp, bytes)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Single-writer enforcement: the commit protocol (dynamic partition
@@ -122,12 +138,14 @@ object Lineage {
   }
 
   /** Write the snapshot's lineage rows and atomically publish the new
-    * manifest; returns the new snapshot. Rows go to a SNAPSHOT-KEYED
-    * subdirectory (`data/offset=N`, overwrite): a crash between the data
-    * write and the manifest rename leaves an orphan directory that (a)
-    * readers never see — table()/tableAt() bound reads by the COMMITTED
-    * snapshot — and (b) the retry overwrites in place, so no duplicate
-    * rows can ever accumulate.
+    * manifest; returns the new snapshot. `lineage` is collected once: the
+    * collected rows are both what is written and where the committed pids
+    * come from, so the manifest can never diverge from the rows on disk.
+    * Rows go to a SNAPSHOT-KEYED subdirectory (`data/offset=N`, replaced
+    * whole): a crash between the data write and the manifest rename
+    * leaves an orphan directory that (a) readers never see —
+    * table()/tableAt() bound reads by the COMMITTED snapshot — and (b)
+    * the retry replaces, so no duplicate rows can ever accumulate.
     *
     * A streaming micro-batch passes its `epoch`, which the manifest
     * records: a foreachBatch REPLAY of an already-committed batch (crash
@@ -144,6 +162,16 @@ object Lineage {
     */
   def commit(spark: SparkSession, outputDir: String, lineage: DataFrame,
              epoch: Option[Long] = None): Option[Long] = {
+    val cols = BaseCols ++ lineage.columns.filterNot(BaseCols.contains)
+    val stamped = lineage.select(cols.head, cols.tail: _*)
+    commitRows(spark, outputDir, stamped.schema, stamped.collect().toSeq, epoch)
+  }
+
+  /** [[commit]] of rows already on the driver, whose `schema` starts with
+    * the four base columns: the extraction tail's commit, no Spark job.
+    */
+  private[pipeline] def commitRows(spark: SparkSession, outputDir: String, schema: StructType,
+      rows: Seq[Row], epoch: Option[Long]): Option[Long] = {
     val m = manifest(outputDir)
     if (epoch.exists(m.epochs)) return None
     // guard against the pre-snapshot layout (flat parquet with an offset
@@ -165,24 +193,39 @@ object Lineage {
       } finally legacy.close()
     }
     val newSnap = m.snapshot + 1
-    val extras = lineage.columns.filterNot(BaseCols.contains).toSeq
-    val cols = BaseCols ++ extras
-    val stamped = lineage.select(cols.head, cols.tail: _*)
-    // one execution of the caller's (small) plan: the collected rows are
-    // both what is written and where the committed pids come from, so the
-    // manifest can never diverge from the rows on disk (a non-deterministic
-    // input plan re-run could commit pids that were never written)
-    val rows = stamped.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), stamped.schema)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$outputDir/_lineage/data/offset=$newSnap")
-    val pids = rows.map(_.getInt(0)).toSet
+    val snapDir = dataDir.resolve(s"offset=$newSnap")
+    graft.util.Staging.deleteRec(snapDir)
+    Files.createDirectories(snapDir)
+    writeParquet(spark, snapDir, schema, rows)
     writeManifest(outputDir, Manifest(
       snapshot = newSnap,
-      pids = m.pids ++ pids,
+      pids = m.pids ++ rows.map(_.getInt(0)),
       epochs = m.epochs ++ epoch,
-      schemas = m.schemas + (newSnap -> cols)))
+      schemas = m.schemas + (newSnap -> schema.fieldNames.toSeq)))
     Some(newSnap)
+  }
+
+  /** `rows` as one parquet file in `dir`, written on the driver with the
+    * session's parquet writer (`ParquetWriteSupport`, so Spark's schema
+    * metadata and codec) — at most a few hundred rows, not worth a job.
+    * Written under a hidden name that file listings skip, then renamed:
+    * a crash mid-write leaves no torn file for a `mergeSchema` read to
+    * trip on.
+    */
+  private def writeParquet(spark: SparkSession, dir: Path, schema: StructType, rows: Seq[Row]): Unit = {
+    val conf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(conf, job, schema, new ParquetOptions(Map.empty[String, String], conf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val parent = new HPath(dir.toUri)
+    val tmp = new HPath(parent, s".$name.tmp")
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val writer = factory.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    if (!tmp.getFileSystem(job.getConfiguration).rename(tmp, new HPath(parent, name)))
+      throw new java.io.IOException(s"could not rename $tmp into $dir")
   }
 
   /** The lineage table as a DataFrame (latest snapshot per pid). */

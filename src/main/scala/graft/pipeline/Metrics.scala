@@ -4,11 +4,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
@@ -56,18 +55,24 @@ final case class StageRec(stageId: Int, name: String, tasks: Int,
 final class GraftMetricsListener extends SparkListener {
 
   private val stages = new ConcurrentLinkedQueue[StageRec]()
-  private val lastJobEnded = new AtomicInteger(-1)
   private val executionNames = new ConcurrentHashMap[String, String]()
   private val stageExecution = new ConcurrentHashMap[Int, String]()
+  private val tag = java.util.UUID.randomUUID().toString
+  private val trackedExecutions = ConcurrentHashMap.newKeySet[String]()
+  private val endedExecutions = ConcurrentHashMap.newKeySet[String]()
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
     case s: SparkListenerSQLExecutionStart => executionNames.put(s.executionId.toString, s.description)
+    case s: SparkListenerSQLExecutionEnd   => endedExecutions.add(s.executionId.toString)
     case _                                 =>
   }
 
-  override def onJobStart(js: SparkListenerJobStart): Unit =
-    Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-      .foreach(id => js.stageIds.foreach(stageExecution.put(_, id)))
+  override def onJobStart(js: SparkListenerJobStart): Unit = Option(js.properties).foreach { p =>
+    Option(p.getProperty("spark.sql.execution.id")).foreach { id =>
+      js.stageIds.foreach(stageExecution.put(_, id))
+      if (p.getProperty(GraftMetricsListener.TrackKey) == tag) trackedExecutions.add(id)
+    }
+  }
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val si = sc.stageInfo
@@ -83,38 +88,43 @@ final class GraftMetricsListener extends SparkListener {
       m.memoryBytesSpilled, m.diskBytesSpilled, m.peakExecutionMemory))
   }
 
-  override def onJobEnd(je: SparkListenerJobEnd): Unit =
-    lastJobEnded.accumulateAndGet(je.jobId, math.max)
-
   def snapshot: Seq[StageRec] = stages.asScala.toSeq
 
-  /** Every stage of the jobs that finished before this call. Listener
-    * delivery is asynchronous, but the scheduler posts a job's events
-    * before its action returns and the bus delivers them in order: once
-    * a one-task marker job submitted now has ended here, nothing earlier
-    * is still in flight. The marker's own stage (the newest) is dropped.
+  /** Runs `action`, a SQL action, and returns once this listener has seen
+    * the end of the SQL executions it ran, so [[snapshot]] then holds
+    * every stage of `action` and of the jobs before it. Listener delivery
+    * is asynchronous, but the bus delivers in order, and a job's stage
+    * events are posted before its execution's end event. The action's
+    * jobs are told apart by a thread-local property they inherit, this
+    * listener's tag; no job of its own is submitted. Gives up after 10 s,
+    * returning what arrived.
     */
-  def settled(sc: SparkContext): Seq[StageRec] = {
-    val marker = sc.parallelize(Seq(0), 1).countAsync()
-    marker.get()
-    val id = marker.jobIds.head
+  def track[T](sc: SparkContext)(action: => T): T = {
+    val outer = sc.getLocalProperty(GraftMetricsListener.TrackKey)
+    sc.setLocalProperty(GraftMetricsListener.TrackKey, tag)
+    val out = try action finally sc.setLocalProperty(GraftMetricsListener.TrackKey, outer)
+    def ended = !trackedExecutions.isEmpty && trackedExecutions.asScala.forall(endedExecutions.contains)
     val deadline = System.currentTimeMillis() + 10000
-    while (lastJobEnded.get < id && System.currentTimeMillis() < deadline) Thread.sleep(2)
-    val all = snapshot
-    if (lastJobEnded.get < id || all.isEmpty) all
-    else all.filterNot(_.stageId == all.map(_.stageId).max)
+    while (!ended && System.currentTimeMillis() < deadline) Thread.sleep(1)
+    out
   }
 }
 
-final case class RunReport(
-    snapshot: Long,
-    pidsProcessed: Int,
-    docsOk: Long,
-    failedValidation: Long,
-    failedPayload: Long,
-    failedUnexpected: Long,
-    bytesIn: Long,
-    wallSec: Double) {
+object GraftMetricsListener {
+  private val TrackKey = "graft.metrics.track"
+}
+
+/** One batch run's or stream epoch's report: the per-pid lineage sums
+  * it committed (empty pids included for a batch run), its wall time and
+  * `commitMs`, the driver-side lineage write plus manifest rename.
+  */
+final case class RunReport(snapshot: Long, pids: Seq[PidSums], wallSec: Double, commitMs: Double) {
+  def pidsProcessed: Int = pids.size
+  def docsOk: Long = pids.map(_.ok).sum
+  def failedValidation: Long = pids.map(_.failedValidation).sum
+  def failedPayload: Long = pids.map(_.failedPayload).sum
+  def failedUnexpected: Long = pids.map(_.failedUnexpected).sum
+  def bytesIn: Long = pids.map(_.bytes).sum
   def docsTotal: Long = docsOk + failedValidation + failedPayload + failedUnexpected
   def docsPerSec: Double = if (wallSec > 0) docsTotal / wallSec else 0.0
   def mbPerSec: Double = if (wallSec > 0) bytesIn / 1e6 / wallSec else 0.0
@@ -125,6 +135,17 @@ final case class RunReport(
     "snapshot" -> snapshot, "pids_processed" -> pidsProcessed, "docs_ok" -> docsOk,
     "failed_validation" -> failedValidation, "failed_payload" -> failedPayload,
     "failed_unexpected" -> failedUnexpected, "docs_total" -> docsTotal,
-    "bytes_in" -> bytesIn, "wall_sec" -> wallSec, "docs_per_sec" -> docsPerSec,
+    "bytes_in" -> bytesIn, "wall_sec" -> wallSec, "commit_ms" -> commitMs, "docs_per_sec" -> docsPerSec,
     "mb_per_sec" -> mbPerSec, "failure_rate" -> failureRate, "stages" -> stages.map(_.fields)))
+}
+
+object RunReport {
+
+  /** true when the record at `path` is a JSON object: a torn or truncated
+    * write does not parse
+    */
+  def readable(path: java.nio.file.Path): Boolean =
+    java.nio.file.Files.isRegularFile(path) &&
+      (try Json.mapper.readTree(path.toFile).isObject
+       catch { case _: java.io.IOException => false })
 }

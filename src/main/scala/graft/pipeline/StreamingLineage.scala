@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -11,21 +11,24 @@ import org.apache.spark.sql.types._
   * same lineage-committed table protocol the batch job uses — not just a
   * Spark checkpoint.
   *
-  * Per micro-batch (inside `foreachBatch`):
+  * Per micro-batch (inside `foreachBatch`), the batch job's tail
+  * ([[ExtractJob.extractAndCommit]]) with the epoch set:
   *   1. extract (shared [[ExtractJob.extractColumns]] projection — the
   *      same native expression, narrow, upstream of the one pid shuffle);
   *   2. write `partitionBy(epoch, pid)` with WRITE-SCOPED dynamic
   *      overwrite — a replayed batch rewrites exactly its own
   *      `epoch=B/pid=*` partitions, so retries are idempotent and other
-  *      epochs are never touched;
-  *   3. per-pid lineage rows (rows, bytes, md5-60bit digest, epoch)
-  *      committed via [[Lineage.commitEpoch]] — snapshot-keyed data +
+  *      epochs are never touched. The write stage sums each pid's
+  *      lineage (rows, bytes, md5-60bit digest, error classes) as it
+  *      writes; nothing re-reads the written docs;
+  *   3. the per-pid lineage rows, carrying the epoch, committed by
+  *      [[Lineage.commitRows]] on the driver — snapshot-keyed data +
   *      atomic manifest rename, with the EPOCH recorded in the manifest;
   *   4. once the commit returns, `_metrics/epoch-<id>.json`: the batch
-  *      job's run record (error classes, bytes, wall time, stages) for
-  *      this epoch. Trigger `durationMs` is known only after
+  *      job's run record (error classes, bytes, wall time, commit time,
+  *      stages) for this epoch. Trigger `durationMs` is known only after
   *      `foreachBatch` returns, so it is not in the record
-  *      (`tools.Probe stream` reports it).
+  *      (`tools.Probe stream st_lineage` reports it).
   *
   * Exactly-once across crashes: Spark's checkpoint replays the last
   * un-acknowledged batch after a restart; step 2 is an overwrite (no doc
@@ -87,31 +90,8 @@ object StreamingLineage {
     */
   private def commitBatch(spark: SparkSession, batch: DataFrame,
                           outputDir: String, numPids: Int,
-                          epochId: Long): Boolean = {
-    if (Lineage.manifest(outputDir).epochs.contains(epochId)) return false
-    val t0 = System.nanoTime()
-    val listener = new GraftMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val extracted = ExtractJob.extractColumns(
-          batch.withColumn("pid", ExtractJob.pidCol(numPids)))
-        .withColumn("epoch", lit(epochId))
-        .repartition(numPids, col("pid"))
-      extracted.write.mode(SaveMode.Overwrite).partitionBy("epoch", "pid")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$outputDir/docs")
-      // lineage from the WRITTEN epoch (column-pruned result read, never a
-      // second pass over html); rows carry the epoch as an extra column —
-      // the manifest records the widened writer schema per snapshot
-      val written = docs(spark, outputDir).where(col("epoch") === epochId)
-      val agg = ExtractJob.lineageAgg(written)
-      import spark.implicits._
-      val lineageRows = agg.map(r =>
-          (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3).toString, epochId))
-        .toSeq.toDF("partition_id", "rows", "bytes", "digest", "epoch")
-      val snap = Lineage.commit(spark, outputDir, lineageRows, Some(epochId))
-      snap.foreach(ExtractJob.writeReport(outputDir, s"epoch-$epochId", _, agg.length, agg, t0, listener))
-      snap.isDefined
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+                          epochId: Long): Boolean =
+    !Lineage.manifest(outputDir).epochs.contains(epochId) &&
+      ExtractJob.extractAndCommit(spark, batch.withColumn("pid", ExtractJob.pidCol(numPids)),
+        outputDir, numPids, Nil, Some(epochId)).isDefined
 }

@@ -5,7 +5,7 @@ import graft.extract.Extractor
 import graft.fixtures.{Corpus, PageHtml}
 import graft.pipeline.{GraftMetricsListener, Json, StageRec}
 import graft.util.{CacheScope, Staging}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
@@ -23,7 +23,8 @@ import scala.jdk.CollectionConverters._
   *
   *   query  <q[,q...]> [sfDir] [reps] [--plan [outDir] [suffix]]
   *          `--plan` also writes `<outDir>/<q>_<suffix>.txt` (formatted plan)
-  *   stream <st_query> [sfDir] [reps]     adds per-batch durationMs, stateOperators
+  *   stream <st_query> [sfDir] [reps]     adds per-batch durationMs, stateOperators;
+  *                                        st_lineage drains into a fresh dir every rep
   *   kernel [n] [giant]                   single-thread Extractor.extract, no Spark
   *   scale  [sfDir] [scales]              dedup/curation queries per amplification k
   *   spill  [sfDir] [amplify] [giantWords] [cpus]
@@ -78,21 +79,22 @@ object Probe {
     line(Seq[(String, Any)]("target" -> target, "name" -> name, "rep" -> rep, "wall_ms" -> m.wallMs,
       "rows" -> m.rows) ++ extra :+ ("stages" -> m.stages.map(_.fields)): _*)
 
-  /** Build SparkEntry query `q` over `dir` and evaluate every output
-    * column of every row under a fresh listener (`count()` would let the
-    * optimizer prune reassembly aggregations down to a distinct count of
-    * doc_id), then release the caches it registered.
+  /** Build SparkEntry query `q` over `dir` (or `build` it) and evaluate
+    * every output column of every row under a fresh listener (`count()`
+    * would let the optimizer prune reassembly aggregations down to a
+    * distinct count of doc_id), then release the caches it registered.
     */
-  private def measure(spark: SparkSession, q: String, dir: String): Measured = {
+  private def measure(spark: SparkSession, q: String, dir: String,
+      build: Option[(SparkSession, String) => DataFrame] = None): Measured = {
     val sc = spark.sparkContext
     val listener = new GraftMetricsListener
     sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
-      val qe = SparkEntry.queries(q)(spark, dir).queryExecution
+      val qe = build.getOrElse(SparkEntry.queries(q))(spark, dir).queryExecution
       // inside a SQL execution, so the listener names its stages after it
-      val rows = SQLExecution.withNewExecutionId(qe, Some("probe"))(qe.toRdd.count())
-      Measured(rows, (System.nanoTime() - t0) / 1e6, listener.settled(sc))
+      val rows = listener.track(sc)(SQLExecution.withNewExecutionId(qe, Some("probe"))(qe.toRdd.count()))
+      Measured(rows, (System.nanoTime() - t0) / 1e6, listener.snapshot)
     } finally {
       sc.removeSparkListener(listener)
       CacheScope.releaseAll()
@@ -129,7 +131,14 @@ object Probe {
     spark.streams.addListener(listener)
     try (1 to args.lift(2).fold(2)(_.toInt)).foreach { r =>
       progress.clear()
-      val m = measure(spark, q, args.lift(1).getOrElse(DefaultSf))
+      // st_lineage reuses its staged table: drain into a fresh one instead
+      val fresh = Option.when(q == "st_lineage")(Files.createTempDirectory("graft-probe-stlineage"))
+      val build = fresh.map(out => (s: SparkSession, d: String) => {
+        SparkEntry.stLineageDrain(s, d, out.toString)
+        SparkEntry.stLineageRows(s, out.toString)
+      })
+      val m = try measure(spark, q, args.lift(1).getOrElse(DefaultSf), build)
+        finally fresh.foreach(Staging.deleteRec)
       // a query's progress events precede its termination on the streams
       // queue: wait until every started query has ended here
       val deadline = System.currentTimeMillis() + 10000

@@ -14,7 +14,7 @@ object MetricsRecord {
 
   val ReportKeys: Set[String] = Set("snapshot", "pids_processed", "docs_ok",
     "failed_validation", "failed_payload", "failed_unexpected", "docs_total",
-    "bytes_in", "wall_sec", "docs_per_sec", "mb_per_sec", "failure_rate", "stages")
+    "bytes_in", "wall_sec", "commit_ms", "docs_per_sec", "mb_per_sec", "failure_rate", "stages")
 
   val StageKeys: Set[String] = Set("stage", "name", "tasks", "executor_run_ms",
     "input_bytes", "input_records", "output_bytes", "shuffle_read_bytes",
@@ -35,4 +35,14 @@ object MetricsRecord {
       s"$path docs_total must equal the sum of the outcome classes")
     n
   }
+
+  /** true when the record holds a stage that wrote output: the docs write */
+  def hasWriteStage(n: JsonNode): Boolean =
+    n.get("stages").elements().asScala.exists(_.get("output_bytes").asLong > 0)
+
+  /** true when the record's stages are the docs write's two alone (the
+    * pid shuffle's map stage and the write stage): no lineage aggregate
+    * or lineage-row write job ran
+    */
+  def onlyDocsWrite(n: JsonNode): Boolean = n.get("stages").size == 2 && hasWriteStage(n)
 }

@@ -51,6 +51,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(rec.get("docs_total").asLong == nTotal && rec.get("snapshot").asLong == 1L)
   }
 
+  test("run record holds the docs write stage and the commit time; the write is the only job") {
+    val out = freshDir("record")
+    ExtractJob.run(spark, Corpus.pages(spark, sfDir), JobConfig(out, numPids = 8))
+    // the write is the run's last job: its stages must be in the record
+    // although listener delivery is asynchronous
+    val rec = MetricsRecord.read(Paths.get(out, "_metrics", "run-1.json"))
+    assert(MetricsRecord.hasWriteStage(rec), rec.toString)
+    assert(rec.get("commit_ms").asDouble > 0 && rec.get("commit_ms").asDouble < rec.get("wall_sec").asDouble * 1000)
+    assert(MetricsRecord.onlyDocsWrite(rec), rec.toString)
+  }
+
   test("pipeline over WARC input: same ok-row set as the parquet path") {
     import spark.implicits._
     val warcDir = freshDir("warc-in")

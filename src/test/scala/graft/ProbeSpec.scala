@@ -50,4 +50,16 @@ class ProbeSpec extends AnyFunSuite {
       assert(l.get("stages").isArray && l.get("stages").size == 0)
     }
   }
+
+  test("stream st_lineage: every rep drains a fresh table and reports its batches") {
+    val lines = probe("stream", "st_lineage", "/root/testdata/sf0.001", "2")
+    assert(lines.size == 2)
+    lines.foreach { l =>
+      assert((Common.toSet + "batches").subsetOf(keys(l)), keys(l))
+      val batches = l.get("batches")
+      assert(batches.isArray && batches.size > 0, l.toString)
+      assert(batches.elements().asScala.forall(_.get("duration_ms").has("addBatch")), batches.toString)
+      assert(l.get("rows").asLong > 0)
+    }
+  }
 }

@@ -133,6 +133,23 @@ class StreamingLineageSpec extends AnyFunSuite {
     Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
   }
 
+  test("every epoch record holds its docs write stage and the commit time; the write is the only job") {
+    val warcDir = Files.createTempDirectory("graft-sl4-warc").toString
+    val out = Files.createTempDirectory("graft-sl4-out").toString
+    val cp = Files.createTempDirectory("graft-sl4-cp").toString
+    Warc.write(spark, Corpus.pages(spark, sfDir), warcDir, numFiles = 3)
+    StreamingLineage.run(spark, warcDir, out, cp, numPids = 4, maxFilesPerTrigger = Some(1))
+    val epochs = Lineage.manifest(out).epochs
+    assert(epochs == Set(0L, 1L, 2L))
+    epochs.foreach { e =>
+      val rec = MetricsRecord.read(epochRecord(out, e))
+      assert(MetricsRecord.hasWriteStage(rec), s"epoch $e: $rec")
+      assert(rec.get("commit_ms").asDouble > 0, s"epoch $e: $rec")
+      assert(MetricsRecord.onlyDocsWrite(rec), s"epoch $e: $rec")
+    }
+    Seq(warcDir, out, cp).foreach(d => graft.util.Staging.deleteRec(Paths.get(d)))
+  }
+
   test("writer lock: concurrent stream on the same table fails fast") {
     val warcDir = Files.createTempDirectory("graft-sl2-warc").toString
     val out = Files.createTempDirectory("graft-sl2-out").toString
@@ -163,6 +180,21 @@ class StreamingLineageSpec extends AnyFunSuite {
     assert(epochs.nonEmpty)
     assert(metricsFiles(tbl) == epochs.map(e => s"epoch-$e.json"),
       "the rebuilt table must hold one record per committed epoch")
+    val total = epochs.toSeq.map(e => MetricsRecord.read(epochRecord(tbl, e)).get("docs_total").asLong).sum
+    assert(total == rows, s"epoch records sum to $total docs, the table has $rows")
+  }
+
+  test("st_lineage restages a table whose epoch record is truncated") {
+    val stLineage = SparkEntry.queries("st_lineage")
+    val rows = stLineage(spark, sfDir).count()
+    val tbl = graft.util.Staging.keyedArtifact("stlineage", sfDir,
+      graft.fixtures.PageHtml.CorpusVersion)(_ => true)(_ => ())
+    // what a crash in the middle of an in-place record write leaves behind
+    val torn = epochRecord(tbl, Lineage.manifest(tbl).epochs.min)
+    val bytes = Files.readAllBytes(torn)
+    Files.write(torn, bytes.take(bytes.length / 2))
+    assert(stLineage(spark, sfDir).count() == rows)
+    val epochs = Lineage.manifest(tbl).epochs
     val total = epochs.toSeq.map(e => MetricsRecord.read(epochRecord(tbl, e)).get("docs_total").asLong).sum
     assert(total == rows, s"epoch records sum to $total docs, the table has $rows")
   }
