@@ -2,11 +2,14 @@ package graft.functions
 
 import graft.extract.Extractor
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{conv, md5, substring}
+import org.apache.spark.sql.classic.ClassicConversions.ColumnConstructorExt
+import org.apache.spark.sql.classic.ColumnConversions.expression
+import org.apache.spark.sql.functions.{conv, lit, md5, substring}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -137,4 +140,17 @@ object GraftFunctions {
     * bit-identical to DuckDB's `('0x'||substr(md5(c),1,15))::BIGINT`.
     */
   def fp60(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** FNV-1a 64 of a string column ([[HashKernel.fnv1a64]]) */
+  def fnv1a64(c: Column): Column = kernel("fnv1a64", c)
+
+  /** MinHash permutation `i` of a hash column ([[HashKernel.mix64]]) */
+  def mix64(h: Column, i: Int): Column = kernel("mix64", h, lit(i))
+
+  /** a static [[HashKernel]] call: codegen'd, and equal across builds.
+    * `ColumnConstructorExt` is the classic API's `Column(expression)`; its
+    * receiver, the `Column` companion, is private to Spark and never read.
+    */
+  private def kernel(method: String, args: Column*): Column =
+    ColumnConstructorExt(null)(StaticInvoke(HashKernel.getClass, LongType, method, args.map(expression)))
 }

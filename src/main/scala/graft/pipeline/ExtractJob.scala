@@ -44,10 +44,10 @@ object ExtractJob {
 
   /** Content-addressed partition id — stable across runs and input
     * layouts. Null-url rows (validation errors) go to pid 42 mod N:
-    * `xxhash64` of NULL is its seed, 42, so the `coalesce` never fires.
+    * `xxhash64` of NULL is its seed, 42.
     */
   def pidCol(nPids: Int): Column =
-    coalesce(pmod(xxhash64(col("url")), lit(nPids.toLong)), lit(0L)).cast("int")
+    pmod(xxhash64(col("url")), lit(nPids.toLong)).cast("int")
 
   val docsSchema: StructType = StructType(Seq(
     StructField("url", StringType),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.fixtures.Corpus.documents
-import graft.functions.GraftFunctions.fp60
+import graft.functions.GraftFunctions.{fnv1a64, fp60, mix64}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -73,42 +73,52 @@ object Dedup {
 
   private val Bands = 16 // r = 4 rows/band: P(miss | j=0.95) ≈ 1e-12, still ~0 at any corpus size we run
 
-  /** Relational forms of the typed hash aggregators: `groupBy(doc_id)`
-    * instead of `groupByKey(_._1)` so Catalyst can see the grouping key
-    * IS the column the Scans.spread layout already hash-partitions on.
-    * The exchange elision this enables fires only on the uncached
-    * SimHash path: every MinHash call site reads a cached shingle table,
-    * and the InMemoryRelation boundary drops the child's reported
-    * partitioning, so the MinHash aggregation still shuffles one partial
-    * buffer per doc (OPTIMIZATION_r06.md). Same aggregator objects, same
-    * per-row arithmetic → bit-identical signatures.
+  /** MinHash signature (doc_id, m0..m63) of a shingle table: one FNV-1a
+    * hash per shingle, then for each permutation i the doc's minimum of
+    * `mix64(h, i)` — 64 plain `min` aggregates, one codegen'd
+    * HashAggregate with map-side partials.
     */
-  private lazy val minhashUdaf = udaf(graft.functions.MinHashAggregator)
-  private lazy val simhashUdaf = udaf(graft.functions.SimHashAggregator)
-
-  /** (doc_id, band, band_hash) MinHash band table — the LSH index rows.
-    * One string hash per shingle (MinHashAggregator), 16 bands × 4
-    * rows; map-side combining, then one exchange of the per-doc partial
-    * buffers: every caller passes a cached shingle table, whose
-    * InMemoryRelation boundary hides its doc_id partitioning.
-    */
-  private def minhashBands(sh: DataFrame): DataFrame = {
-    val mh = sh.groupBy(col("doc_id"))
-      .agg(minhashUdaf(col("shingle")).as("mh"))
-    mh.select(col("doc_id"), posexplode(array((0 until Bands).map { b =>
-        xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
-      }: _*)))
-      .toDF("doc_id", "band", "bh")
+  private[graft] def minhash(sh: DataFrame): DataFrame = {
+    val ms = (0 until 4 * Bands).map(i => min(mix64(col("h"), i)).as(s"m$i"))
+    sh.select(col("doc_id"), fnv1a64(col("shingle")).as("h"))
+      .groupBy(col("doc_id")).agg(ms.head, ms.tail: _*)
   }
 
-  /** per-doc 60-bit SimHash via the one-pass aggregator (exchange elided
-    * over the spread layout — see minhashUdaf)
+  /** (doc_id, band, band_hash) MinHash band table — the LSH index rows:
+    * 16 bands × 4 rows, each band the xxhash64 of its four minima.
+    */
+  private[graft] def minhashBands(sh: DataFrame): DataFrame =
+    minhash(sh).select(col("doc_id"), posexplode(array((0 until Bands).map { b =>
+        xxhash64((4 * b until 4 * b + 4).map(i => col(s"m$i")): _*)
+      }: _*)))
+      .toDF("doc_id", "band", "bh")
+
+  /** per-doc 60-bit SimHash of (doc_id, tok) occurrence rows: n, the
+    * doc's token count, and per bit j the count c_j of its occurrences
+    * whose fp60(tok) has bit j set. The oracle's sum of ±tf over distinct
+    * tokens is 2·c_j − n, so bit j of the fingerprint is set iff
+    * 2·c_j > n. One `sum` counts two bits, c_j in its low and c_{j+32} in
+    * its high 32 bits (a doc has fewer than 2^31 tokens, so no lane
+    * carries): 33 plain aggregates. (Counting distinct (doc_id, tok)
+    * first, the oracle's shape, costs a second shuffle and was slower in
+    * `Probe scale`.)
+    */
+  private[graft] def simhashOf(toks: DataFrame): DataFrame = {
+    val lanes = (0 until 32).map(j => sum(shiftright(col("fp"), j).bitwiseAND(0x100000001L)).as(s"s$j"))
+    toks.select(col("doc_id"), fp60(col("tok")).as("fp"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"), lanes: _*)
+      .select(col("doc_id"), (0 until 60).map { j =>
+        val c = if (j < 32) col(s"s$j").bitwiseAND(0xffffffffL) else shiftright(col(s"s${j - 32}"), 32)
+        when(c * 2 > col("n"), lit(1L << j)).otherwise(lit(0L))
+      }.reduce(_ bitwiseOR _).as("simhash"))
+  }
+
+  /** per-doc SimHash of the documents table; the groupBy(doc_id) reuses
+    * the Scans.spread exchange
     */
   private def simhash(s: SparkSession, dir: String): DataFrame =
-    graft.util.Scans.spread(documents(s, dir), col("doc_id"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("doc_id"))
-      .agg(simhashUdaf(col("tok")).as("simhash"))
+    simhashOf(graft.util.Scans.spread(documents(s, dir), col("doc_id"))
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok")))
 
   /** base ∪ mutated embedding corpus with L2 norms (shared by the exact
     * and LSH near-dup variants — identical output contract)
@@ -238,16 +248,15 @@ object Dedup {
 
   /** The exact-verified near-dup pairs (a_id, b_id, jacc) of the LSH
     * candidate path: the result of d_minhash_lsh and the edge list of
-    * d_components. Cached per documents dir, so a pass that runs both
-    * reads the pairs the first one built; released at the harness query
-    * boundary like every CacheScope entry. No all-pairs shingle join may
-    * appear anywhere in it (PlanSpec).
+    * d_components. Cached, so a pass that runs both reads the pairs the
+    * first one built (every build of it is the same plan); released at
+    * the harness query boundary like every CacheScope entry. No all-pairs
+    * shingle join may appear anywhere in it (PlanSpec).
     */
-  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
-    graft.util.CacheScope.cached(s, s"lsh-pairs:$dir") {
-      val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
-      verifiedPairs(sh, Some(lshCandidates(sh)))
-    }
+  private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame = {
+    val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
+    graft.util.CacheScope.cached(verifiedPairs(sh, Some(lshCandidates(sh))))
+  }
 
   /** One union-find contraction round of d_components over a symmetric
     * edge list (u, v), partitioned by u so a task holds all edges of the
@@ -359,11 +368,10 @@ object Dedup {
         .orderBy(col("a_id"), col("b_id"))),
 
     // MinHash + LSH banding: 64-perm signatures from ONE string hash per
-    // shingle (MinHashAggregator via udaf — map-side combining, no 64-way
-    // agg-column codegen), 16 bands × 4 rows; candidates from the
-    // band-bucket equality join (shuffles only (band, hash) keys — the
-    // 10^12-scale path), then exact-verified. Output is identical to
-    // d_jaccard_pairs (same oracle): proves recall.
+    // shingle (64 `min` aggregates over its permutations), 16 bands × 4
+    // rows; candidates from the band-bucket equality join (shuffles only
+    // (band, hash) keys — the 10^12-scale path), then exact-verified.
+    // Output is identical to d_jaccard_pairs (same oracle): proves recall.
     "d_minhash_lsh" -> ((s, dir) => lshPairs(s, dir).orderBy(col("a_id"), col("b_id"))),
 
     // INCREMENTAL dedup — the continuous-crawl shape, run through the
@@ -387,9 +395,9 @@ object Dedup {
 
     // SimHash (60-bit, md5-based token hashes, frequency-weighted) — the
     // per-doc fingerprint; hamming-ball search is the scale variant.
-    // One-pass typed Aggregator over raw token occurrences: the 60 signed
-    // bit-counters combine map-side, so the only shuffle carries one
-    // 60-long partial per (partition, doc) — no 60× row amplification.
+    // per-bit counts over raw token occurrences combine map-side, so a
+    // shuffle carries one partial per (partition, doc) — no 60× row
+    // amplification.
     "d_simhash" -> ((s, dir) => simhash(s, dir).orderBy(col("doc_id"))),
 
     // SimHash hamming-ball pairs (hd <= 3) via the band-index join: split
@@ -403,11 +411,10 @@ object Dedup {
     // true near-dups here; the margin is data-dependent.
     "d_simhash_pairs" -> ((s, dir) => {
       // cache the fingerprint table: both sides of the self-join read it,
-      // and at scale it IS the persisted index (16 bytes/doc). Session-
-      // lifetime cache is deliberate — recompute would re-run the full
-      // token aggregation per join side; at 10^12 rows this table is a
-      // written artifact, not a cache (CacheScope releases it at the
-      // harnesses' query boundaries)
+      // and at scale it IS the persisted index (16 bytes/doc) — recompute
+      // would re-run the full token aggregation per join side; at 10^12
+      // rows this table is a written artifact, not a cache (CacheScope
+      // releases it at the harnesses' query boundaries)
       val sim = graft.util.CacheScope.cached(simhash(s, dir))
       val banded = sim.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(i =>

@@ -110,6 +110,13 @@ class LintSpec extends AnyFunSuite {
       s"the md5-60bit fingerprint must be GraftFunctions.fp60 alone: $fingerprints")
   }
 
+  test("no udaf in src/main: aggregates are Catalyst expressions whose plans compare equal") {
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    val udafs = main.filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("udaf("))
+      .map(_.getFileName.toString)
+    assert(udafs.isEmpty, s"a udaf's buffer encoder never compares equal across builds: $udafs")
+  }
+
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
     val bad = scalaSources.filterNot { p =>
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

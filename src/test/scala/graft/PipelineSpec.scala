@@ -180,11 +180,15 @@ class PipelineSpec extends AnyFunSuite {
       (1L, null.asInstanceOf[String], ts, "<p>x</p>".getBytes("UTF-8"), "t", "en"),
       (2L, "https://x/2", ts, body.getBytes("UTF-8"), "t", "en"))
       .toDF("doc_id", "url", "warc_ts", "html", "text", "lang")
-    val r = ExtractJob.run(spark, pages, JobConfig(out, numPids = 2))
+    val r = ExtractJob.run(spark, pages, JobConfig(out, numPids = 4))
     assert(r.failedValidation == 1 && r.docsTotal == 2)
-    // the null-url row lands in pid 0 and its digest row is non-null
-    val lin = Lineage.table(spark, out).where(col("partition_id") === 0)
+    // the null-url row lands in pid 42 mod 4 = 2 (xxhash64 of NULL is its
+    // seed, 42), and that pid's lineage row counts it under a non-null digest
+    val docs = ExtractJob.docs(spark, out)
+    assert(docs.where(col("url").isNull).select("pid").as[Int].collect().toSeq == Seq(2))
+    val lin = Lineage.table(spark, out).where(col("partition_id") === 2)
     assert(lin.count() == 1 && lin.select("digest").head.getString(0) != null)
+    assert(lin.select("rows").head.getLong(0) == docs.where(col("pid") === 2).count())
   }
 
   test("writer lock: concurrent second run fails fast; takeover steals a stale lock") {

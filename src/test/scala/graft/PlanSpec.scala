@@ -179,6 +179,48 @@ class PlanSpec extends AnyFunSuite {
     graft.util.CacheScope.releaseAll()
   }
 
+  /** every cache entry the plan reads, recursively: (output names, entry) */
+  private def cacheEntries(p: SparkPlan): Seq[(Seq[String], AnyRef)] = p.collect {
+    case a: AdaptiveSparkPlanExec => cacheEntries(a.inputPlan)
+    case m: InMemoryTableScanExec =>
+      (m.relation.output.map(_.name), m.relation.cacheBuilder) +: cacheEntries(m.relation.cachedPlan)
+  }.flatten
+
+  test("rebuilt MinHash and SimHash plans compare equal and read the first build's caches") {
+    graft.util.CacheScope.releaseAll()
+    // (what is built, the output names of the cache entry it must share)
+    val builds = Seq[(String, () => org.apache.spark.sql.DataFrame, Seq[String])](
+      ("lshPairs", () => graft.queries.Dedup.lshPairs(spark, sfDir), Seq("a_id", "b_id", "jacc")),
+      ("d_simhash_pairs fingerprints", () => graft.queries.Dedup.defs("d_simhash_pairs")(spark, sfDir),
+        Seq("doc_id", "simhash")),
+      ("probeBandIndex bNew", () => graft.queries.Dedup.defs("d_incremental")(spark, sfDir),
+        Seq("doc_id", "band", "bh")))
+    builds.foreach { case (name, build, cols) =>
+      val (a, b) = (build(), build())
+      assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed), s"$name: builds differ")
+      val (ea, eb) = (cacheEntries(a.queryExecution.sparkPlan), cacheEntries(b.queryExecution.sparkPlan))
+      assert(ea.exists(_._1 == cols), s"$name: no cache entry with columns $cols: ${ea.map(_._1)}")
+      assert(eb.nonEmpty && eb.forall(e => ea.exists(_._2 eq e._2)),
+        s"$name: the second build cached anew: ${eb.map(_._1)} vs ${ea.map(_._1)}")
+    }
+    graft.util.CacheScope.releaseAll()
+  }
+
+  test("rebuilding d_simhash_pairs and d_incremental pins no new cache storage") {
+    graft.util.CacheScope.releaseAll()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    def round(): Int = {
+      Seq("d_simhash_pairs", "d_incremental").foreach(q => graft.queries.Dedup.defs(q)(spark, sfDir).collect())
+      sc.getPersistentRDDs.size
+    }
+    val first = round()
+    val second = round() // no releaseAll() in between
+    graft.util.CacheScope.releaseAll()
+    assert(first > before, s"the queries cache nothing: $before -> $first")
+    assert(second == first, s"the rebuild pinned ${second - first} more cached RDDs")
+  }
+
   test("d_components: one action per contraction round (no count action)") {
     // count ACTIONS (SQL executions), not raw scheduler jobs — parquet
     // footer reads and sort-sampling submit bookkeeping jobs that would
