@@ -4,7 +4,7 @@ import graft.extract.Extractor
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.ColumnConstructorExt
 import org.apache.spark.sql.classic.ColumnConversions.expression
-import org.apache.spark.sql.functions.{conv, lit, md5, substring}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -136,10 +136,10 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = functions.foreach(f =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
 
-  /** 60-bit md5 fingerprint: the first 15 hex digits of md5(c) as a long,
+  /** 60-bit md5 fingerprint of a string column ([[HashKernel.fp60]]),
     * bit-identical to DuckDB's `('0x'||substr(md5(c),1,15))::BIGINT`.
     */
-  def fp60(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def fp60(c: Column): Column = kernel("fp60", c)
 
   /** FNV-1a 64 of a string column ([[HashKernel.fnv1a64]]) */
   def fnv1a64(c: Column): Column = kernel("fnv1a64", c)
@@ -149,7 +149,9 @@ object GraftFunctions {
 
   /** a static [[HashKernel]] call: codegen'd, and equal across builds.
     * `ColumnConstructorExt` is the classic API's `Column(expression)`; its
-    * receiver, the `Column` companion, is private to Spark and never read.
+    * receiver, the `Column` companion, is private to Spark and never read
+    * (SignatureSpec builds every kernel column, so a Spark that reads it
+    * fails there).
     */
   private def kernel(method: String, args: Column*): Column =
     ColumnConstructorExt(null)(StaticInvoke(HashKernel.getClass, LongType, method, args.map(expression)))

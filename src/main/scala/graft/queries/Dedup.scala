@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.fixtures.Corpus.documents
 import graft.functions.GraftFunctions.{fnv1a64, fp60, mix64}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import scala.collection.mutable
@@ -35,63 +35,68 @@ object Dedup {
         "array_distinct(transform(sequence(0, size(ws)-3), i -> concat_ws(' ', slice(ws, i+1, 3))))"
       )).as("shingle"))
 
-  /** exact-verified pairs (a_id, b_id, jacc) with jaccard >= 0.8, from a
-    * given candidate universe (cands = None → all pairs via shingle join);
-    * unsorted, since d_components would throw the sort away.
+  /** (doc_id, n): each doc's shingle count. Cached: it joins both the
+    * a_id and the b_id side; 12 bytes/doc.
     */
-  private def verifiedPairs(sh: DataFrame, cands: Option[DataFrame]): DataFrame = {
-    // cached: the (doc_id, n) size table joins BOTH the a_id and b_id
-    // sides, so the shingle-count aggregation (a full pass over the
-    // shingle table) previously ran twice per action; 12 bytes/doc
-    val sizes = graft.util.CacheScope.cached(
-      sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
-    val inter0 = cands match {
-      case None =>
-        val a = sh.select(col("doc_id").as("a_id"), col("shingle"))
-        val b = sh.select(col("doc_id").as("b_id"), col("shingle"))
-        a.join(b, Seq("shingle")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("c"))
-      case Some(cd) =>
-        // NO broadcast hint: at crawl-scale dup rates (30-50% of 10^12
-        // docs) the candidate-pair set is billions of rows — a forced
-        // broadcast dies at the driver. Plain equi-joins on a_id/b_id let
-        // AQE choose broadcast when the runtime size is actually under
-        // the threshold, and degrade to a shuffle join when it is not.
-        cd
-          .join(sh.withColumnRenamed("doc_id", "a_id").withColumnRenamed("shingle", "sa"), Seq("a_id"))
-          .join(sh.withColumnRenamed("doc_id", "b_id").withColumnRenamed("shingle", "sb"), Seq("b_id"))
-          .where(col("sa") === col("sb"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("c"))
-    }
-    inter0
-      .join(sizes.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
-      .join(sizes.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id"))
-      .where(lit(9) * col("c") >= lit(4) * (col("na") + col("nb"))) // jacc >= 0.8, integer-exact
+  private def shingleCounts(sh: DataFrame): DataFrame =
+    graft.util.CacheScope.cached(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
+
+  /** pairs (a_id, b_id, ...) with each side's shingle count na, nb */
+  private def withCounts(pairs: DataFrame, sh: DataFrame): DataFrame = {
+    val n = shingleCounts(sh)
+    pairs.join(n.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
+      .join(n.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id"))
+  }
+
+  /** (a_id, b_id, jacc) of the pairs (a_id, b_id, c, na, nb), c shared
+    * shingles, whose jaccard is >= 0.8; unsorted, since d_components
+    * would throw the sort away
+    */
+  private def jaccardAtLeast08(inter: DataFrame): DataFrame =
+    inter.where(lit(9) * col("c") >= lit(4) * (col("na") + col("nb"))) // integer-exact
       .select(col("a_id"), col("b_id"),
         round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6).as("jacc"))
-  }
+
+  /** exact-verified pairs (a_id, b_id, jacc) of candidate pairs (a_id,
+    * b_id, na, nb). NO broadcast hint: at crawl-scale dup rates (30-50%
+    * of 10^12 docs) the candidate-pair set is billions of rows — a forced
+    * broadcast dies at the driver. Plain equi-joins on a_id/b_id let AQE
+    * choose broadcast when the runtime size is actually under the
+    * threshold, and degrade to a shuffle join when it is not.
+    */
+  private def verifiedPairs(sh: DataFrame, cands: DataFrame): DataFrame =
+    jaccardAtLeast08(cands
+      .join(sh.select(col("doc_id").as("a_id"), col("shingle").as("sa")), Seq("a_id"))
+      .join(sh.select(col("doc_id").as("b_id"), col("shingle").as("sb")), Seq("b_id"))
+      .where(col("sa") === col("sb"))
+      .groupBy(col("a_id"), col("b_id"), col("na"), col("nb")).agg(count(lit(1)).as("c")))
 
   private val Bands = 16 // r = 4 rows/band: P(miss | j=0.95) ≈ 1e-12, still ~0 at any corpus size we run
 
-  /** MinHash signature (doc_id, m0..m63) of a shingle table: one FNV-1a
-    * hash per shingle, then for each permutation i the doc's minimum of
-    * `mix64(h, i)` — 64 plain `min` aggregates, one codegen'd
-    * HashAggregate with map-side partials.
+  /** MinHash signature (doc_id, n, mh) of a shingle table: n is the
+    * doc's shingle count; mh holds, for each permutation i, the doc's
+    * minimum of `mix64(h, i)` over one FNV-1a hash h per shingle — 64
+    * plain `min` aggregates, one codegen'd HashAggregate with map-side
+    * partials. The minima leave the aggregate as one array: Spark sizes
+    * an aggregate's output by its row width, and 64 long columns would
+    * price the band table 20× over the broadcast threshold, so its
+    * self-join would shuffle.
     */
-  private[graft] def minhash(sh: DataFrame): DataFrame = {
-    val ms = (0 until 4 * Bands).map(i => min(mix64(col("h"), i)).as(s"m$i"))
+  private[graft] def minhash(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), fnv1a64(col("shingle")).as("h"))
-      .groupBy(col("doc_id")).agg(ms.head, ms.tail: _*)
-  }
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n"), array((0 until 4 * Bands).map(i => min(mix64(col("h"), i))): _*).as("mh"))
 
-  /** (doc_id, band, band_hash) MinHash band table — the LSH index rows:
-    * 16 bands × 4 rows, each band the xxhash64 of its four minima.
+  /** the (band, bh) rows of a signature: 16 bands × 4 rows, each band the
+    * xxhash64 of its four minima
     */
+  private def bandRows: Column = posexplode(array((0 until Bands).map { b =>
+      xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
+    }: _*)).as(Seq("band", "bh"))
+
+  /** (doc_id, band, bh) MinHash band table — the LSH index rows */
   private[graft] def minhashBands(sh: DataFrame): DataFrame =
-    minhash(sh).select(col("doc_id"), posexplode(array((0 until Bands).map { b =>
-        xxhash64((4 * b until 4 * b + 4).map(i => col(s"m$i")): _*)
-      }: _*)))
-      .toDF("doc_id", "band", "bh")
+    minhash(sh).select(col("doc_id"), bandRows)
 
   /** per-doc 60-bit SimHash of (doc_id, tok) occurrence rows: n, the
     * doc's token count, and per bit j the count c_j of its occurrences
@@ -227,23 +232,24 @@ object Dedup {
       .toDF("vec_id", "band", "bh")
   }
 
-  /** LSH candidate pairs (a_id < b_id) from the band-bucket equality
-    * join — the 10^12-scale candidate generator shared by d_minhash_lsh
-    * and d_components: shuffles only (band, hash) keys, never shingles.
+  /** LSH candidate pairs (a_id < b_id, na, nb) from the band-bucket
+    * equality join — the 10^12-scale candidate generator shared by
+    * d_minhash_lsh and d_components: shuffles only (band, hash) keys and
+    * shingle counts, never shingles. The counts ride on the band rows, from
+    * the signature aggregate, so no separate count pass or join is needed.
     */
   private def lshCandidates(sh: DataFrame): DataFrame = {
     // cached: BOTH sides of the band-bucket self-join read the band
     // table, so the MinHash aggregation (the heavy pass) previously ran
-    // twice per action; the band table is Bands rows/doc of 20 bytes —
-    // strictly smaller than the shingle table already cached alongside
-    // it (released at the harness query boundary like every CacheScope
+    // twice per action; the band table is Bands rows/doc of 28 bytes
+    // (released at the harness query boundary like every CacheScope
     // entry)
-    val bands = graft.util.CacheScope.cached(minhashBands(sh))
-    val a = bands.select(col("band"), col("bh"), col("doc_id").as("a_id"))
-    val b = bands.select(col("band"), col("bh"), col("doc_id").as("b_id"))
+    val bands = graft.util.CacheScope.cached(minhash(sh).select(col("doc_id"), col("n"), bandRows))
+    val a = bands.select(col("band"), col("bh"), col("doc_id").as("a_id"), col("n").as("na"))
+    val b = bands.select(col("band"), col("bh"), col("doc_id").as("b_id"), col("n").as("nb"))
     a.join(b, Seq("band", "bh"))
       .where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+      .select(col("a_id"), col("b_id"), col("na"), col("nb")).distinct()
   }
 
   /** The exact-verified near-dup pairs (a_id, b_id, jacc) of the LSH
@@ -255,7 +261,7 @@ object Dedup {
     */
   private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame = {
     val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
-    graft.util.CacheScope.cached(verifiedPairs(sh, Some(lshCandidates(sh))))
+    graft.util.CacheScope.cached(verifiedPairs(sh, lshCandidates(sh)))
   }
 
   /** One union-find contraction round of d_components over a symmetric
@@ -340,7 +346,7 @@ object Dedup {
         greatest(col("x_id"), col("y_id")).as("b_id"))
       .distinct()
     val shAll = s.read.parquet(s"$indexDir/shingles").union(shNew)
-    verifiedPairs(shAll, Some(cands)).orderBy(col("a_id"), col("b_id"))
+    verifiedPairs(shAll, withCounts(cands, shAll)).orderBy(col("a_id"), col("b_id"))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -363,9 +369,14 @@ object Dedup {
     // replaced by LSH at scale. Shingles cached for the query's lifetime
     // (both self-join sides + the size table read them) and released at
     // the harness boundary like every other query-internal cache.
-    "d_jaccard_pairs" -> ((s, dir) =>
-      verifiedPairs(graft.util.CacheScope.cached(shingles(documents(s, dir))), None)
-        .orderBy(col("a_id"), col("b_id"))),
+    "d_jaccard_pairs" -> ((s, dir) => {
+      val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
+      val a = sh.select(col("doc_id").as("a_id"), col("shingle"))
+      val b = sh.select(col("doc_id").as("b_id"), col("shingle"))
+      jaccardAtLeast08(withCounts(a.join(b, Seq("shingle")).where(col("a_id") < col("b_id"))
+          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("c")), sh))
+        .orderBy(col("a_id"), col("b_id"))
+    }),
 
     // MinHash + LSH banding: 64-perm signatures from ONE string hash per
     // shingle (64 `min` aggregates over its permutations), 16 bands × 4

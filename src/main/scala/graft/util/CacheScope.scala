@@ -1,7 +1,6 @@
 package graft.util
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.storage.StorageLevel
 
 /** Session-lifetime cache registry for query-internal `.cache()` calls
   * whose DataFrame outlives the builder function (the query result is
@@ -20,13 +19,11 @@ object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
   /** cache + register for the next releaseAll(); a plan already cached
-    * reads that entry
+    * reads that entry (Spark's cache manager skips it with a warning)
     */
   def cached[T](ds: Dataset[T]): Dataset[T] = {
-    if (ds.storageLevel == StorageLevel.NONE) {
-      ds.cache()
-      live.add(ds)
-    }
+    ds.cache()
+    live.add(ds)
     ds
   }
 

@@ -1,9 +1,10 @@
 package graft
 
-import graft.functions.{MinHashAggregator, SimHashAggregator}
+import graft.functions.{GraftFunctions, HashKernel, MinHashAggregator, SimHashAggregator}
 import graft.queries.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,8 +43,9 @@ class SignatureSpec extends AnyFunSuite {
           xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
         }: _*)))
       val sig = Dedup.minhash(sh)
-        .select(col("doc_id"), array((0 until MinHashAggregator.NumPerms).map(i => col(s"m$i")): _*))
-      rowSet(sig) == rowSet(ref) && rowSet(Dedup.minhashBands(sh)) == rowSet(refBands)
+      rowSet(sig.select("doc_id", "mh")) == rowSet(ref) &&
+        rowSet(sig.select("doc_id", "n")) == rowSet(sh.groupBy(col("doc_id")).count()) &&
+        rowSet(Dedup.minhashBands(sh)) == rowSet(refBands)
     }
   }
 
@@ -53,6 +55,33 @@ class SignatureSpec extends AnyFunSuite {
       rowSet(Dedup.simhashOf(toks)) ==
         rowSet(toks.groupBy(col("doc_id")).agg(udaf(SimHashAggregator).apply(col("tok"))))
     }
+  }
+
+  test("fp60 is bit-identical to the first 15 hex digits of Spark's md5") {
+    check("fp60") { docs =>
+      val toks = rows(docs, "tok").union(rows(List(List(null)), "tok"))
+      rowSet(toks.select(col("tok"), GraftFunctions.fp60(col("tok")))) ==
+        rowSet(toks.select(col("tok"), conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long")))
+    }
+  }
+
+  test("each HashKernel column builds on its own and evaluates as its kernel") {
+    import spark.implicits._
+    val strs = Seq("", "a b", "é 😀", "中文")
+    val h = GraftFunctions.fnv1a64(col("s"))
+    val got = strs.toDF("s").select(h, GraftFunctions.mix64(h, 7), GraftFunctions.fp60(col("s")))
+      .collect().map(_.toSeq).toSeq
+    assert(got == strs.map { s =>
+      val u = UTF8String.fromString(s)
+      Seq(HashKernel.fnv1a64(u), HashKernel.mix64(HashKernel.fnv1a64(u), 7), HashKernel.fp60(u))
+    })
+  }
+
+  test("the band table is estimated near its shingle input's size, so its self-join can broadcast") {
+    val sh = rows(List(List("a b c", "b c d", "c d e"), List("x y z")), "shingle")
+    def est(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val bands = est(Dedup.minhashBands(sh))
+    assert(bands <= 2 * est(sh), s"band table $bands B, shingles ${est(sh)} B")
   }
 
   test("both signatures plan as whole-stage-codegen HashAggregates") {
