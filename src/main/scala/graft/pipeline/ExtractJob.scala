@@ -154,6 +154,7 @@ object ExtractJob {
       val sums = new LineageSums(numPids)
       sc.register(sums)
       val extracted = epoch.fold(extractColumns(withPid))(e => extractColumns(withPid).withColumn("epoch", lit(e)))
+      val w0 = System.nanoTime()
       listener.track(sc) {
         lineageAgg(extracted.repartition(numPids, col("pid")), sums)
           .write.mode(SaveMode.Overwrite).partitionBy(epoch.map(_ => "epoch").toSeq :+ "pid": _*)
@@ -164,13 +165,14 @@ object ExtractJob {
           .option("partitionOverwriteMode", "dynamic")
           .parquet(s"$outputDir/docs")
       }
+      val writeMs = (System.nanoTime() - w0) / 1e6
       val seen = sums.value.map(s => s.pid -> s).toMap
       val pids = (fill ++ seen.keys).distinct.sorted.map(p => seen.getOrElse(p, PidSums(p, 0, 0, 0, 0, 0, 0, 0)))
       val c0 = System.nanoTime()
       val rows = pids.map(s => Row.fromSeq(Seq(s.pid, s.rows, s.bytes, s.digest.toString) ++ epoch))
       Lineage.commitRows(spark, outputDir, lineageSchema(epoch), rows, epoch).map { snap =>
         val now = System.nanoTime()
-        val report = RunReport(snap, pids, (now - t0) / 1e9, (now - c0) / 1e6)
+        val report = RunReport(snap, pids, (now - t0) / 1e9, writeMs, (now - c0) / 1e6)
         val name = epoch.fold(s"run-$snap")(e => s"epoch-$e")
         Lineage.publish(Paths.get(outputDir, "_metrics", s"$name.json"),
           report.toJson(listener.snapshot).getBytes("UTF-8"))
@@ -196,7 +198,7 @@ object ExtractJob {
       .filterNot(committed.pids)
       .filter(p => cfg.limitPids.forall(_.contains(p)))
 
-    if (runPids.isEmpty) return RunReport(committed.snapshot, Nil, (System.nanoTime() - t0) / 1e9, 0.0)
+    if (runPids.isEmpty) return RunReport(committed.snapshot, Nil, (System.nanoTime() - t0) / 1e9, 0.0, 0.0)
 
     val withPid = pages
       .withColumn("pid", pidCol(cfg.numPids))

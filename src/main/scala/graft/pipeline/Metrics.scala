@@ -115,10 +115,13 @@ object GraftMetricsListener {
 }
 
 /** One batch run's or stream epoch's report: the per-pid lineage sums
-  * it committed (empty pids included for a batch run), its wall time and
-  * `commitMs`, the driver-side lineage write plus manifest rename.
+  * it committed (empty pids included for a batch run), its wall time,
+  * `writeMs`, the wall time of the docs write action (its planning, its
+  * jobs and its job commit), and `commitMs`, the driver-side lineage write
+  * plus manifest rename.
   */
-final case class RunReport(snapshot: Long, pids: Seq[PidSums], wallSec: Double, commitMs: Double) {
+final case class RunReport(snapshot: Long, pids: Seq[PidSums], wallSec: Double, writeMs: Double,
+    commitMs: Double) {
   def pidsProcessed: Int = pids.size
   def docsOk: Long = pids.map(_.ok).sum
   def failedValidation: Long = pids.map(_.failedValidation).sum
@@ -135,8 +138,9 @@ final case class RunReport(snapshot: Long, pids: Seq[PidSums], wallSec: Double, 
     "snapshot" -> snapshot, "pids_processed" -> pidsProcessed, "docs_ok" -> docsOk,
     "failed_validation" -> failedValidation, "failed_payload" -> failedPayload,
     "failed_unexpected" -> failedUnexpected, "docs_total" -> docsTotal,
-    "bytes_in" -> bytesIn, "wall_sec" -> wallSec, "commit_ms" -> commitMs, "docs_per_sec" -> docsPerSec,
-    "mb_per_sec" -> mbPerSec, "failure_rate" -> failureRate, "stages" -> stages.map(_.fields)))
+    "bytes_in" -> bytesIn, "wall_sec" -> wallSec, "write_ms" -> writeMs, "commit_ms" -> commitMs,
+    "docs_per_sec" -> docsPerSec, "mb_per_sec" -> mbPerSec, "failure_rate" -> failureRate,
+    "stages" -> stages.map(_.fields)))
 }
 
 object RunReport {

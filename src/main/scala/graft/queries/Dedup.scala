@@ -10,10 +10,14 @@ import scala.collection.mutable
 /** Training-data deduplication operators over the `documents` table:
   * exact (hash group), n-gram Jaccard (the exact oracle), MinHash+LSH
   * (the scale path — band-bucket join instead of the all-pairs shingle
-  * join), and SimHash fingerprints. All hash choices (md5-60bit) are
-  * portable to DuckDB so every operator has an exact oracle; thresholds
-  * are integer-exact (9c >= 4(na+nb) ⟺ jaccard >= 0.8) so no float
-  * boundary can diverge between engines.
+  * join), and SimHash fingerprints. Every LSH path (MinHash, SimHash,
+  * hyperplane, the persisted band-index probe) draws its candidates from
+  * one band-bucket generator, `bucketPairs`. MinHash hashes each shingle
+  * with FNV-1a and permutes it with splitmix; its candidates are verified
+  * by exact shingle overlap, so its oracle is the exact Jaccard. SimHash
+  * token hashes are md5-60bit, portable to DuckDB. Thresholds are
+  * integer-exact (9c >= 4(na+nb) ⟺ jaccard >= 0.8) so no float boundary
+  * can diverge between engines.
   */
 object Dedup {
 
@@ -34,19 +38,6 @@ object Dedup {
       .select(col("doc_id"), explode(expr(
         "array_distinct(transform(sequence(0, size(ws)-3), i -> concat_ws(' ', slice(ws, i+1, 3))))"
       )).as("shingle"))
-
-  /** (doc_id, n): each doc's shingle count. Cached: it joins both the
-    * a_id and the b_id side; 12 bytes/doc.
-    */
-  private def shingleCounts(sh: DataFrame): DataFrame =
-    graft.util.CacheScope.cached(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
-
-  /** pairs (a_id, b_id, ...) with each side's shingle count na, nb */
-  private def withCounts(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val n = shingleCounts(sh)
-    pairs.join(n.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
-      .join(n.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id"))
-  }
 
   /** (a_id, b_id, jacc) of the pairs (a_id, b_id, c, na, nb), c shared
     * shingles, whose jaccard is >= 0.8; unsorted, since d_components
@@ -94,9 +85,39 @@ object Dedup {
       xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
     }: _*)).as(Seq("band", "bh"))
 
-  /** (doc_id, band, bh) MinHash band table — the LSH index rows */
+  /** (doc_id, n, band, bh) MinHash band table — the LSH candidate rows
+    * and the persisted index rows; n, the doc's shingle count, rides on
+    * them so the verify needs no separate count pass or join
+    */
   private[graft] def minhashBands(sh: DataFrame): DataFrame =
-    minhash(sh).select(col("doc_id"), bandRows)
+    minhash(sh).select(col("doc_id"), col("n"), bandRows)
+
+  /** The one band-bucket candidate generator. `rows` are bucket rows
+    * (id, band, bh, carry…), id its first column; the output is every pair
+    * (a_id < b_id, <c>a…, <c>b…) of rows sharing a (band, bh) bucket, once
+    * per shared band, so callers filter and then `distinct`. With `stored`
+    * (index rows of the same shape, ids disjoint from `rows`), each row
+    * also pairs with the stored rows of its buckets; stored rows never pair
+    * with each other. Shuffles only the bucket keys, ids and carried columns.
+    */
+  private[graft] def bucketPairs(rows: DataFrame, stored: Option[DataFrame], carry: String*): DataFrame = {
+    val fields = rows.columns.head +: carry
+    def name(f: String, s: String) = if (f == fields.head) s"${s}_id" else f + s
+    def side(t: DataFrame, s: String, flag: Column*) =
+      t.select(Seq(col("band"), col("bh")) ++ fields.map(f => col(f).as(name(f, s))) ++ flag: _*)
+    val other = stored.fold(side(rows, "b"))(st =>
+      side(st, "b", lit(true).as("stored")).union(side(rows, "b", lit(false).as("stored"))))
+    val pairs = side(rows, "a").join(other, Seq("band", "bh"))
+    val lo = col("a_id") < col("b_id")
+    stored match {
+      case None => pairs.where(lo).select(fields.flatMap(f => Seq(col(name(f, "a")), col(name(f, "b")))): _*)
+      case Some(_) => // a row's pair with a stored row is kept in either id order, then swapped into it
+        pairs.where(col("stored") || lo).select(fields.flatMap { f =>
+          val (a, b) = (col(name(f, "a")), col(name(f, "b")))
+          Seq(when(lo, a).otherwise(b).as(name(f, "a")), when(lo, b).otherwise(a).as(name(f, "b")))
+        }: _*)
+    }
+  }
 
   /** per-doc 60-bit SimHash of (doc_id, tok) occurrence rows: n, the
     * doc's token count, and per bit j the count c_j of its occurrences
@@ -232,25 +253,14 @@ object Dedup {
       .toDF("vec_id", "band", "bh")
   }
 
-  /** LSH candidate pairs (a_id < b_id, na, nb) from the band-bucket
-    * equality join — the 10^12-scale candidate generator shared by
-    * d_minhash_lsh and d_components: shuffles only (band, hash) keys and
-    * shingle counts, never shingles. The counts ride on the band rows, from
-    * the signature aggregate, so no separate count pass or join is needed.
+  /** LSH candidate pairs (a_id < b_id, na, nb) of d_minhash_lsh and
+    * d_components: shuffles only (band, hash) keys and shingle counts,
+    * never shingles. The band table is cached: BOTH sides of the bucket
+    * self-join read it, and it is Bands rows/doc of 28 bytes (released at
+    * the harness query boundary like every CacheScope entry).
     */
-  private def lshCandidates(sh: DataFrame): DataFrame = {
-    // cached: BOTH sides of the band-bucket self-join read the band
-    // table, so the MinHash aggregation (the heavy pass) previously ran
-    // twice per action; the band table is Bands rows/doc of 28 bytes
-    // (released at the harness query boundary like every CacheScope
-    // entry)
-    val bands = graft.util.CacheScope.cached(minhash(sh).select(col("doc_id"), col("n"), bandRows))
-    val a = bands.select(col("band"), col("bh"), col("doc_id").as("a_id"), col("n").as("na"))
-    val b = bands.select(col("band"), col("bh"), col("doc_id").as("b_id"), col("n").as("nb"))
-    a.join(b, Seq("band", "bh"))
-      .where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("na"), col("nb")).distinct()
-  }
+  private def lshCandidates(sh: DataFrame): DataFrame =
+    bucketPairs(graft.util.CacheScope.cached(minhashBands(sh)), None, "n").distinct()
 
   /** The exact-verified near-dup pairs (a_id, b_id, jacc) of the LSH
     * candidate path: the result of d_minhash_lsh and the edge list of
@@ -299,32 +309,33 @@ object Dedup {
   /** Persisted LSH band-index lifecycle (the continuous-crawl contract,
     * mirroring Similarity.buildIndex/queryIndex): `buildBandIndex` writes
     * the index as parquet —
-    *   bands/    (doc_id, band, bh)   the probe join key (~Bands rows/doc)
-    *   shingles/ (doc_id, shingle)    the exact-verify sets
+    *   bands/    (doc_id, n, band, bh)  the probe rows (Bands rows/doc),
+    *                                    n the doc's shingle count
+    *   shingles/ (doc_id, shingle)      the exact-verify sets
     * `probeBandIndex` answers "which stored or in-batch docs near-dup the
     * new batch" with work proportional to the NEW batch (band-equality
     * join against the stored rows — never O(corpus²), no re-hash of the
     * indexed corpus), and `appendBandIndex` grows the artifact so the next
     * batch probes against this one too.
     */
-  def buildBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit = {
-    val sh = shingles(documents).cache()
-    minhashBands(sh).write.mode("overwrite").parquet(s"$indexDir/bands")
-    sh.write.mode("overwrite").parquet(s"$indexDir/shingles")
-    sh.unpersist()
-  }
+  def buildBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit =
+    writeBandIndex(documents, indexDir, "overwrite")
 
-  def appendBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit = {
+  def appendBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit =
+    writeBandIndex(documents, indexDir, "append")
+
+  private def writeBandIndex(documents: DataFrame, indexDir: String, mode: String): Unit = {
     val sh = shingles(documents).cache()
-    minhashBands(sh).write.mode("append").parquet(s"$indexDir/bands")
-    sh.write.mode("append").parquet(s"$indexDir/shingles")
+    minhashBands(sh).write.mode(mode).parquet(s"$indexDir/bands")
+    sh.write.mode(mode).parquet(s"$indexDir/shingles")
     sh.unpersist()
   }
 
   /** All jaccard>=0.8 near-dup pairs touching `newDocs`, probing the
-    * STORED index: candidates = newBands × (storedBands ∪ newBands) band
-    * join; exact verify joins the stored shingle table ∪ the new batch's
-    * shingles (both shuffle equi-joins — AQE broadcasts only when small).
+    * STORED index: candidates = newBands × (storedBands ∪ newBands) bucket
+    * pairs, each side's shingle count read off its band rows; exact verify
+    * joins the stored shingle table ∪ the new batch's shingles (both
+    * shuffle equi-joins — AQE broadcasts only when small).
     * `newDocs` must be disjoint from the indexed corpus (probe BEFORE
     * appendBandIndex) — overlap would double-count shingles in the verify.
     */
@@ -337,16 +348,8 @@ object Dedup {
     // candidate join — without the cache the batch MinHash aggregation
     // runs twice per action
     val bNew = graft.util.CacheScope.cached(minhashBands(shNew))
-    val stored = s.read.parquet(s"$indexDir/bands")
-    val cands = bNew.select(col("band"), col("bh"), col("doc_id").as("x_id"))
-      .join(stored.union(bNew).select(col("band"), col("bh"), col("doc_id").as("y_id")),
-        Seq("band", "bh"))
-      .where(col("x_id") =!= col("y_id"))
-      .select(least(col("x_id"), col("y_id")).as("a_id"),
-        greatest(col("x_id"), col("y_id")).as("b_id"))
-      .distinct()
-    val shAll = s.read.parquet(s"$indexDir/shingles").union(shNew)
-    verifiedPairs(shAll, withCounts(cands, shAll)).orderBy(col("a_id"), col("b_id"))
+    val cands = bucketPairs(bNew, Some(s.read.parquet(s"$indexDir/bands")), "n").distinct()
+    verifiedPairs(s.read.parquet(s"$indexDir/shingles").union(shNew), cands).orderBy(col("a_id"), col("b_id"))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -368,13 +371,18 @@ object Dedup {
     // correctness baseline; O(pairs sharing a shingle), fine at test SF,
     // replaced by LSH at scale. Shingles cached for the query's lifetime
     // (both self-join sides + the size table read them) and released at
-    // the harness boundary like every other query-internal cache.
+    // the harness boundary like every other query-internal cache; so is
+    // each doc's shingle count n (it joins both the a_id and the b_id
+    // side; 12 bytes/doc).
     "d_jaccard_pairs" -> ((s, dir) => {
       val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
+      val n = graft.util.CacheScope.cached(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
       val a = sh.select(col("doc_id").as("a_id"), col("shingle"))
       val b = sh.select(col("doc_id").as("b_id"), col("shingle"))
-      jaccardAtLeast08(withCounts(a.join(b, Seq("shingle")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("c")), sh))
+      jaccardAtLeast08(a.join(b, Seq("shingle")).where(col("a_id") < col("b_id"))
+          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("c"))
+          .join(n.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
+          .join(n.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id")))
         .orderBy(col("a_id"), col("b_id"))
     }),
 
@@ -397,7 +405,7 @@ object Dedup {
     // one-time backfill. Output = all near-dup pairs touching B (same
     // jaccard >= 0.8 contract as d_jaccard_pairs).
     "d_incremental" -> ((s, dir) => {
-      val idxDir = graft.util.Staging.keyedArtifact("lshidx", dir, 1)(p =>
+      val idxDir = graft.util.Staging.keyedArtifact("lshidx", dir, 2)(p =>
         java.nio.file.Files.exists(p.resolve("bands").resolve("_SUCCESS")) &&
           java.nio.file.Files.exists(p.resolve("shingles").resolve("_SUCCESS")))(
         out => buildBandIndex(s, documents(s, dir).where(col("doc_id") % 2 === 0), out))
@@ -430,15 +438,9 @@ object Dedup {
       val banded = sim.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(i =>
           expr(s"shiftright(simhash, ${15 * i}) & 32767")): _*)))
-        .toDF("doc_id", "simhash", "band", "bv")
-      val a = banded.select(col("band"), col("bv"),
-        col("doc_id").as("a_id"), col("simhash").as("sa"))
-      val b = banded.select(col("band"), col("bv"),
-        col("doc_id").as("b_id"), col("simhash").as("sb"))
-      a.join(b, Seq("band", "bv"))
-        .where(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          expr("bit_count(sa ^ sb)").as("hamming"))
+        .toDF("doc_id", "s", "band", "bh")
+      bucketPairs(banded, None, "s")
+        .select(col("a_id"), col("b_id"), expr("bit_count(sa ^ sb)").as("hamming"))
         // hamming filter BEFORE the distinct: identical rows (filter and
         // distinct commute), but the dedup exchange now carries only the
         // <=3 survivors instead of every band-collision candidate
@@ -537,12 +539,7 @@ object Dedup {
       // signature flatMap (the heavy pass) previously ran twice per
       // action; the signature table is EBands rows/vec of 16 bytes
       val sig = graft.util.CacheScope.cached(hyperplaneBands(s, corpus))
-      val a = sig.select(col("band"), col("bh"), col("vec_id").as("a_id"))
-      val b = sig.select(col("band"), col("bh"), col("vec_id").as("b_id"))
-      val cands = a.join(b, Seq("band", "bh"))
-        .where(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id")).distinct()
-      cosineVerified(corpus, cands)
+      cosineVerified(corpus, bucketPairs(sig, None).distinct())
     }),
 
     // DUP-CLUSTER connected components: near-dup is not transitive (a~b,

@@ -29,6 +29,9 @@ import scala.jdk.CollectionConverters._
   *   scale  [sfDir] [scales]              dedup/curation queries per amplification k
   *   spill  [sfDir] [amplify] [giantWords] [cpus]
   *          d_paragraph / d_ngram_spans with one planted giant document
+  *   scaling [sfDir] [amplify] [rounds] [levels]
+  *          the extraction projection at each parallelism level, levels
+  *          alternating within each round (paired N→4N efficiency)
   *
   * Parallelism is SPARK_GRAFT_CPUS (default 32; `spill` takes its own).
   */
@@ -68,7 +71,8 @@ object Probe {
       case "kernel" +: rest => kernel(rest, emit)
       case "scale" +: rest => scale(spark, rest, emit)
       case "spill" +: rest => spill(spark, rest, emit)
-      case _ => throw new IllegalArgumentException("usage: Probe query|stream|kernel|scale|spill <args>")
+      case "scaling" +: rest => scaling(spark, rest, emit)
+      case _ => throw new IllegalArgumentException("usage: Probe query|stream|kernel|scale|spill|scaling <args>")
     }
 
   private def line(fields: (String, Any)*): String = Json.write(ListMap(fields: _*))
@@ -212,6 +216,32 @@ object Probe {
         require(m.rows == docs, s"$q row drift: ${m.rows} vs $docs")
         require(kept == expected, s"$q giant doc $keptCol: $kept vs $expected")
       }
+  }
+
+  /** Paired scaling: this host's load drifts over minutes, so unpaired
+    * per-level medians confound load with parallelism. Each round runs
+    * every level back to back and prints one line per (round, level); the
+    * N→4N efficiency is t(N) / t(4N) / 4 within a round. Level n runs
+    * `ExtractJob.extractColumns` over the pages amplified `amplify`× as n
+    * tasks (the staged 256 partitions coalesced to n), every output column
+    * evaluated, so the session needs at least max(levels) cores.
+    */
+  private def scaling(spark: SparkSession, args: Seq[String], emit: String => Unit): Unit = {
+    val sfDir = args.headOption.getOrElse(DefaultSf)
+    val amplify = args.lift(1).fold(2048)(_.toInt)
+    val levels = args.lift(3).fold(Seq(4, 8, 16, 32))(_.split(",").map(_.toInt).toSeq)
+    require(levels.max <= spark.sparkContext.defaultParallelism,
+      s"levels $levels need ${levels.max} cores, the session has ${spark.sparkContext.defaultParallelism}")
+    val dir = Staging.keyedArtifact(s"probe-pages-x$amplify", sfDir, version = 1)(
+        p => Files.exists(p.resolve("_SUCCESS"))) { tmp =>
+      Corpus.pagesAmplified(spark, sfDir, amplify).repartition(256).write.parquet(tmp)
+    }
+    def run(n: Int) = measure(spark, "extract", dir, Some((s, d) =>
+      graft.pipeline.ExtractJob.extractColumns(s.read.parquet(d).coalesce(n).withColumn("pid", lit(0)))))
+    run(levels.min) // JVM and codegen warm-up
+    (1 to args.lift(2).fold(4)(_.toInt)).foreach { r =>
+      levels.foreach(n => emit(repLine("scaling", "extract", r, run(n), "level" -> n, "amplify" -> amplify)))
+    }
   }
 
   /** The documents table amplified k×, staged once per corpus content.

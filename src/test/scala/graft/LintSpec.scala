@@ -117,6 +117,14 @@ class LintSpec extends AnyFunSuite {
     assert(udafs.isEmpty, s"a udaf's buffer encoder never compares equal across builds: $udafs")
   }
 
+  test("one band-bucket join in src/main: every LSH path draws candidates from Dedup.bucketPairs") {
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    // a join key Seq("band", <bucket>); `.as(Seq("band", "bh"))` names the band rows' columns
+    val joins = main.flatMap(p => """(?<!\.as\()Seq\("band",\s*"\w+"\)""".r
+      .findAllIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).map(_ => p.getFileName.toString))
+    assert(joins == Seq("Dedup.scala"), s"one band-bucket join (Dedup.bucketPairs) allowed in src/main: $joins")
+  }
+
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
     val bad = scalaSources.filterNot { p =>
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

@@ -14,7 +14,7 @@ object MetricsRecord {
 
   val ReportKeys: Set[String] = Set("snapshot", "pids_processed", "docs_ok",
     "failed_validation", "failed_payload", "failed_unexpected", "docs_total",
-    "bytes_in", "wall_sec", "commit_ms", "docs_per_sec", "mb_per_sec", "failure_rate", "stages")
+    "bytes_in", "wall_sec", "write_ms", "commit_ms", "docs_per_sec", "mb_per_sec", "failure_rate", "stages")
 
   val StageKeys: Set[String] = Set("stage", "name", "tasks", "executor_run_ms",
     "input_bytes", "input_records", "output_bytes", "shuffle_read_bytes",

@@ -59,6 +59,7 @@ class PipelineSpec extends AnyFunSuite {
     val rec = MetricsRecord.read(Paths.get(out, "_metrics", "run-1.json"))
     assert(MetricsRecord.hasWriteStage(rec), rec.toString)
     assert(rec.get("commit_ms").asDouble > 0 && rec.get("commit_ms").asDouble < rec.get("wall_sec").asDouble * 1000)
+    assert(rec.get("write_ms").asDouble > 0 && rec.get("write_ms").asDouble < rec.get("wall_sec").asDouble * 1000)
     assert(MetricsRecord.onlyDocsWrite(rec), rec.toString)
   }
 

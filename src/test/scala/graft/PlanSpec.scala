@@ -194,7 +194,7 @@ class PlanSpec extends AnyFunSuite {
       ("d_simhash_pairs fingerprints", () => graft.queries.Dedup.defs("d_simhash_pairs")(spark, sfDir),
         Seq("doc_id", "simhash")),
       ("probeBandIndex bNew", () => graft.queries.Dedup.defs("d_incremental")(spark, sfDir),
-        Seq("doc_id", "band", "bh")))
+        Seq("doc_id", "n", "band", "bh")))
     builds.foreach { case (name, build, cols) =>
       val (a, b) = (build(), build())
       assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed), s"$name: builds differ")

@@ -51,6 +51,18 @@ class ProbeSpec extends AnyFunSuite {
     }
   }
 
+  test("scaling: one line per (round, level), each level run as that many extraction tasks") {
+    val lines = probe("scaling", "/root/testdata/sf0.001", "1", "1", "1,2")
+    assert(lines.map(_.get("level").asInt) == Seq(1, 2))
+    val pages = graft.fixtures.Corpus.pages(spark, "/root/testdata/sf0.001").count()
+    lines.foreach { l =>
+      assert((Common.toSet + "level").subsetOf(keys(l)), keys(l))
+      assert(l.get("target").asText == "scaling" && l.get("rep").asInt == 1)
+      assert(l.get("rows").asLong == pages && l.get("wall_ms").asDouble > 0)
+      assert(l.get("stages").elements().asScala.map(_.get("tasks").asInt).max == l.get("level").asInt, l.toString)
+    }
+  }
+
   test("stream st_lineage: every rep drains a fresh table and reports its batches") {
     val lines = probe("stream", "st_lineage", "/root/testdata/sf0.001", "2")
     assert(lines.size == 2)

@@ -45,7 +45,7 @@ class SignatureSpec extends AnyFunSuite {
       val sig = Dedup.minhash(sh)
       rowSet(sig.select("doc_id", "mh")) == rowSet(ref) &&
         rowSet(sig.select("doc_id", "n")) == rowSet(sh.groupBy(col("doc_id")).count()) &&
-        rowSet(Dedup.minhashBands(sh)) == rowSet(refBands)
+        rowSet(Dedup.minhashBands(sh).drop("n")) == rowSet(refBands)
     }
   }
 

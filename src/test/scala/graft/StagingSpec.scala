@@ -169,6 +169,26 @@ class StagingSpec extends AnyFunSuite {
     // its shingles + bands); the stored side reads index parquet only
     assert(docScans <= 2, s"probe must not rescan the indexed corpus: $docScans corpus scans")
     assert(idxScans >= 2, s"probe must read the stored bands+shingles: $idxScans index scans")
+    // the shingle counts ride on the stored band rows: no doc_id-keyed
+    // aggregate (a count pass) reads the stored shingle table
+    import org.apache.spark.sql.execution._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: adaptive.QueryStageExec => nodes(q.plan)
+      case m: columnar.InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case r: exchange.ReusedExchangeExec => nodes(r.child)
+      case o => o.children.flatMap(nodes)
+    })
+    def readsStoredShingles(p: SparkPlan) = nodes(p).exists {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.endsWith(s"$idx/shingles"))
+      case _ => false
+    }
+    val docAggs = nodes(probe.queryExecution.executedPlan).collect {
+      case a: aggregate.BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("doc_id") => a
+    }
+    assert(readsStoredShingles(probe.queryExecution.executedPlan), "the verify must read the stored shingles")
+    assert(docAggs.nonEmpty, "the batch's MinHash aggregate must be found")
+    assert(!docAggs.exists(readsStoredShingles), s"a doc_id-keyed aggregate reads the stored shingles:\n$fmt")
     Staging.deleteRec(Paths.get(idx))
   }
 }

@@ -28,7 +28,7 @@ ALLOW_UNREFERENCED = {
     "Bench.scala", "Verify.scala", "Main.scala",
     # tools/ mains run from the CLI; their results are recorded in BENCH/
     # artifacts (tools/Probe.scala is reached by ProbeSpec)
-    "ScalingBench.scala", "GoldenGen.scala",
+    "GoldenGen.scala",
 }
 
 def scala_files(root):
