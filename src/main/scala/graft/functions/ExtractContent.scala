@@ -4,7 +4,6 @@ import graft.extract.Extractor
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.ColumnConstructorExt
 import org.apache.spark.sql.classic.ColumnConversions.expression
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -139,13 +138,13 @@ object GraftFunctions {
   /** 60-bit md5 fingerprint of a string column ([[HashKernel.fp60]]),
     * bit-identical to DuckDB's `('0x'||substr(md5(c),1,15))::BIGINT`.
     */
-  def fp60(c: Column): Column = kernel("fp60", c)
+  def fp60(c: Column): Column = kernel("fp60", LongType, c)
 
-  /** FNV-1a 64 of a string column ([[HashKernel.fnv1a64]]) */
-  def fnv1a64(c: Column): Column = kernel("fnv1a64", c)
+  /** the distinct 3-word shingles of a text column ([[HashKernel.shingleSet]]) */
+  def shingleSet(text: Column): Column = kernel("shingleSet", ArrayType(StringType, containsNull = false), text)
 
-  /** MinHash permutation `i` of a hash column ([[HashKernel.mix64]]) */
-  def mix64(h: Column, i: Int): Column = kernel("mix64", h, lit(i))
+  /** the MinHash signature of a shingle-set column ([[HashKernel.minhash]]) */
+  def minhash(sh: Column): Column = kernel("minhash", ArrayType(LongType, containsNull = false), sh)
 
   /** a static [[HashKernel]] call: codegen'd, and equal across builds.
     * `ColumnConstructorExt` is the classic API's `Column(expression)`; its
@@ -153,6 +152,6 @@ object GraftFunctions {
     * (SignatureSpec builds every kernel column, so a Spark that reads it
     * fails there).
     */
-  private def kernel(method: String, args: Column*): Column =
-    ColumnConstructorExt(null)(StaticInvoke(HashKernel.getClass, LongType, method, args.map(expression)))
+  private def kernel(method: String, dataType: DataType, args: Column*): Column =
+    ColumnConstructorExt(null)(StaticInvoke(HashKernel.getClass, dataType, method, args.map(expression)))
 }

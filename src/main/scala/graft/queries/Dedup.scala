@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.fixtures.Corpus.documents
-import graft.functions.GraftFunctions.{fnv1a64, fp60, mix64}
+import graft.functions.GraftFunctions.{fp60, minhash, shingleSet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -12,32 +12,37 @@ import scala.collection.mutable
   * (the scale path — band-bucket join instead of the all-pairs shingle
   * join), and SimHash fingerprints. Every LSH path (MinHash, SimHash,
   * hyperplane, the persisted band-index probe) draws its candidates from
-  * one band-bucket generator, `bucketPairs`. MinHash hashes each shingle
-  * with FNV-1a and permutes it with splitmix; its candidates are verified
-  * by exact shingle overlap, so its oracle is the exact Jaccard. SimHash
-  * token hashes are md5-60bit, portable to DuckDB. Thresholds are
-  * integer-exact (9c >= 4(na+nb) ⟺ jaccard >= 0.8) so no float boundary
-  * can diverge between engines.
+  * one band-bucket generator, `bucketPairs`. A doc's distinct shingle set
+  * and its MinHash signature (FNV-1a per shingle, permuted with splitmix)
+  * are one row projection, `shingleSets`; MinHash candidates are verified
+  * by exact set intersection (`verifiedPairs`), so its oracle is the exact
+  * Jaccard. SimHash token hashes are md5-60bit, portable to DuckDB.
+  * Thresholds are integer-exact (9c >= 4(na+nb) ⟺ jaccard >= 0.8) so no
+  * float boundary can diverge between engines.
   */
 object Dedup {
 
   /** test probe: contraction rounds of the last d_components run */
   @volatile private[graft] var lastComponentsIters: Int = 0
 
-  /** distinct 3-word shingles per doc. The input scan is spread first
-    * (util.Scans — scale-adaptive, no-op on well-split sources): the
-    * shingle explode + per-shingle md5 is the heavy map stage of every
-    * shingle-based dedup query, and the single-row-group testdata file
-    * otherwise runs it on ONE task. Cheap-map queries deliberately skip
+  /** The set table (doc_id, n, sh, mh) of a documents table, one narrow
+    * projection: sh the doc's distinct 3-word shingles
+    * ([[graft.functions.HashKernel.shingleSet]]), n their count, mh their
+    * 64-permutation MinHash signature ([[graft.functions.HashKernel.minhash]]).
+    * No shingle rows, no aggregate, no exchange but the spread. A doc
+    * without shingles (fewer than 3 words, or a null text) has no n > 0;
+    * readers keep n > 0 after the set table's cache, since a filter above
+    * the projection would be pushed under it and run the shingler twice.
+    * The input scan is spread first (util.Scans — scale-adaptive, no-op on
+    * well-split sources): shingling and hashing is the heavy map stage of
+    * every shingle-based dedup query, and the single-row-group testdata
+    * file otherwise runs it on ONE task. Cheap-map queries deliberately skip
     * the spread — measured as a net loss there (see OPTIMIZATION_r06.md).
     */
-  private def shingles(d: DataFrame): DataFrame =
+  private[graft] def shingleSets(d: DataFrame): DataFrame =
     graft.util.Scans.spread(d, col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .where(size(col("ws")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(0, size(ws)-3), i -> concat_ws(' ', slice(ws, i+1, 3))))"
-      )).as("shingle"))
+      .select(col("doc_id"), shingleSet(col("text")).as("sh"))
+      .select(col("doc_id"), size(col("sh")).cast("long").as("n"), col("sh"), minhash(col("sh")).as("mh"))
 
   /** (a_id, b_id, jacc) of the pairs (a_id, b_id, c, na, nb), c shared
     * shingles, whose jaccard is >= 0.8; unsorted, since d_components
@@ -48,49 +53,33 @@ object Dedup {
       .select(col("a_id"), col("b_id"),
         round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6).as("jacc"))
 
-  /** exact-verified pairs (a_id, b_id, jacc) of candidate pairs (a_id,
-    * b_id, na, nb). NO broadcast hint: at crawl-scale dup rates (30-50%
+  /** The one exact verifier: pairs (a_id, b_id, jacc) of candidate pairs
+    * (a_id, b_id, na, nb) whose jaccard is >= 0.8. Each side's shingle set
+    * (doc_id, sh) joins on its id, and the shared-shingle count c is the
+    * size of the two sets' intersection — a row operator, no shingle rows
+    * and no aggregate. NO broadcast hint: at crawl-scale dup rates (30-50%
     * of 10^12 docs) the candidate-pair set is billions of rows — a forced
     * broadcast dies at the driver. Plain equi-joins on a_id/b_id let AQE
     * choose broadcast when the runtime size is actually under the
     * threshold, and degrade to a shuffle join when it is not.
     */
-  private def verifiedPairs(sh: DataFrame, cands: DataFrame): DataFrame =
+  private[graft] def verifiedPairs(sets: DataFrame, cands: DataFrame): DataFrame =
     jaccardAtLeast08(cands
-      .join(sh.select(col("doc_id").as("a_id"), col("shingle").as("sa")), Seq("a_id"))
-      .join(sh.select(col("doc_id").as("b_id"), col("shingle").as("sb")), Seq("b_id"))
-      .where(col("sa") === col("sb"))
-      .groupBy(col("a_id"), col("b_id"), col("na"), col("nb")).agg(count(lit(1)).as("c")))
+      .join(sets.select(col("doc_id").as("a_id"), col("sh").as("sa")), Seq("a_id"))
+      .join(sets.select(col("doc_id").as("b_id"), col("sh").as("sb")), Seq("b_id"))
+      .withColumn("c", size(array_intersect(col("sa"), col("sb")))))
 
   private val Bands = 16 // r = 4 rows/band: P(miss | j=0.95) ≈ 1e-12, still ~0 at any corpus size we run
 
-  /** MinHash signature (doc_id, n, mh) of a shingle table: n is the
-    * doc's shingle count; mh holds, for each permutation i, the doc's
-    * minimum of `mix64(h, i)` over one FNV-1a hash h per shingle — 64
-    * plain `min` aggregates, one codegen'd HashAggregate with map-side
-    * partials. The minima leave the aggregate as one array: Spark sizes
-    * an aggregate's output by its row width, and 64 long columns would
-    * price the band table 20× over the broadcast threshold, so its
-    * self-join would shuffle.
+  /** (doc_id, n, band, bh) MinHash band rows of a set table, docs with
+    * shingles only: 16 bands × 4 rows, each band the xxhash64 of its four
+    * minima. The LSH candidate rows and the persisted index rows; n rides
+    * on them so the verify needs no count pass.
     */
-  private[graft] def minhash(sh: DataFrame): DataFrame =
-    sh.select(col("doc_id"), fnv1a64(col("shingle")).as("h"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n"), array((0 until 4 * Bands).map(i => min(mix64(col("h"), i))): _*).as("mh"))
-
-  /** the (band, bh) rows of a signature: 16 bands × 4 rows, each band the
-    * xxhash64 of its four minima
-    */
-  private def bandRows: Column = posexplode(array((0 until Bands).map { b =>
+  private[graft] def minhashBands(sets: DataFrame): DataFrame =
+    sets.where(col("n") > 0).select(col("doc_id"), col("n"), posexplode(array((0 until Bands).map { b =>
       xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
-    }: _*)).as(Seq("band", "bh"))
-
-  /** (doc_id, n, band, bh) MinHash band table — the LSH candidate rows
-    * and the persisted index rows; n, the doc's shingle count, rides on
-    * them so the verify needs no separate count pass or join
-    */
-  private[graft] def minhashBands(sh: DataFrame): DataFrame =
-    minhash(sh).select(col("doc_id"), col("n"), bandRows)
+    }: _*)).as(Seq("band", "bh")))
 
   /** The one band-bucket candidate generator. `rows` are bucket rows
     * (id, band, bh, carry…), id its first column; the output is every pair
@@ -253,25 +242,19 @@ object Dedup {
       .toDF("vec_id", "band", "bh")
   }
 
-  /** LSH candidate pairs (a_id < b_id, na, nb) of d_minhash_lsh and
-    * d_components: shuffles only (band, hash) keys and shingle counts,
-    * never shingles. The band table is cached: BOTH sides of the bucket
-    * self-join read it, and it is Bands rows/doc of 28 bytes (released at
-    * the harness query boundary like every CacheScope entry).
-    */
-  private def lshCandidates(sh: DataFrame): DataFrame =
-    bucketPairs(graft.util.CacheScope.cached(minhashBands(sh)), None, "n").distinct()
-
   /** The exact-verified near-dup pairs (a_id, b_id, jacc) of the LSH
     * candidate path: the result of d_minhash_lsh and the edge list of
-    * d_components. Cached, so a pass that runs both reads the pairs the
-    * first one built (every build of it is the same plan); released at
-    * the harness query boundary like every CacheScope entry. No all-pairs
-    * shingle join may appear anywhere in it (PlanSpec).
+    * d_components. Two caches: the set table (both sides of the band
+    * self-join and both verify sides read it) and the pairs, so a pass
+    * that runs both queries reads the pairs the first one built (every
+    * build of it is the same plan); both are released at the harness
+    * query boundary like every CacheScope entry. The candidates shuffle
+    * only (band, bh) keys, ids and shingle counts; no all-pairs shingle
+    * join may appear anywhere in it (PlanSpec).
     */
   private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame = {
-    val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
-    graft.util.CacheScope.cached(verifiedPairs(sh, lshCandidates(sh)))
+    val sets = graft.util.CacheScope.cached(shingleSets(documents(s, dir)))
+    graft.util.CacheScope.cached(verifiedPairs(sets, bucketPairs(minhashBands(sets), None, "n").distinct()))
   }
 
   /** One union-find contraction round of d_components over a symmetric
@@ -309,14 +292,14 @@ object Dedup {
   /** Persisted LSH band-index lifecycle (the continuous-crawl contract,
     * mirroring Similarity.buildIndex/queryIndex): `buildBandIndex` writes
     * the index as parquet —
-    *   bands/    (doc_id, n, band, bh)  the probe rows (Bands rows/doc),
-    *                                    n the doc's shingle count
-    *   shingles/ (doc_id, shingle)      the exact-verify sets
-    * `probeBandIndex` answers "which stored or in-batch docs near-dup the
-    * new batch" with work proportional to the NEW batch (band-equality
-    * join against the stored rows — never O(corpus²), no re-hash of the
-    * indexed corpus), and `appendBandIndex` grows the artifact so the next
-    * batch probes against this one too.
+    *   bands/ (doc_id, n, band, bh)  the probe rows (Bands rows/doc),
+    *                                 n the doc's shingle count
+    *   sets/  (doc_id, sh)           the exact-verify shingle sets
+    * (docs with shingles only). `probeBandIndex` answers "which stored or
+    * in-batch docs near-dup the new batch" with work proportional to the
+    * NEW batch (band-equality join against the stored rows — never
+    * O(corpus²), no re-hash of the indexed corpus), and `appendBandIndex`
+    * grows the artifact so the next batch probes against this one too.
     */
   def buildBandIndex(s: SparkSession, documents: DataFrame, indexDir: String): Unit =
     writeBandIndex(documents, indexDir, "overwrite")
@@ -325,31 +308,27 @@ object Dedup {
     writeBandIndex(documents, indexDir, "append")
 
   private def writeBandIndex(documents: DataFrame, indexDir: String, mode: String): Unit = {
-    val sh = shingles(documents).cache()
-    minhashBands(sh).write.mode(mode).parquet(s"$indexDir/bands")
-    sh.write.mode(mode).parquet(s"$indexDir/shingles")
-    sh.unpersist()
+    val sets = shingleSets(documents).cache()
+    minhashBands(sets).write.mode(mode).parquet(s"$indexDir/bands")
+    sets.where(col("n") > 0).select(col("doc_id"), col("sh")).write.mode(mode).parquet(s"$indexDir/sets")
+    sets.unpersist()
   }
 
   /** All jaccard>=0.8 near-dup pairs touching `newDocs`, probing the
     * STORED index: candidates = newBands × (storedBands ∪ newBands) bucket
-    * pairs, each side's shingle count read off its band rows; exact verify
-    * joins the stored shingle table ∪ the new batch's shingles (both
-    * shuffle equi-joins — AQE broadcasts only when small).
+    * pairs, each side's shingle count read off its band rows; the verify
+    * joins the stored sets ∪ the batch's sets (both shuffle equi-joins —
+    * AQE broadcasts only when small). The batch's set table is cached
+    * (CacheScope, released at the harness query boundary): its band rows
+    * feed both sides of the candidate join and its sets the verify.
     * `newDocs` must be disjoint from the indexed corpus (probe BEFORE
-    * appendBandIndex) — overlap would double-count shingles in the verify.
+    * appendBandIndex) — an id in both would verify against two sets.
     */
   def probeBandIndex(s: SparkSession, newDocs: DataFrame, indexDir: String): DataFrame = {
-    // cached: the batch shingles feed both the band computation and the
-    // verify union — same pattern as d_minhash_lsh; registered with
-    // CacheScope so multi-query harnesses release it at query boundaries
-    val shNew = graft.util.CacheScope.cached(shingles(newDocs))
-    // cached: bNew feeds the probe side AND the union side of the
-    // candidate join — without the cache the batch MinHash aggregation
-    // runs twice per action
-    val bNew = graft.util.CacheScope.cached(minhashBands(shNew))
-    val cands = bucketPairs(bNew, Some(s.read.parquet(s"$indexDir/bands")), "n").distinct()
-    verifiedPairs(s.read.parquet(s"$indexDir/shingles").union(shNew), cands).orderBy(col("a_id"), col("b_id"))
+    val sets = graft.util.CacheScope.cached(shingleSets(newDocs))
+    val cands = bucketPairs(minhashBands(sets), Some(s.read.parquet(s"$indexDir/bands")), "n").distinct()
+    verifiedPairs(s.read.parquet(s"$indexDir/sets").union(sets.select(col("doc_id"), col("sh"))), cands)
+      .orderBy(col("a_id"), col("b_id"))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -375,7 +354,8 @@ object Dedup {
     // each doc's shingle count n (it joins both the a_id and the b_id
     // side; 12 bytes/doc).
     "d_jaccard_pairs" -> ((s, dir) => {
-      val sh = graft.util.CacheScope.cached(shingles(documents(s, dir)))
+      val sh = graft.util.CacheScope.cached(graft.util.Scans.spread(documents(s, dir), col("doc_id"))
+        .select(col("doc_id"), explode(shingleSet(col("text"))).as("shingle")))
       val n = graft.util.CacheScope.cached(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
       val a = sh.select(col("doc_id").as("a_id"), col("shingle"))
       val b = sh.select(col("doc_id").as("b_id"), col("shingle"))
@@ -386,11 +366,12 @@ object Dedup {
         .orderBy(col("a_id"), col("b_id"))
     }),
 
-    // MinHash + LSH banding: 64-perm signatures from ONE string hash per
-    // shingle (64 `min` aggregates over its permutations), 16 bands × 4
-    // rows; candidates from the band-bucket equality join (shuffles only
-    // (band, hash) keys — the 10^12-scale path), then exact-verified.
-    // Output is identical to d_jaccard_pairs (same oracle): proves recall.
+    // MinHash + LSH banding: each doc's shingle set and its 64-perm
+    // signature (ONE string hash per shingle, every permutation derived
+    // from it) are one row projection, 16 bands × 4 rows; candidates from
+    // the band-bucket equality join (shuffles only (band, hash) keys — the
+    // 10^12-scale path), then exact-verified by set intersection. Output
+    // is identical to d_jaccard_pairs (same oracle): proves recall.
     "d_minhash_lsh" -> ((s, dir) => lshPairs(s, dir).orderBy(col("a_id"), col("b_id"))),
 
     // INCREMENTAL dedup — the continuous-crawl shape, run through the
@@ -405,9 +386,9 @@ object Dedup {
     // one-time backfill. Output = all near-dup pairs touching B (same
     // jaccard >= 0.8 contract as d_jaccard_pairs).
     "d_incremental" -> ((s, dir) => {
-      val idxDir = graft.util.Staging.keyedArtifact("lshidx", dir, 2)(p =>
+      val idxDir = graft.util.Staging.keyedArtifact("lshidx", dir, 3)(p =>
         java.nio.file.Files.exists(p.resolve("bands").resolve("_SUCCESS")) &&
-          java.nio.file.Files.exists(p.resolve("shingles").resolve("_SUCCESS")))(
+          java.nio.file.Files.exists(p.resolve("sets").resolve("_SUCCESS")))(
         out => buildBandIndex(s, documents(s, dir).where(col("doc_id") % 2 === 0), out))
       probeBandIndex(s, documents(s, dir).where(col("doc_id") % 2 === 1), idxDir)
     }),

@@ -186,7 +186,7 @@ object Probe {
     args.lift(1).getOrElse("1,4,16").split(",").map(_.toInt).foreach { k =>
       val dir = stageDocs(spark, sfDir, k, giantWords = 0)
       val docs = Corpus.documents(spark, dir).count()
-      Seq("d_exact_canonical", "d_minhash_lsh", "d_simhash_pairs", "c_curate", "d_paragraph",
+      Seq("d_exact_canonical", "d_minhash_lsh", "d_incremental", "d_simhash_pairs", "c_curate", "d_paragraph",
         "d_bloom_incremental", "d_ngram_spans", "c_decontaminate").foreach { q =>
         emit(repLine("scale", q, 1, measure(spark, q, dir), "scale" -> k, "docs" -> docs))
       }

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.CodegenSupport
 
 /** Scale-adaptive scan spreading (optimization guide §2.5 "input skew" /
   * §6 "input split size"): the testdata tables are single parquet files
@@ -32,7 +33,17 @@ object Scans {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.isStreaming) df // micro-batch sources partition per source
     else if (df.queryExecution.optimizedPlan.stats.sizeInBytes < MinBytes) df
-    else if (df.rdd.getNumPartitions * 2 > target) df // already parallel
+    else if (splits(df) * 2 > target) df // already parallel
     else df.repartition(target, key)
   }
+
+  /** the partitions the frame's planned scans split into, read off the
+    * leaves of its physical plan (their RDDs are built, no job runs);
+    * `df.rdd` would plan a second QueryExecution on every build
+    */
+  private def splits(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collectLeaves().map {
+      case c: CodegenSupport => c.inputRDDs().map(_.getNumPartitions).sum
+      case leaf => leaf.execute().getNumPartitions
+    }.sum
 }

@@ -125,6 +125,21 @@ class LintSpec extends AnyFunSuite {
     assert(joins == Seq("Dedup.scala"), s"one band-bucket join (Dedup.bucketPairs) allowed in src/main: $joins")
   }
 
+  test("one shingle-set definition and no MinHash aggregate in src/main: both are HashKernel row kernels") {
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    // the distinct 3-word window set of split words, and a min over a
+    // MinHash permutation; comment lines are skipped. Positional windows
+    // (8-gram spans, paragraphs, winnowing) are not shingle sets.
+    val forms = Seq("""array_distinct\(\s*transform\(\s*sequence\(\s*0\s*,\s*size\(\w+\)\s*-\s*3\s*\)""",
+      """\bmin\(\s*mix64\(""").map(_.r)
+    val bad = main.flatMap { p =>
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator
+        .filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
+        .filter(l => forms.exists(_.findFirstIn(l).nonEmpty)).map(l => s"${p.getFileName}: ${l.trim}")
+    }
+    assert(bad.isEmpty, s"shingle sets are HashKernel.shingleSet and signatures HashKernel.minhash alone: $bad")
+  }
+
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
     val bad = scalaSources.filterNot { p =>
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

@@ -170,6 +170,10 @@ class PlanSpec extends AnyFunSuite {
       l.contains("Exchange hashpartitioning") && l.contains("shingle#"))
     assert(!badExchange, s"edge generation must not shingle-self-join:\n$plan")
     assert(plan.contains("bh#"), s"expected the band-bucket join:\n$plan")
+    // two cache entries: the set table and the verified pairs
+    val entries = cacheEntries(top).groupBy(_._2).values.map(_.head._1).toSeq
+    assert(entries.sortBy(_.length) == Seq(Seq("a_id", "b_id", "jacc"), Seq("doc_id", "n", "sh", "mh")),
+      s"lshPairs must cache the set table and the pairs only: $entries")
     // d_minhash_lsh reads the same cache entry (d_components reads it
     // while it builds, in its first contraction round)
     val lsh = graft.queries.Dedup.defs("d_minhash_lsh")(spark, sfDir).queryExecution.sparkPlan
@@ -193,8 +197,8 @@ class PlanSpec extends AnyFunSuite {
       ("lshPairs", () => graft.queries.Dedup.lshPairs(spark, sfDir), Seq("a_id", "b_id", "jacc")),
       ("d_simhash_pairs fingerprints", () => graft.queries.Dedup.defs("d_simhash_pairs")(spark, sfDir),
         Seq("doc_id", "simhash")),
-      ("probeBandIndex bNew", () => graft.queries.Dedup.defs("d_incremental")(spark, sfDir),
-        Seq("doc_id", "n", "band", "bh")))
+      ("probeBandIndex sets", () => graft.queries.Dedup.defs("d_incremental")(spark, sfDir),
+        Seq("doc_id", "n", "sh", "mh")))
     builds.foreach { case (name, build, cols) =>
       val (a, b) = (build(), build())
       assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed), s"$name: builds differ")

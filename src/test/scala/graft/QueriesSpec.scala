@@ -78,15 +78,18 @@ class QueriesSpec extends AnyFunSuite {
     // index artifacts exist: band rows (16/doc) + the exact-verify shingle sets
     val n0 = batch(0).count()
     assert(spark.read.parquet(s"$idx/bands").count() == n0 * 16)
-    assert(spark.read.parquet(s"$idx/shingles").select("doc_id").distinct().count() == n0)
-    // each band row carries n, its doc's distinct 3-word-shingle count
+    // sets/ holds each doc's distinct 3-word shingles, computed here in
+    // plain Scala from the text; each band row carries n, their count
     val want = batch(0).select("doc_id", "text").collect().flatMap { r =>
       val ws = Option(r.getString(1)).fold(Array.empty[String])(_.split(" ", -1))
-      Option.when(ws.length >= 3)(r.getLong(0) -> ws.sliding(3).map(_.mkString(" ")).toSet.size.toLong)
+      Option.when(ws.length >= 3)(r.getLong(0) -> ws.sliding(3).map(_.mkString(" ")).toSeq.distinct)
     }.toMap
+    val sets = spark.read.parquet(s"$idx/sets").collect().map(r => r.getLong(0) -> r.getSeq[String](1))
+    assert(sets.length == want.size && sets.toMap == want, "sets/ must hold each doc's distinct shingles")
     val got = spark.read.parquet(s"$idx/bands").select("doc_id", "n").distinct().collect()
       .map(r => r.getLong(0) -> r.getLong(1))
-    assert(got.length == want.size && got.toMap == want, "bands/ n must be each doc's distinct-shingle count")
+    assert(got.length == want.size && got.toMap == want.map { case (id, sh) => id -> sh.size.toLong },
+      "bands/ n must be each doc's distinct-shingle count")
     val full = Dedup.defs("d_jaccard_pairs")(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // probe 1: all near-dup pairs touching b1, within b0 ∪ b1

@@ -4,13 +4,15 @@ import graft.functions.{GraftFunctions, HashKernel, MinHashAggregator, SimHashAg
 import graft.queries.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The MinHash and SimHash signatures of `queries.Dedup` (plain `min` and
-  * `sum` aggregates) against the typed Aggregators they replaced, kept in
-  * test scope as the bit-identity reference.
+/** The MinHash and SimHash signatures of `queries.Dedup` (the
+  * `HashKernel.minhash` row kernel and plain `sum` aggregates) against the
+  * typed Aggregators they replaced, kept in test scope as the bit-identity
+  * reference.
   */
 class SignatureSpec extends AnyFunSuite {
 
@@ -35,17 +37,24 @@ class SignatureSpec extends AnyFunSuite {
     assert(res.passed, s"$name: $res")
   }
 
+  /** (doc_id, pos, col) band rows of a signature table (doc_id, mh) */
+  private def refBands(sig: DataFrame): DataFrame = sig.select(col("doc_id"), posexplode(array((0 until 16).map { b =>
+      xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
+    }: _*)))
+
   test("MinHash signatures and band tables are bit-identical to MinHashAggregator") {
     check("minhash") { docs =>
-      val sh = rows(docs, "shingle")
-      val ref = sh.groupBy(col("doc_id")).agg(udaf(MinHashAggregator).apply(col("shingle")).as("mh"))
-      val refBands = ref.select(col("doc_id"), posexplode(array((0 until 16).map { b =>
-          xxhash64((4 * b until 4 * b + 4).map(i => element_at(col("mh"), i + 1)): _*)
-        }: _*)))
-      val sig = Dedup.minhash(sh)
-      rowSet(sig.select("doc_id", "mh")) == rowSet(ref) &&
-        rowSet(sig.select("doc_id", "n")) == rowSet(sh.groupBy(col("doc_id")).count()) &&
-        rowSet(Dedup.minhashBands(sh).drop("n")) == rowSet(refBands)
+      val toks = rows(docs, "shingle")
+      // the kernel over each doc's token list, repeats kept (a minimum ignores them)
+      val sig = toks.groupBy(col("doc_id")).agg(GraftFunctions.minhash(collect_list(col("shingle"))).as("mh"))
+      val ref = toks.groupBy(col("doc_id")).agg(udaf(MinHashAggregator).apply(col("shingle")).as("mh"))
+      // the set table of texts made of the same tokens, against the reference over its shingles
+      val texts = toks.groupBy(col("doc_id")).agg(concat_ws(" ", collect_list(col("shingle"))).as("text"))
+      val sets = Dedup.shingleSets(texts).where(col("n") > 0)
+      val setRef = sets.select(col("doc_id"), explode(col("sh")).as("s"))
+        .groupBy(col("doc_id")).agg(udaf(MinHashAggregator).apply(col("s")).as("mh"))
+      rowSet(sig) == rowSet(ref) && rowSet(sets.select("doc_id", "mh")) == rowSet(setRef) &&
+        rowSet(Dedup.minhashBands(sets).drop("n")) == rowSet(refBands(setRef))
     }
   }
 
@@ -67,31 +76,44 @@ class SignatureSpec extends AnyFunSuite {
 
   test("each HashKernel column builds on its own and evaluates as its kernel") {
     import spark.implicits._
-    val strs = Seq("", "a b", "é 😀", "中文")
-    val h = GraftFunctions.fnv1a64(col("s"))
-    val got = strs.toDF("s").select(h, GraftFunctions.mix64(h, 7), GraftFunctions.fp60(col("s")))
+    val strs = Seq("", "a b", "a b c a b c", " é 😀  中文 ", "x y z")
+    val sh = GraftFunctions.shingleSet(col("s"))
+    val got = strs.toDF("s").select(sh, GraftFunctions.minhash(sh), GraftFunctions.fp60(col("s")))
       .collect().map(_.toSeq).toSeq
     assert(got == strs.map { s =>
       val u = UTF8String.fromString(s)
-      Seq(HashKernel.fnv1a64(u), HashKernel.mix64(HashKernel.fnv1a64(u), 7), HashKernel.fp60(u))
+      val set = HashKernel.shingleSet(u)
+      Seq(set.toSeq[UTF8String](StringType).map(_.toString), HashKernel.minhash(set).toLongArray.toSeq,
+        HashKernel.fp60(u))
     })
   }
 
   test("the band table is estimated near its shingle input's size, so its self-join can broadcast") {
-    val sh = rows(List(List("a b c", "b c d", "c d e"), List("x y z")), "shingle")
+    import spark.implicits._
+    val d = Seq((0L, "a b c d e"), (1L, "x y z")).toDF("doc_id", "text")
     def est(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bands = est(Dedup.minhashBands(sh))
-    assert(bands <= 2 * est(sh), s"band table $bands B, shingles ${est(sh)} B")
+    val (sets, bands) = (Dedup.shingleSets(d), Dedup.minhashBands(Dedup.shingleSets(d)))
+    assert(est(bands) <= 2 * est(sets) && est(bands) <= 2 * est(d),
+      s"band table ${est(bands)} B, set table ${est(sets)} B, documents ${est(d)} B")
   }
 
   test("both signatures plan as whole-stage-codegen HashAggregates") {
+    // MinHash: the set table is one codegen'd projection, no Aggregate and no Exchange
+    val texts = typedLit(Seq("a b c d", "é 😀 x", ""))
+    val sets = Dedup.shingleSets(spark.range(3).select(col("id").as("doc_id"),
+      element_at(texts, (col("id") + 1).cast("int")).as("text")))
+    assert(sets.collect().length == 3)
+    val setPlan = sets.queryExecution.executedPlan.toString
+    assert(!setPlan.contains("Aggregate") && !setPlan.contains("Exchange"), s"the set table aggregates:\n$setPlan")
+    assert("""\*\(\d+\) Project \[.*minhash""".r.findFirstIn(setPlan).nonEmpty,
+      s"expected a codegen'd projection:\n$setPlan")
+    // SimHash: 33 plain sums, one codegen'd HashAggregate
     val docs = List(List("a b c", "b c d"), List("é 😀", ""), Nil)
-    Seq(Dedup.minhash(rows(docs, "shingle")), Dedup.simhashOf(rows(docs, "tok"))).foreach { q =>
-      assert(q.collect().length == 2)
-      val plan = q.queryExecution.executedPlan.toString
-      assert("""\*\(\d+\) HashAggregate\(keys=\[doc_id""".r.findFirstIn(plan).nonEmpty,
-        s"expected a codegen'd HashAggregate:\n$plan")
-      assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"), plan)
-    }
+    val q = Dedup.simhashOf(rows(docs, "tok"))
+    assert(q.collect().length == 2)
+    val plan = q.queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) HashAggregate\(keys=\[doc_id""".r.findFirstIn(plan).nonEmpty,
+      s"expected a codegen'd HashAggregate:\n$plan")
+    assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"), plan)
   }
 }

@@ -165,12 +165,13 @@ class StagingSpec extends AnyFunSuite {
       .map(b => b.linesIterator.find(_.contains("Location")).getOrElse(""))
     val docScans = scanLocs.count(_.contains("documents.parquet"))
     val idxScans = scanLocs.count(_.contains(Paths.get(idx).getFileName.toString))
-    // the only corpus scan is the NEW batch's (one cached subtree feeds
-    // its shingles + bands); the stored side reads index parquet only
+    // the only corpus scan is the NEW batch's (one cached set table feeds
+    // its bands and its verify side); the stored side reads index parquet only
     assert(docScans <= 2, s"probe must not rescan the indexed corpus: $docScans corpus scans")
-    assert(idxScans >= 2, s"probe must read the stored bands+shingles: $idxScans index scans")
-    // the shingle counts ride on the stored band rows: no doc_id-keyed
-    // aggregate (a count pass) reads the stored shingle table
+    assert(idxScans >= 2, s"probe must read the stored bands+sets: $idxScans index scans")
+    // the shingle counts ride on the stored band rows and the signatures
+    // are a projection: no doc_id-keyed aggregate (a count or signature
+    // pass) runs, over the stored sets or anything else
     import org.apache.spark.sql.execution._
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -179,16 +180,15 @@ class StagingSpec extends AnyFunSuite {
       case r: exchange.ReusedExchangeExec => nodes(r.child)
       case o => o.children.flatMap(nodes)
     })
-    def readsStoredShingles(p: SparkPlan) = nodes(p).exists {
-      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.endsWith(s"$idx/shingles"))
+    val readsStoredSets = nodes(probe.queryExecution.executedPlan).exists {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.endsWith(s"$idx/sets"))
       case _ => false
     }
     val docAggs = nodes(probe.queryExecution.executedPlan).collect {
       case a: aggregate.BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("doc_id") => a
     }
-    assert(readsStoredShingles(probe.queryExecution.executedPlan), "the verify must read the stored shingles")
-    assert(docAggs.nonEmpty, "the batch's MinHash aggregate must be found")
-    assert(!docAggs.exists(readsStoredShingles), s"a doc_id-keyed aggregate reads the stored shingles:\n$fmt")
+    assert(readsStoredSets, "the verify must read the stored sets")
+    assert(docAggs.isEmpty, s"a doc_id-keyed aggregate runs in the probe:\n$fmt")
     Staging.deleteRec(Paths.get(idx))
   }
 }
