@@ -77,22 +77,9 @@ object HashKernel {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  /** FNV-1a 64 over the string's UTF-16 code units; an ASCII string's
-    * code units are its bytes, so only a non-ASCII one is decoded
-    */
+  /** FNV-1a 64 over the string's UTF-16 code units */
   private def fnv1a64(s: UTF8String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.numBytes) {
-      val b = s.getByte(i)
-      if (b < 0) return fnv1a64Chars(s.toString)
-      h = (h ^ b) * 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
-  private def fnv1a64Chars(t: String): Long = {
+    val t = s.toString
     var h = 0xcbf29ce484222325L
     var i = 0
     while (i < t.length) {

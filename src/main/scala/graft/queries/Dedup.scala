@@ -348,21 +348,16 @@ object Dedup {
 
     // exact n-gram Jaccard near-dup pairs (all-pairs shingle join) — the
     // correctness baseline; O(pairs sharing a shingle), fine at test SF,
-    // replaced by LSH at scale. Shingles cached for the query's lifetime
-    // (both self-join sides + the size table read them) and released at
-    // the harness boundary like every other query-internal cache; so is
-    // each doc's shingle count n (it joins both the a_id and the b_id
-    // side; 12 bytes/doc).
+    // replaced by LSH at scale. Reads the set table (cached for the
+    // query's lifetime, the same entry d_minhash_lsh builds): both
+    // self-join sides explode its sets, each row carrying its doc's
+    // shingle count n into the pair count's grouping key.
     "d_jaccard_pairs" -> ((s, dir) => {
-      val sh = graft.util.CacheScope.cached(graft.util.Scans.spread(documents(s, dir), col("doc_id"))
-        .select(col("doc_id"), explode(shingleSet(col("text"))).as("shingle")))
-      val n = graft.util.CacheScope.cached(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
-      val a = sh.select(col("doc_id").as("a_id"), col("shingle"))
-      val b = sh.select(col("doc_id").as("b_id"), col("shingle"))
-      jaccardAtLeast08(a.join(b, Seq("shingle")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("c"))
-          .join(n.select(col("doc_id").as("a_id"), col("n").as("na")), Seq("a_id"))
-          .join(n.select(col("doc_id").as("b_id"), col("n").as("nb")), Seq("b_id")))
+      val sets = graft.util.CacheScope.cached(shingleSets(documents(s, dir)))
+      def side(p: String) =
+        sets.select(col("doc_id").as(s"${p}_id"), col("n").as(s"n$p"), explode(col("sh")).as("shingle"))
+      jaccardAtLeast08(side("a").join(side("b"), Seq("shingle")).where(col("a_id") < col("b_id"))
+          .groupBy(col("a_id"), col("b_id"), col("na"), col("nb")).agg(count(lit(1)).as("c")))
         .orderBy(col("a_id"), col("b_id"))
     }),
 

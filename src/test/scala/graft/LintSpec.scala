@@ -127,15 +127,31 @@ class LintSpec extends AnyFunSuite {
 
   test("one shingle-set definition and no MinHash aggregate in src/main: both are HashKernel row kernels") {
     val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
-    // the distinct 3-word window set of split words, and a min over a
-    // MinHash permutation; comment lines are skipped. Positional windows
-    // (8-gram spans, paragraphs, winnowing) are not shingle sets.
-    val forms = Seq("""array_distinct\(\s*transform\(\s*sequence\(\s*0\s*,\s*size\(\w+\)\s*-\s*3\s*\)""",
-      """\bmin\(\s*mix64\(""").map(_.r)
+    // An index window `transform(sequence(` (Column API or Spark SQL
+    // string) is allowed only at the named positional-window sites below,
+    // which are not shingle sets; a site is the nearest `"<query>" ->` or
+    // `def <name>` above the line. The DuckDB oracle SQL windows with
+    // `range`/`generate_series`, so it never matches. `min(mix64(` is
+    // allowed nowhere.
+    val windowSites = Set("TextAnalysis.scala:t_winnow", "TextAnalysis.scala:t_c4_filters",
+      "Dedup.scala:d_paragraph", "Dedup.scala:d_ngram_spans", "Curation.scala:c_decontaminate",
+      "Probe.scala:stageDocs")
+    val window = """\btransform\(\s*sequence\(""".r
+    val signatureMin = """\bmin\(\s*mix64\(""".r
+    val siteName = """^\s*(?:"(\w+)"\s*->|(?:[@\w\[\]]+\s+)*def\s+(\w+))""".r.unanchored
     val bad = main.flatMap { p =>
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator
-        .filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
-        .filter(l => forms.exists(_.findFirstIn(l).nonEmpty)).map(l => s"${p.getFileName}: ${l.trim}")
+      val file = p.getFileName.toString
+      var site = ""
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator.flatMap { l =>
+        l match {
+          case siteName(q, d) => site = Option(q).getOrElse(d)
+          case _ =>
+        }
+        val code = !Seq("*", "/*", "//").exists(l.trim.startsWith)
+        val hit = code && (signatureMin.findFirstIn(l).nonEmpty ||
+          (window.findFirstIn(l).nonEmpty && !windowSites(s"$file:$site")))
+        if (hit) Some(s"$file:$site: ${l.trim}") else None
+      }
     }
     assert(bad.isEmpty, s"shingle sets are HashKernel.shingleSet and signatures HashKernel.minhash alone: $bad")
   }

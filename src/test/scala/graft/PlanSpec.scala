@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -189,6 +190,20 @@ class PlanSpec extends AnyFunSuite {
     case m: InMemoryTableScanExec =>
       (m.relation.output.map(_.name), m.relation.cacheBuilder) +: cacheEntries(m.relation.cachedPlan)
   }.flatten
+
+  test("d_jaccard_pairs explodes the set table lshPairs caches: no other cache, no per-doc count") {
+    graft.util.CacheScope.releaseAll()
+    val setCols = Seq("doc_id", "n", "sh", "mh")
+    val lsh = cacheEntries(graft.queries.Dedup.lshPairs(spark, sfDir).queryExecution.sparkPlan)
+    val plan = graft.queries.Dedup.defs("d_jaccard_pairs")(spark, sfDir).queryExecution.sparkPlan
+    val entries = cacheEntries(plan)
+    assert(entries.nonEmpty && entries.forall(e => e._1 == setCols && lsh.exists(_._2 eq e._2)),
+      s"d_jaccard_pairs must read only lshPairs' set-table cache: ${entries.map(_._1)}")
+    // the one aggregate counts each pair's shared shingles; n rides on the rows
+    val keys = plan.collect { case a: BaseAggregateExec => a.groupingExpressions.map(_.name) }.distinct
+    assert(keys == Seq(Seq("a_id", "b_id", "na", "nb")), s"aggregates other than the pair count: $keys")
+    graft.util.CacheScope.releaseAll()
+  }
 
   test("rebuilt MinHash and SimHash plans compare equal and read the first build's caches") {
     graft.util.CacheScope.releaseAll()
