@@ -146,6 +146,13 @@ object GraftFunctions {
   /** the MinHash signature of a shingle-set column ([[HashKernel.minhash]]) */
   def minhash(sh: Column): Column = kernel("minhash", ArrayType(LongType, containsNull = false), sh)
 
+  /** the 60-bit SimHash of a text column ([[HashKernel.simhash]]) */
+  def simhash(text: Column): Column = kernel("simhash", LongType, text)
+
+  /** the 8 hyperplane band hashes of an `array<double>` column ([[HashKernel.hyperplaneBands]]) */
+  def hyperplaneBands(e: Column): Column =
+    kernel("hyperplaneBands", ArrayType(IntegerType, containsNull = false), e)
+
   /** a static [[HashKernel]] call: codegen'd, and equal across builds.
     * `ColumnConstructorExt` is the classic API's `Column(expression)`; its
     * receiver, the `Column` companion, is private to Spark and never read

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.fixtures.Corpus.documents
-import graft.functions.GraftFunctions.{fp60, minhash, shingleSet}
+import graft.functions.GraftFunctions.{fp60, hyperplaneBands, minhash, shingleSet, simhash}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -10,13 +10,16 @@ import scala.collection.mutable
 /** Training-data deduplication operators over the `documents` table:
   * exact (hash group), n-gram Jaccard (the exact oracle), MinHash+LSH
   * (the scale path — band-bucket join instead of the all-pairs shingle
-  * join), and SimHash fingerprints. Every LSH path (MinHash, SimHash,
-  * hyperplane, the persisted band-index probe) draws its candidates from
-  * one band-bucket generator, `bucketPairs`. A doc's distinct shingle set
-  * and its MinHash signature (FNV-1a per shingle, permuted with splitmix)
-  * are one row projection, `shingleSets`; MinHash candidates are verified
-  * by exact set intersection (`verifiedPairs`), so its oracle is the exact
-  * Jaccard. SimHash token hashes are md5-60bit, portable to DuckDB.
+  * join), and SimHash fingerprints. Every LSH signature is one narrow
+  * projection of a static `HashKernel` row kernel, and every band table
+  * a projection of it: a doc's distinct shingle set and its MinHash
+  * signature (FNV-1a per shingle, permuted with splitmix, `shingleSets`),
+  * its SimHash (`simhashes`) and a vector's hyperplane band hashes
+  * (`embedBands`). Every LSH path (MinHash, SimHash, hyperplane, the
+  * persisted band-index probe) draws its candidates from one band-bucket
+  * generator, `bucketPairs`. MinHash candidates are verified by exact set
+  * intersection (`verifiedPairs`), so its oracle is the exact Jaccard.
+  * SimHash token hashes are md5-60bit, portable to DuckDB.
   * Thresholds are integer-exact (9c >= 4(na+nb) ⟺ jaccard >= 0.8) so no
   * float boundary can diverge between engines.
   */
@@ -108,32 +111,14 @@ object Dedup {
     }
   }
 
-  /** per-doc 60-bit SimHash of (doc_id, tok) occurrence rows: n, the
-    * doc's token count, and per bit j the count c_j of its occurrences
-    * whose fp60(tok) has bit j set. The oracle's sum of ±tf over distinct
-    * tokens is 2·c_j − n, so bit j of the fingerprint is set iff
-    * 2·c_j > n. One `sum` counts two bits, c_j in its low and c_{j+32} in
-    * its high 32 bits (a doc has fewer than 2^31 tokens, so no lane
-    * carries): 33 plain aggregates. (Counting distinct (doc_id, tok)
-    * first, the oracle's shape, costs a second shuffle and was slower in
-    * `Probe scale`.)
+  /** (doc_id, simhash) of a documents table, one narrow projection
+    * ([[graft.functions.HashKernel.simhash]]) behind the scan spread. A doc
+    * with a null text has no words and no row; the filter sits under the
+    * projection so the kernel runs once per doc.
     */
-  private[graft] def simhashOf(toks: DataFrame): DataFrame = {
-    val lanes = (0 until 32).map(j => sum(shiftright(col("fp"), j).bitwiseAND(0x100000001L)).as(s"s$j"))
-    toks.select(col("doc_id"), fp60(col("tok")).as("fp"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"), lanes: _*)
-      .select(col("doc_id"), (0 until 60).map { j =>
-        val c = if (j < 32) col(s"s$j").bitwiseAND(0xffffffffL) else shiftright(col(s"s${j - 32}"), 32)
-        when(c * 2 > col("n"), lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ bitwiseOR _).as("simhash"))
-  }
-
-  /** per-doc SimHash of the documents table; the groupBy(doc_id) reuses
-    * the Scans.spread exchange
-    */
-  private def simhash(s: SparkSession, dir: String): DataFrame =
-    simhashOf(graft.util.Scans.spread(documents(s, dir), col("doc_id"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok")))
+  private[graft] def simhashes(d: DataFrame): DataFrame =
+    graft.util.Scans.spread(d.where(col("text").isNotNull), col("doc_id"))
+      .select(col("doc_id"), simhash(col("text")).as("simhash"))
 
   /** base ∪ mutated embedding corpus with L2 norms (shared by the exact
     * and LSH near-dup variants — identical output contract)
@@ -165,82 +150,13 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("cos_r"))
       .orderBy(col("a_id"), col("b_id"))
 
-  // random-hyperplane LSH geometry: 8 bands × 16 sign bits. For a planted
-  // near-dup pair (angle ≲ 0.02 rad ⇒ per-plane flip prob θ/π ≲ 0.006)
-  // P(miss all 8 bands) ≈ ((1−(1−.006)^16))^8 < 1e-8; for background pairs
-  // (cos ≤ .51 ⇒ flip ≥ 1/3) P(band match) ≤ (2/3)^16 ≈ 1.5e-3, so the
-  // candidate set stays ~1e-2 of the pair space. Deterministic Rademacher
-  // planes (splitmix64 of (plane,dim)) — no runtime randomness.
-  private val EBands = 8
-  private val EBitsPerBand = 16 // total planes = EBands * EBitsPerBand = 128
-
-  @inline private def planePositive(p: Int, d: Int): Boolean = {
-    var z = (p.toLong << 32 | d.toLong) + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    (z ^ (z >>> 31)) < 0
-  }
-
-  /** Per-JVM cache of the Rademacher sign matrix as ±1.0 multipliers,
-    * flat [plane·dims + d]: the signature flatMap previously re-derived
-    * every sign with three 64-bit multiplies PER (plane, dim, row) —
-    * 3× the useful flops of the dot products themselves. x·(+1.0)/x·(−1.0)
-    * is IEEE-exact, so signatures are bit-identical to the branch form.
-    * Keyed by dims (an object member — one instance per executor JVM).
+  /** (vec_id, band, bh) hyperplane band rows of an embedding corpus
+    * (vec_id, e): one projection of the 8 band hashes
+    * ([[graft.functions.HashKernel.hyperplaneBands]]); the only shuffle
+    * downstream is the band-bucket join on ~8n small keys.
     */
-  @transient private lazy val signCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Double]]()
-
-  private def planeSigns(dims: Int): Array[Double] =
-    signCache.computeIfAbsent(dims, d => {
-      val out = new Array[Double](EBands * EBitsPerBand * d)
-      var p = 0
-      while (p < EBands * EBitsPerBand) {
-        var k = 0
-        while (k < d) {
-          out(p * d + k) = if (planePositive(p, k)) 1.0 else -1.0
-          k += 1
-        }
-        p += 1
-      }
-      out
-    })
-
-  /** (vec_id, band, band_hash) sign-bit signatures — computed entirely
-    * map-side in a typed flatMap; the only shuffle downstream is the
-    * band-equality join on ~n·EBands small keys.
-    */
-  private def hyperplaneBands(s: SparkSession, corpus: DataFrame): DataFrame = {
-    import s.implicits._
-    corpus.select(col("vec_id"), col("e")).as[(Long, Seq[Double])]
-      .flatMap { case (id, e) =>
-        val dims = e.length
-        val ea = e.toArray // primitive indexing in the hot loop
-        val signs = planeSigns(dims) // per-JVM, built once
-        val out = new Array[(Long, Int, Int)](EBands)
-        var b = 0
-        while (b < EBands) {
-          var h = 0
-          var k = 0
-          while (k < EBitsPerBand) {
-            val p = b * EBitsPerBand + k
-            val off = p * dims
-            var dot = 0.0
-            var d = 0
-            while (d < dims) {
-              dot += signs(off + d) * ea(d)
-              d += 1
-            }
-            h = (h << 1) | (if (dot > 0) 1 else 0)
-            k += 1
-          }
-          out(b) = (id, b, h)
-          b += 1
-        }
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-      }
-      .toDF("vec_id", "band", "bh")
-  }
+  private[graft] def embedBands(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), posexplode(hyperplaneBands(col("e"))).as(Seq("band", "bh")))
 
   /** The exact-verified near-dup pairs (a_id, b_id, jacc) of the LSH
     * candidate path: the result of d_minhash_lsh and the edge list of
@@ -389,11 +305,9 @@ object Dedup {
     }),
 
     // SimHash (60-bit, md5-based token hashes, frequency-weighted) — the
-    // per-doc fingerprint; hamming-ball search is the scale variant.
-    // per-bit counts over raw token occurrences combine map-side, so a
-    // shuffle carries one partial per (partition, doc) — no 60× row
-    // amplification.
-    "d_simhash" -> ((s, dir) => simhash(s, dir).orderBy(col("doc_id"))),
+    // per-doc fingerprint, one row kernel per doc; hamming-ball search is
+    // the scale variant.
+    "d_simhash" -> ((s, dir) => simhashes(documents(s, dir)).orderBy(col("doc_id"))),
 
     // SimHash hamming-ball pairs (hd <= 3) via the band-index join: split
     // the 60-bit hash into 4 bands of 15 bits — by pigeonhole, hd <= 3
@@ -407,10 +321,10 @@ object Dedup {
     "d_simhash_pairs" -> ((s, dir) => {
       // cache the fingerprint table: both sides of the self-join read it,
       // and at scale it IS the persisted index (16 bytes/doc) — recompute
-      // would re-run the full token aggregation per join side; at 10^12
+      // would re-hash every token per join side; at 10^12
       // rows this table is a written artifact, not a cache (CacheScope
       // releases it at the harnesses' query boundaries)
-      val sim = graft.util.CacheScope.cached(simhash(s, dir))
+      val sim = graft.util.CacheScope.cached(simhashes(documents(s, dir)))
       val banded = sim.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(i =>
           expr(s"shiftright(simhash, ${15 * i}) & 32767")): _*)))
@@ -505,16 +419,13 @@ object Dedup {
     // exact cosine verifies them. Output identical to d_embed_dups —
     // the shared oracle proves recall.
     "d_embed_lsh" -> ((s, dir) => {
-      // cached via CacheScope (the bounded-cache discipline the round-5
-      // "deliberately not cached" comment predates): the corpus
-      // projection + norms feed the signature pass AND both verify
-      // sides — three evaluations per action otherwise; released at the
-      // harness query boundary
+      // cached (CacheScope, released at the harness query boundary): the
+      // corpus projection + norms feed the signature pass and both verify sides
       val corpus = graft.util.CacheScope.cached(embedCorpus(s, dir)).toDF()
       // sig cached: both self-join sides read it, so the 128-plane
-      // signature flatMap (the heavy pass) previously ran twice per
-      // action; the signature table is EBands rows/vec of 16 bytes
-      val sig = graft.util.CacheScope.cached(hyperplaneBands(s, corpus))
+      // signature (the heavy pass) would otherwise run twice per action;
+      // the signature table is 8 rows/vec of 16 bytes
+      val sig = graft.util.CacheScope.cached(embedBands(corpus))
       cosineVerified(corpus, bucketPairs(sig, None).distinct())
     }),
 

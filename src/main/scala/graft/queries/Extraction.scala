@@ -33,8 +33,7 @@ object Extraction {
       .withColumn("r",
         call_function("extract_content", col("url"), col("html"), col("lang")))
       .where(col("r.error").isNull)
-      .select(
-        element_at(split(col("url"), "/"), -1).cast("long").as("doc_id"),
+      .select(urlDocId,
         unix_timestamp(col("warc_ts")).as("warc_epoch_s"),
         col("lang"),
         col("r.extracted_text").as("extracted_text"))
@@ -44,15 +43,13 @@ object Extraction {
   // cached robots eval) before their first exchange, where the scan
   // spread measured as a net loss (see OPTIMIZATION_r06.md)
 
+  private def urlDocId: Column = element_at(split(col("url"), "/"), -1).cast("long").as("doc_id")
+
+  /** the page corpus through the production extraction projection, keyed back to doc_id */
   private def extracted(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
-    Corpus.pages(s, dir)
-      .withColumn("r", call_function("extract_content", col("url"), col("html"), col("lang")))
-      .select(col("doc_id"), col("url"),
-        col("r.extracted_text").as("extracted_text"),
-        col("r.spans").as("spans"),
-        col("r.error").as("error"),
-        col("text"))
+    graft.pipeline.ExtractJob.extractColumns(Corpus.pages(s, dir).withColumn("pid", lit(0)))
+      .select(urlDocId, col("url"), col("extracted_text"), col("spans"), col("error"))
   }
 
   /** host index CASE shared with the DuckDB oracle (PageHtml.hostIndex) */

@@ -98,9 +98,8 @@ object TextAnalysis {
       docsSpread(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .where(size(col("ws")) >= 3)
-        .withColumn("hs", expr(
-          "transform(sequence(0, size(ws)-3), i -> " +
-            "cast(conv(substring(md5(concat_ws(' ', slice(ws, i+1, 3))), 1, 15), 16, 10) as long))"))
+        .withColumn("hs", transform(sequence(lit(0), size(col("ws")) - 3),
+          i => fp60(array_join(slice(col("ws"), i + 1, lit(3)), " "))))
         .select(col("doc_id"), explode(expr(
           "array_distinct(transform(sequence(0, size(hs)-1)," +
             " i -> array_min(slice(hs, i+1, 4))))")).as("fingerprint"))

@@ -25,6 +25,23 @@ class LintSpec extends AnyFunSuite {
     finally s.close()
   }
 
+  private val siteName = """^\s*(?:"(\w+)"\s*->|(?:[@\w\[\]]+\s+)*def\s+(\w+))""".r.unanchored
+
+  /** (file name, site, line) of every non-comment line of `files`, the
+    * site being the nearest `"<query>" ->` or `def <name>` above the line
+    */
+  private def siteLines(files: Seq[java.nio.file.Path]): Seq[(String, String, String)] = files.flatMap { p =>
+    val file = p.getFileName.toString
+    var site = ""
+    new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator.flatMap { l =>
+      l match {
+        case siteName(q, d) => site = Option(q).getOrElse(d)
+        case _ =>
+      }
+      if (Seq("*", "/*", "//").exists(l.trim.startsWith)) None else Some((file, site, l))
+    }.toList
+  }
+
   test("no tabs, no trailing whitespace, no CRLF, final newline") {
     val bad = scalaSources.flatMap { p =>
       val bytes = java.nio.file.Files.readAllBytes(p)
@@ -98,14 +115,9 @@ class LintSpec extends AnyFunSuite {
     val handJson = main.filterNot(p => Set("Bench.scala", "Verify.scala")(p.getFileName.toString))
       .filter(p => text(p).contains("def jstr") || text(p).contains("mkString(\"{\""))
     assert(handJson.isEmpty, s"hand-built JSON outside graft.pipeline.Json: $handJson")
-    // Column-API uses only: comment lines are skipped, and an occurrence
-    // after an odd number of quotes on its line sits inside a SQL string
-    val fingerprints = main.flatMap { p =>
-      text(p).linesIterator.filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
-        .flatMap(l => "conv\\(substring\\(md5\\(".r.findAllMatchIn(l)
-        .filter(m => l.take(m.start).count(_ == '"') % 2 == 0)
-        .map(_ => p.getFileName.toString))
-    }
+    // in Column-API code and in Spark SQL strings alike (comment lines are
+    // skipped); the DuckDB oracle SQL writes `substr(md5(`, never this
+    val fingerprints = siteLines(main).collect { case (file, _, l) if l.contains("conv(substring(md5(") => file }
     assert(fingerprints.isEmpty,
       s"the md5-60bit fingerprint must be GraftFunctions.fp60 (HashKernel.fp60) alone: $fingerprints")
   }
@@ -129,8 +141,7 @@ class LintSpec extends AnyFunSuite {
     val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
     // An index window `transform(sequence(` (Column API or Spark SQL
     // string) is allowed only at the named positional-window sites below,
-    // which are not shingle sets; a site is the nearest `"<query>" ->` or
-    // `def <name>` above the line. The DuckDB oracle SQL windows with
+    // which are not shingle sets. The DuckDB oracle SQL windows with
     // `range`/`generate_series`, so it never matches. `min(mix64(` is
     // allowed nowhere.
     val windowSites = Set("TextAnalysis.scala:t_winnow", "TextAnalysis.scala:t_c4_filters",
@@ -138,22 +149,23 @@ class LintSpec extends AnyFunSuite {
       "Probe.scala:stageDocs")
     val window = """\btransform\(\s*sequence\(""".r
     val signatureMin = """\bmin\(\s*mix64\(""".r
-    val siteName = """^\s*(?:"(\w+)"\s*->|(?:[@\w\[\]]+\s+)*def\s+(\w+))""".r.unanchored
-    val bad = main.flatMap { p =>
-      val file = p.getFileName.toString
-      var site = ""
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").linesIterator.flatMap { l =>
-        l match {
-          case siteName(q, d) => site = Option(q).getOrElse(d)
-          case _ =>
-        }
-        val code = !Seq("*", "/*", "//").exists(l.trim.startsWith)
-        val hit = code && (signatureMin.findFirstIn(l).nonEmpty ||
-          (window.findFirstIn(l).nonEmpty && !windowSites(s"$file:$site")))
-        if (hit) Some(s"$file:$site: ${l.trim}") else None
-      }
+    val bad = siteLines(main).collect {
+      case (file, site, l) if signatureMin.findFirstIn(l).nonEmpty ||
+          (window.findFirstIn(l).nonEmpty && !windowSites(s"$file:$site")) => s"$file:$site: ${l.trim}"
     }
     assert(bad.isEmpty, s"shingle sets are HashKernel.shingleSet and signatures HashKernel.minhash alone: $bad")
+  }
+
+  test("one extraction projection in src/main: extract_content is called by ExtractJob.extractColumns") {
+    val main = scalaSources.filter(_.startsWith(java.nio.file.Paths.get("src", "main")))
+    // warcOkRows keeps warc_ts, which extractColumns does not carry; the frozen bench keeps its own
+    val allowed = (file: String, site: String) =>
+      file == "ExtractJob.scala" || file == "Bench.scala" || s"$file:$site" == "Extraction.scala:warcOkRows"
+    val calls = siteLines(main).collect {
+      case (file, site, l) if l.contains("call_function(\"extract_content\"") && !allowed(file, site) =>
+        s"$file:$site: ${l.trim}"
+    }
+    assert(calls.isEmpty, s"extract_content outside ExtractJob.extractColumns: $calls")
   }
 
   test("imports are not wildcard-hidden behind _root_ hacks and files declare the graft package") {
